@@ -151,23 +151,14 @@ object Bench {
     // a failed query records -1.0 — NEVER a near-zero "fast" timing.
     // Each pass starts from COLD graft cache windows: operators persist
     // working frames (shingle/gram indexes, rank buckets) and the query
-    // layer persists small results before their presentational sort
-    // (ResultSort) — without the release, pass 2 of a wrapped query would
-    // read its final ANSWER out of pass 1's cache and min-of-N would
-    // measure a cache hit instead of the query. Within a pass, caches
+    // layer persists mart diamonds and survivor sets (ResultSort) —
+    // without the release, pass 2 of such a query would read pass 1's
+    // cached frame and min-of-N would measure a cache hit instead of the
+    // query. Every window registers
+    // itself, so one call reaches all of them. Within a pass, caches
     // behave exactly as they would for a user running the suite once.
     def onePass(): Map[String, Double] = {
-      graft.ops.Classifier.releaseCaches()
-      graft.ops.Dedup.releaseCaches()
-      graft.ops.Linkage.releaseCaches()
-      graft.ops.Ranks.releaseCaches()
-      graft.ops.Retrieval.releaseCaches()
-      graft.ops.Selection.releaseCaches()
-      graft.ops.LanguageModel.releaseCaches()
-      graft.ops.SemanticDedup.releaseCaches()
-      graft.ops.TextAnalysis.releaseCaches()
-      graft.ops.TimeSeries.releaseCaches()
-      graft.pipelines.ResultSort.releaseCaches()
+      graft.ops.CacheWindows.releaseAll()
       queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val ok =

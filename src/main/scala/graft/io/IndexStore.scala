@@ -41,31 +41,29 @@ object IndexStore {
     * 32-task scan stage (plus footer opens) for < 1 MB of integers, and
     * a 100 TB build at cluster parallelism would spray tens of
     * thousands of undersized files. */
-  private def targetFileBytes: Long =
-    sys.env.getOrElse("GRAFT_INDEX_TARGET_FILE_BYTES", (128L << 20).toString).toLong
+  private val TargetFileBytes: Long = 128L << 20
 
-  // Per-(session, path, dir-mtime) memo of reloaded index frames — the
+  // Per-(session, path, publication) memo of reloaded index frames — the
   // Entities.read pattern: every `spark.read.parquet` pays a listing/
   // footer job plus a fresh analysis, and the indexed query family
   // re-reads the same artifacts on every call (q_hybrid_rrf_ann alone
   // reloads FIVE frames per invocation). DataFrames are immutable
-  // plans, so sharing one per (session, path, mtime) is safe; the mtime
-  // key makes a rebuilt index (invalidate + rename bumps the dir) get a
-  // fresh listing, and the bounded LRU frees a stopped session's plans.
+  // plans, so sharing one per publication is safe. A publication is the
+  // published `_FINGERPRINT` plus the `_NONCE` written with it, so a
+  // rebuild gets a fresh listing even within one mtime tick, and the
+  // bounded LRU frees a stopped session's plans.
   private val readMemo =
-    new java.util.LinkedHashMap[(SparkSession, String, Long), DataFrame](
+    new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](
       16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long), DataFrame])
+          e: java.util.Map.Entry[(SparkSession, String, String), DataFrame])
           : Boolean = size() > 64
     }
 
   private def readMemoized(spark: SparkSession, path: String): DataFrame =
     synchronized {
-      val mtime =
-        try new java.io.File(path).lastModified()
-        catch { case _: Throwable => 0L }
-      val k = (spark, path, mtime)
+      val k = (spark, path,
+        s"${readSidecar(path, "_FINGERPRINT")}\n${readSidecar(path, "_NONCE")}")
       val hit = readMemo.get(k)
       if (hit != null) hit
       else {
@@ -96,8 +94,8 @@ object IndexStore {
       .map("%02x".format(_)).mkString
   }
 
-  private def readSidecar(path: String): String = {
-    val f = java.nio.file.Paths.get(s"$path/_FINGERPRINT")
+  private def readSidecar(path: String, name: String): String = {
+    val f = java.nio.file.Paths.get(s"$path/$name")
     if (java.nio.file.Files.exists(f))
       new String(java.nio.file.Files.readAllBytes(f),
         java.nio.charset.StandardCharsets.UTF_8)
@@ -114,7 +112,7 @@ object IndexStore {
                 (build: => DataFrame): DataFrame = synchronized {
     val path = s"$root/$key"
     val done = new java.io.File(s"$path/_SUCCESS")
-    val stale = done.exists() && readSidecar(path) != fingerprint
+    val stale = done.exists() && readSidecar(path, "_FINGERPRINT") != fingerprint
     if (stale) {
       System.err.println(s"[index-store] $key fingerprint changed — rebuilding")
       invalidate(key)
@@ -143,7 +141,7 @@ object IndexStore {
         .filter(f => f.isFile && f.getName.startsWith("part-"))
       val stagedBytes = stagedFiles.map(_.length).sum
       val nFiles = math.max(1L,
-        (stagedBytes + targetFileBytes - 1) / targetFileBytes).toInt
+        (stagedBytes + TargetFileBytes - 1) / TargetFileBytes).toInt
       if (stagedFiles.length <= nFiles) {
         // already at-or-under the target count — promote staging as-is
         if (!new java.io.File(staging).renameTo(new java.io.File(tmp)))
@@ -154,8 +152,11 @@ object IndexStore {
           .write.mode("overwrite").parquet(tmp)
         rmTree(new java.io.File(staging))
       }
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/_FINGERPRINT"),
-        fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Seq("_FINGERPRINT" -> fingerprint, "_NONCE" -> nonce).foreach {
+        case (name, v) =>
+          java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/$name"),
+            v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
       val won = new java.io.File(tmp).renameTo(new java.io.File(path))
       if (!won) {
         // another process completed the same key between our check and

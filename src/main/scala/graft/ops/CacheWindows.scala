@@ -17,6 +17,11 @@ import org.apache.spark.storage.StorageLevel
   * Eviction only unpersists — never a wrong result, worst case a
   * recompute (an in-flight action holds its own reference to the frame).
   *
+  * Every window registers itself in the companion's registry at
+  * construction, so [[CacheWindows.releaseAll]] / [[CacheWindows.release]]
+  * reach every window in the JVM — a new window cannot be missed by a
+  * hand-kept release list.
+  *
   * Lifecycle: entries are held STRONGLY until `release(spark)` /
   * `releaseAll()` (or the SparkContext stops). A weak map cannot do
   * better here — `df.persist` registers the plan in the session's SHARED
@@ -33,6 +38,9 @@ import org.apache.spark.storage.StorageLevel
 private[graft] final class CacheWindows(maxPerSession: Int) {
   private val windows = new java.util.HashMap[
     SparkSession, scala.collection.mutable.ArrayDeque[DataFrame]]()
+  // registered only once its state exists: a concurrent releaseAll()
+  // may reach it as soon as it is in the registry
+  CacheWindows.register(this)
 
   /** Persist `df` (MEMORY_AND_DISK) and register it in its session's
     * window, evicting that session's least-recently-registered frame past
@@ -72,8 +80,7 @@ private[graft] final class CacheWindows(maxPerSession: Int) {
       .foreach(_.foreach(_.unpersist(blocking = false)))
   }
 
-  /** Unpersist everything across all sessions (the historical
-    * `releaseCaches()` contract). */
+  /** Unpersist everything this window holds, across all sessions. */
   def releaseAll(): Unit = synchronized {
     windows.values.forEach(w => w.foreach(_.unpersist(blocking = false)))
     windows.clear()
@@ -83,4 +90,23 @@ private[graft] final class CacheWindows(maxPerSession: Int) {
   def registered(spark: SparkSession): Seq[DataFrame] = synchronized {
     Option(windows.get(spark)).map(_.toSeq).getOrElse(Nil)
   }
+}
+
+/** The registry of every [[CacheWindows]] ever constructed in this JVM. */
+private[graft] object CacheWindows {
+  private val registry =
+    new java.util.concurrent.CopyOnWriteArrayList[CacheWindows]()
+
+  private def register(w: CacheWindows): Unit = registry.add(w): Unit
+
+  /** Every registered window (spec/diagnostic surface). */
+  def all: Seq[CacheWindows] = registry.toArray(Array.empty[CacheWindows]).toSeq
+
+  /** Unpersist every frame of every window, across all sessions — the one
+    * call that starts a bench pass or a test from cold caches. */
+  def releaseAll(): Unit = registry.forEach(_.releaseAll())
+
+  /** Unpersist `spark`'s frames from every window; other sessions keep
+    * theirs. */
+  def release(spark: SparkSession): Unit = registry.forEach(_.release(spark))
 }

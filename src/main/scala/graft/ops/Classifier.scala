@@ -412,8 +412,8 @@ object Classifier {
     // the corpus outgrows the broadcast threshold — the crossover is
     // precisely the point where AQE stops broadcasting presentMap.
     //   (c) r15 closes the job-count hypothesis: running THIS scoring
-    //       action inside an AQE-off window (CvAb probe, alternating
-    //       best-of-4, idle host) reaches the ≤8-job form the r14
+    //       action inside an AQE-off window (NOTES_r15 q_nb_cv entry,
+    //       alternating best-of-4, idle host) reaches the ≤8-job form the r14
     //       verdict asked about — 4 build + 4 action jobs instead of
     //       4 + 10 — and the wall does NOT improve (action 1.86–2.53 s
     //       AQE-off vs 1.79–2.01 s AQE-on at sf0.1): AQE's runtime

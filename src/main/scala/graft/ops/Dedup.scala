@@ -316,22 +316,10 @@ object Dedup {
       }
     }
     // generation 0 — checkpointed like every later generation so the
-    // loop body never references a deep upstream plan
-    def checkpointGen(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd // external rows: tiny (id, [old,] label) tuples
-      if (checkpointDir.isDefined) {
-        // reliable mode: persist BEFORE checkpoint — the checkpoint write
-        // re-reads the RDD at the materializing action, and without the
-        // persist that re-read recomputes the whole generation
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-    // both directions are in `edges`, so src alone covers every touched id
-    var (labels, prevRdd) = checkpointGen(edges.select("src").distinct()
-      .select(col("src").as("id"), col("src").as("label")))
+    // loop body never references a deep upstream plan; both directions
+    // are in `edges`, so src alone covers every touched id
+    var (labels, prevRdd) = Graph.checkpointGen(edges.select("src").distinct()
+      .select(col("src").as("id"), col("src").as("label")), checkpointDir)
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIters) {
@@ -346,10 +334,11 @@ object Dedup {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       // pointer jumping: follow one hop of the label forest (labels always
       // point at existing ids, so the lookup join always hits)
-      val (next, nextRdd) = checkpointGen(stepped
+      val (next, nextRdd) = Graph.checkpointGen(stepped
         .join(stepped.select(col("id").as("label"), col("label").as("ll")),
           Seq("label"), "left")
-        .select(col("id"), col("old"), coalesce(col("ll"), col("label")).as("label")))
+        .select(col("id"), col("old"), coalesce(col("ll"), col("label")).as("label")),
+        checkpointDir)
       changed = next.filter(col("label") =!= col("old")).count() // materializes next
       prevRdd.unpersist(blocking = false) // old generation is dead: free its blocks
       prevRdd = nextRdd
@@ -357,6 +346,7 @@ object Dedup {
       iter += 1
     }
     edges.unpersist()
+    Graph.releaseLastGen(prevRdd, checkpointDir)
     // attach the untouched majority: no pair ⇒ the doc is its own cluster
     docs.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
@@ -405,13 +395,6 @@ object Dedup {
   def releaseCaches(): Unit = {
     shingleCacheWindow.releaseAll()
     smallCacheWindow.releaseAll()
-  }
-
-  /** Unpersist only the frames registered by `spark`'s window —
-    * concurrent pipelines in other sessions keep theirs. */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
-    shingleCacheWindow.release(spark)
-    smallCacheWindow.release(spark)
   }
 
   /** Per-document novelty scoring — the inverse of contamination: what
@@ -531,9 +514,9 @@ object Dedup {
     * reference intact, so two cache-scan stages over the SAME
     * `InMemoryRelation` never compare canonically equal and every
     * exchange above a cached subtree misses AQE's stage cache. Minimal
-    * bisect in `tools/MiniReuseProbe`: reuse fires in the AQE-off and
-    * uncached combos, never in AQE+cache — no plan shape on our side can
-    * change it. The formalized mitigation is the adaptive probe's EAGER
+    * bisect in NOTES_r6 and SCALE.md's "exchange reuse" entry: reuse
+    * fires in the AQE-off and uncached combos, never in AQE+cache — no
+    * plan shape on our side can change it. The formalized mitigation is the adaptive probe's EAGER
     * PRE-MATERIALIZATION of the compact cache before the self-join
     * (NOTES_r5: without it the join's two sides race the cold cache and
     * each computes the index — the BlockManager lock convoy): both

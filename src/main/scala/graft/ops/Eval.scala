@@ -129,8 +129,8 @@ object Eval {
     * recall_indexed_bp rising back toward (or past) the build row's
     * after the append rows decayed — pinned exactly in SimilaritySpec on
     * the drifted arm, and measured at the 100× replica on the
-    * saturated-config arm (16-bit codes → 48-bit retrain) in
-    * tools/DriftScaleProbe. */
+    * saturated-config arm (16-bit codes → 48-bit retrain), recorded in
+    * SCALE.md's Round-18 retrain-response entry. */
   def ivfPqRetrainRecovery(build: DataFrame, batches: Seq[DataFrame],
                            queries: DataFrame, idCol: String, vecCol: String,
                            k: Int = 5, kPrime: Int = 40, nCentroids: Int = 16,

@@ -295,26 +295,40 @@ object Graph {
     ranks
   }
 
+  /** One generation of an iterative loop, checkpointed so the loop body
+    * never references a deep upstream plan. With `checkpointDir` it is a
+    * reliable checkpoint, persisted first: the checkpoint write re-reads
+    * the RDD at the materializing action, and without the persist that
+    * re-read recomputes the whole generation. Without it, a local
+    * checkpoint. Returns the frame and the RDD whose blocks the loop frees
+    * once the next generation is materialized. */
+  private[graft] def checkpointGen(df: DataFrame, checkpointDir: Option[String])
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
+    val rdd = df.rdd
+    if (checkpointDir.isDefined) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+  }
+
+  /** Free the final generation's persist when the loop ends: a reliable
+    * checkpoint serves later reads from its files (an unwritten one
+    * recomputes, never a wrong result). A local checkpoint's blocks ARE
+    * its data, so they stay with the returned frame. */
+  private[graft] def releaseLastGen(rdd: org.apache.spark.rdd.RDD[_],
+                                    checkpointDir: Option[String]): Unit =
+    if (checkpointDir.isDefined) rdd.unpersist(blocking = false)
+
   /** The shared damped message-passing loop: `base` carries each node's
     * per-round teleport term and starting rank. */
   private def prLoop(e: DataFrame, outdeg: DataFrame, base: DataFrame,
                      iters: Int, dampNum: Int, dampDen: Int,
                      checkpointDir: Option[String]): DataFrame = {
-    val spark = e.sparkSession
     val b = base.persist(StorageLevel.MEMORY_AND_DISK)
 
-    def checkpointGen(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      if (checkpointDir.isDefined) {
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
     var (ranks, prevRdd) = checkpointGen(
-      b.select(col("node"), col("r0").as("rank_scaled")))
+      b.select(col("node"), col("r0").as("rank_scaled")), checkpointDir)
     var iter = 0
     while (iter < iters) {
       val contrib = e
@@ -327,7 +341,7 @@ object Graph {
           .select(col("node"),
             (col("base") +
               expr(s"(${dampNum}L * coalesce(cs, 0L)) div ${dampDen}L")
-            ).as("rank_scaled")))
+            ).as("rank_scaled")), checkpointDir)
       next.count() // materialize this generation, then free the previous
       prevRdd.unpersist(blocking = false)
       prevRdd = nextRdd
@@ -335,6 +349,7 @@ object Graph {
       iter += 1
     }
     b.unpersist(blocking = false)
+    releaseLastGen(prevRdd, checkpointDir)
     ranks
   }
 
@@ -426,19 +441,9 @@ object Graph {
       .union(s.select("node")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    def checkpointGen(df: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      if (checkpointDir.isDefined) {
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
-
     var (labels, prevRdd) = checkpointGen(
       nodes.join(s, Seq("node"), "left")
-        .select(col("node"), col("seed").as("label")))
+        .select(col("node"), col("seed").as("label")), checkpointDir)
     var iter = 0
     while (iter < iters) {
       val maj = e
@@ -452,7 +457,8 @@ object Graph {
         labels.join(s, Seq("node"), "left")
           .join(maj, Seq("node"), "left")
           .select(col("node"),
-            coalesce(col("seed"), col("maj"), col("label")).as("label")))
+            coalesce(col("seed"), col("maj"), col("label")).as("label")),
+        checkpointDir)
       next.count()
       prevRdd.unpersist(blocking = false)
       prevRdd = nextRdd
@@ -462,6 +468,7 @@ object Graph {
     e.unpersist(blocking = false)
     s.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
+    releaseLastGen(prevRdd, checkpointDir)
     labels
   }
 }

@@ -39,7 +39,7 @@ object LanguageModel {
     * bigram counts, the per-doc scoring fan-out) and AQE's runtime stage
     * cache does not reuse their exchanges (the tfidf/bm25 r13 finding) —
     * without the cache the corpus is tokenized three times per run. */
-  private[graft] val tokCacheWindow = new CacheWindows(4)
+  private val tokCacheWindow = new CacheWindows(4)
 
   /** Unpersist every tokenized frame this module holds (all sessions). */
   def releaseCaches(): Unit = tokCacheWindow.releaseAll()

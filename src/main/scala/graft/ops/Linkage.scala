@@ -45,16 +45,12 @@ object Linkage {
     * universe, per-record kept counts) and the left by two; without the
     * persist each branch recomputes the gram explosion + df aggregation
     * from the source. */
-  private[graft] val cacheWindow = new CacheWindows(4)
+  private val cacheWindow = new CacheWindows(4)
 
   private def cached(df: DataFrame): DataFrame = cacheWindow.add(df)
 
   /** Drop every frame this module still has persisted (all sessions). */
   def releaseCaches(): Unit = cacheWindow.releaseAll()
-
-  /** Drop only the frames registered by `spark`'s window. */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    cacheWindow.release(spark)
 
   /** Distinct hashed character q-grams of `s` (length < q ⇒ empty). */
   private def gramHashes(s: Column, q: Int): Column =
@@ -211,9 +207,10 @@ object Linkage {
     * candidate join from racing a cold cache — the same measured win as
     * [[Dedup.jaccardPairsAdaptive]]'s probe). Doubles: the volumes are a
     * branch decision, and Σdf_l·df_r can overflow a long exactly on the
-    * corpora where the decision matters. */
+    * corpora where the decision matters. An empty gram join (no shared
+    * q-gram) has no cap: both volumes are 0, which never engages it. */
   private def qgramVolumes(li: DataFrame, ri0: DataFrame, right: DataFrame,
-                           maxDfRatio: Double): (Double, Double, Int) = {
+                           maxDfRatio: Double): (Double, Double, Option[Int]) = {
     val dfl = li.groupBy("gh").agg(count(lit(1)).cast("double").as("df_l"))
     val dfr = ri0.groupBy("gh").agg(count(lit(1)).cast("double").as("df_r"))
     // the ratio cap's |right| count rides the SAME job as the volumes
@@ -230,8 +227,8 @@ object Linkage {
           .otherwise(0.0)).as("vol_capped"),
         max(capCol).as("cap"))
       .head()
-    if (row.isNullAt(0)) (0.0, 0.0, 1)
-    else (row.getDouble(0), row.getDouble(1), row.getLong(2).toInt)
+    if (row.isNullAt(0)) (0.0, 0.0, None)
+    else (row.getDouble(0), row.getDouble(1), Some(row.getLong(2).toInt))
   }
 
   /** [[qgramPairs]] with the df cap engaged ADAPTIVELY, by the same
@@ -268,14 +265,17 @@ object Linkage {
     val li = cached(sideIndex(left, "left", idCol, nameCol, q))
     val ri0 = cached(sideIndex(right, "right", idCol, nameCol, q))
     val (vol, volCapped, cap) = qgramVolumes(li, ri0, right, maxDfRatio)
-    if (vol <= engageFactor * math.max(volCapped, 1.0))
+    // the cap engages only when the probe measured one (never on an empty
+    // gram join) and it deletes enough of the volume
+    val engaged = cap.filter(_ => vol > engageFactor * math.max(volCapped, 1.0))
+    if (engaged.isEmpty)
       pairsFromIndexes(li, ri0, left, right, idCol, nameCol,
         maxDist, q, countPrune)
     else {
       // engaged: the capped index is a THIRD window entry (raw right +
       // capped right) — the raw cache feeds the cap's own df aggregation
       // and filter join, which the probe already materialized it for
-      val ri = cached(cappedRight(ri0, Some(cap)))
+      val ri = cached(cappedRight(ri0, engaged))
       pairsFromIndexes(li, ri, left, right, idCol, nameCol,
         maxDist, q, countPrune)
     }

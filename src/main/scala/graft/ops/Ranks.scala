@@ -78,16 +78,12 @@ object Ranks {
     * bucket ids are deterministic expressions (scaladoc step 2), so
     * eviction or release here is never a wrong result — worst case the
     * compact frame and its boundary sample are recomputed, bit-identically. */
-  private[graft] val cacheWindow = new CacheWindows(4)
+  private val cacheWindow = new CacheWindows(4)
 
   private def cached(df: DataFrame): DataFrame = cacheWindow.add(df)
 
   /** Drop every frame this module still has persisted (all sessions). */
   def releaseCaches(): Unit = cacheWindow.releaseAll()
-
-  /** Drop only the frames registered by `spark`'s window. */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    cacheWindow.release(spark)
 
   /** Boundary sample size multiplier: 32 sampled values per target bucket
     * (the same magnitude RangePartitioner uses per partition). */

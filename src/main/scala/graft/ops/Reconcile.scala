@@ -31,6 +31,10 @@ import org.apache.spark.sql.functions._
   */
 object Reconcile {
 
+  /** [[diff]]'s persisted sides, bounded per session (two diffs' worth)
+    * and released with every other window by [[CacheWindows.releaseAll]]. */
+  private val cacheWindow = new CacheWindows(4)
+
   /** The reference's record separator (`Raptor.py:561`). */
   val Sep = "\u0001"
 
@@ -197,11 +201,16 @@ object Reconcile {
 
   /** The composed operator — the Scala face of the reference's
     * `submit_raptor_request` compare stage (`Raptor.py:536-655`). Both
-    * sides are cached before fan-out: six artifacts read them (the
-    * reference does the same, `Raptor.py:545-546`). */
+    * sides are persisted in this module's window before fan-out: six
+    * artifacts read them (the reference caches them too,
+    * `Raptor.py:545-546`). A side the caller already persisted is used
+    * as is, so a release never drops the caller's own cache. */
   def diff(source: DataFrame, target: DataFrame, keys: Seq[String]): DiffResult = {
-    val s = source.cache()
-    val t = target.cache()
+    def cached(df: DataFrame): DataFrame =
+      if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE) df
+      else cacheWindow.add(df)
+    val s = cached(source)
+    val t = cached(target)
     DiffResult(
       rowDiff(s, t, keys), colMismatch(s, t, keys),
       srcExtra(s, t, keys), tgtExtra(s, t, keys),

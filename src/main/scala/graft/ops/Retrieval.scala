@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
-  private[graft] val postCacheWindow = new CacheWindows(2)
+  private val postCacheWindow = new CacheWindows(2)
 
   /** Release Retrieval's persisted posting frames (test hygiene). */
   def releaseCaches(): Unit = postCacheWindow.releaseAll()

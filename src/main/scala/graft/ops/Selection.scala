@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
   */
 object Selection {
 
-  private[graft] val featCacheWindow = new CacheWindows(2)
+  private val featCacheWindow = new CacheWindows(2)
 
   /** Release Selection's persisted feature frames (test hygiene). */
   def releaseCaches(): Unit = featCacheWindow.releaseAll()

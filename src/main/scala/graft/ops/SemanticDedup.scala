@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SemDeDup-style semantic deduplication (public method: Abbas et al.,
@@ -43,8 +43,6 @@ object SemanticDedup {
   private val cacheWindow = new CacheWindows(2)
 
   def releaseCaches(): Unit = cacheWindow.releaseAll()
-
-  def releaseCaches(spark: SparkSession): Unit = cacheWindow.release(spark)
 
   /** Cluster assignment `(cid, id, v, nrm)`: centroids seeded from the
     * first `nCentroids` ids, optionally refined with `iters` k-means

@@ -630,8 +630,9 @@ object Similarity {
     *      and codewords — the recovery [[graft.ops.Eval.ivfPqRetrainRecovery]]
     *      pins.
     *   2. m / codebookSize / nCentroids may GROW with the corpus — the
-    *      measured 100× lesson (tools/DriftScaleProbe) is that a 16-bit
-    *      code config saturates at 200k vectors REGARDLESS of appends:
+    *      measured 100× lesson (SCALE.md Round-17 append-drift entry) is
+    *      that a 16-bit code config saturates at 200k vectors REGARDLESS
+    *      of appends:
     *      recall at scale is a config property, and re-sizing IS the
     *      retrain.
     *

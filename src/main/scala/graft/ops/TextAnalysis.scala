@@ -28,7 +28,7 @@ object TextAnalysis {
     * tokenize scans, measured). Persisting the compact tf frame makes
     * tokenization run ONCE at any scale; MEMORY_AND_DISK, evictable,
     * recompute-safe. */
-  private[graft] val tfCacheWindow = new CacheWindows(4)
+  private val tfCacheWindow = new CacheWindows(4)
 
   /** Unpersist every tf frame this module still holds (all sessions). */
   def releaseCaches(): Unit = tfCacheWindow.releaseAll()

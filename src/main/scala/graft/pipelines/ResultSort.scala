@@ -1,34 +1,20 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame}
-
-/** Final presentational sort for the SMALL result of an EXPENSIVE plan.
+/** The query layer's persist window.
   *
-  * `orderBy` plans a range exchange, and a range exchange SAMPLES its
-  * boundaries by executing its child once before the real shuffle
-  * executes it again — so a query whose tail is an expensive join/verify
-  * sweep runs that whole tail TWICE per action (measured on the round-6
-  * linkage work: q_fuzzy_qgram 6.6 s with a bare `orderBy` vs 3.6 s with
-  * the result materialized first; `count()`-style probes never see this
-  * because `EliminateSorts` drops the sort under aggregation). Persisting
-  * the result frame first turns the sampling pass into the single
-  * materialization and the shuffle into a cache read — the textbook
-  * "persist before global sort of a computed result" pattern.
-  *
-  * Residency is bounded by a session-keyed [[graft.ops.CacheWindows]]
-  * (LRU, evictable, MEMORY_AND_DISK; eviction costs a recompute, never a
-  * wrong result) — sized for a full Verify/Bench sweep's worth of small
-  * result frames. Use ONLY where the result is small relative to the
-  * work that produced it (near-dup pair sets, best-match tables,
-  * reconciliation summaries) — a huge result would be better left
-  * unsorted or written partitioned instead. */
+  * Query cells and pipeline marts persist a frame here when several
+  * branches of one plan consume it (a diamond: the tiering protocol and
+  * the row side of a mart, the survivor set of a curation funnel) or when
+  * a result is read more than once. Residency is bounded by a
+  * session-keyed [[graft.ops.CacheWindows]] (LRU, evictable,
+  * MEMORY_AND_DISK; eviction costs a recompute, never a wrong result),
+  * sized for a full Verify/Bench sweep's worth of frames. Same-plan
+  * registrations refresh one entry, so repeated calls over the same
+  * inputs share one cache entry. Like every window it is released by
+  * [[graft.ops.CacheWindows.releaseAll]]. */
 object ResultSort {
   private[graft] val window = new graft.ops.CacheWindows(16)
 
-  /** Unpersist every registered result frame (all sessions). */
+  /** Unpersist every registered frame (all sessions). */
   def releaseCaches(): Unit = window.releaseAll()
-
-  /** Persist `df` in the bounded window, then globally sort it. */
-  def sortedSmall(df: DataFrame, cols: Column*): DataFrame =
-    window.add(df).orderBy(cols: _*)
 }

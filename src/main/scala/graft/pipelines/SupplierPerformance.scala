@@ -33,9 +33,10 @@ import graft.model.Entities.{dec, decD, decQ}
   *     identical: the aggregation keys functionally determine the
   *     supplier, and unmatched/no-sales rows flow the same way.
   *   - The aggregate feeds both branches (window top-1 and supplier
-  *     re-agg); it is cache()d so the diamond computes the fact scan ONCE
-  *     (slightly different pushed constraints per branch defeat
-  *     ReuseExchange otherwise — verified in the physical plan).
+  *     re-agg); it is persisted in the [[ResultSort]] window so the
+  *     diamond computes the fact scan ONCE (slightly different pushed
+  *     constraints per branch defeat ReuseExchange otherwise — verified
+  *     in the physical plan).
   *   - The final global orderBy is a range-partitioned sort, fine at any
   *     scale.
   */
@@ -71,13 +72,13 @@ object SupplierPerformance {
         sum("REVENUE").as("agg_REVENUE"),
         sum("QUANTITY").as("agg_QUANTITY"))
 
-    val aggSupplierProduct = aggSalesProduct
+    // diamond: consumed by both the window and the re-agg branch
+    val aggSupplierProduct = ResultSort.window.add(aggSalesProduct
       .join(suppliers,
         aggSalesProduct("SUPPLIER_ID") === suppliers("SUPPLIER_ID"), "right")
       .select(aggSalesProduct("PRODUCT_ID"), aggSalesProduct("PRODUCT_NAME"),
         aggSalesProduct("agg_REVENUE"), aggSalesProduct("agg_QUANTITY"),
-        suppliers("SUPPLIER_ID"), suppliers("SUPPLIER_NAME"))
-      .cache() // diamond: consumed by both the window and the re-agg branch
+        suppliers("SUPPLIER_ID"), suppliers("SUPPLIER_NAME")))
 
     val w = Window.partitionBy("SUPPLIER_ID")
       .orderBy(col("agg_REVENUE").desc, col("PRODUCT_ID").asc)

@@ -58,7 +58,37 @@ class CacheWindowsSpec extends SparkSpec {
     }
     assert(s1Frames.forall(_.storageLevel != StorageLevel.NONE),
       "another session's dedup churn must not evict this session's index")
-    Dedup.releaseCaches(s1)
-    Dedup.releaseCaches(s2)
+    CacheWindows.release(s1)
+    CacheWindows.release(s2)
+  }
+
+  test("releaseAll drops every persist of the marts, the tier cell and a " +
+       "Raptor run; a repeated mart call refreshes its one window entry") {
+    import org.apache.spark.sql.functions.col
+    import graft.pipelines.{CustomerSalesReport, ResultSort, SupplierPerformance}
+    import graft.ops.Raptor
+    CacheWindows.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    SupplierPerformance(spark, sf).count()
+    CustomerSalesReport(spark, sf).count()
+    val entries = ResultSort.window.registered(spark).size
+    CustomerSalesReport(spark, sf).count()
+    assert(ResultSort.window.registered(spark).size == entries,
+      "a second mart call over the same dir must refresh, not add, its entry")
+    SparkEntry.queries("q_customer_tier_scalable")(spark, sf).count()
+    val customers = graft.model.Entities.read(spark, sf, "customer")
+      .select("c_custkey", "c_name", "c_acctbal")
+    val changed = customers.withColumn("c_acctbal",
+      col("c_acctbal") + (col("c_custkey") % 7 === 0).cast("int"))
+    val out = java.nio.file.Files.createTempDirectory("graft_leak_").toString
+    Raptor.submit(spark, Raptor.FrameSide(customers), Raptor.FrameSide(changed),
+      Seq("c_custkey"), "leak", "20250101", out)
+    val persisted = sc.getPersistentRDDs.keySet -- before
+    assert(persisted.nonEmpty)
+    CacheWindows.releaseAll()
+    val leaked = sc.getPersistentRDDs.keySet & persisted
+    assert(leaked.isEmpty, s"persisted RDDs left after releaseAll: " +
+      leaked.toSeq.sorted.map(id => s"$id ${sc.getPersistentRDDs(id)}").mkString(", "))
   }
 }

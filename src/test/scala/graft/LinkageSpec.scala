@@ -98,6 +98,20 @@ class LinkageSpec extends SparkSpec {
     assert(want.nonEmpty && fast == want && engaged == want)
   }
 
+  test("adaptive linkage over disjoint vocabularies (zero shared q-grams) " +
+       "is empty and never engages a cap") {
+    val left = Seq((1L, "aaaaaa"), (2L, "abababab")).toDF("id", "name")
+    val right = Seq((11L, "zzzzzz"), (12L, "zyzyzyzy")).toDF("id", "name")
+    // engageFactor < 0 would engage on ANY measured volume, so only the
+    // absent cap of the empty gram join keeps the cap machinery off
+    Seq(4.0, -1.0).foreach { f =>
+      assert(Linkage.qgramPairsAdaptive(left, right, "id", "name",
+        engageFactor = f).collect().isEmpty)
+      assert(Linkage.qgramBestMatchAdaptive(left, right, "id", "name",
+        engageFactor = f).collect().isEmpty)
+    }
+  }
+
   test("qgramBestMatchAdaptive matches qgramBestMatch on the fixture") {
     val base = Linkage.qgramBestMatch(dirty, clean, "id", "name", maxDist = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getInt(4))).toSet

@@ -104,15 +104,10 @@ class PlanGateSpec extends SparkSpec {
     // the query's own plan — but a module can also persist intermediate
     // frames whose build plan is only reachable through its cache-window
     // handle (e.g. an index registered, consumed, and later evicted). Run
-    // one representative pipeline per module, then gate EVERY frame its
-    // window currently holds for this session.
+    // one representative pipeline per module, then gate EVERY frame that
+    // ANY registered window currently holds for this session.
     import org.apache.spark.sql.functions._
-    graft.ops.Dedup.releaseCaches()
-    graft.ops.Linkage.releaseCaches()
-    graft.ops.Ranks.releaseCaches()
-    graft.ops.Retrieval.releaseCaches()
-    graft.ops.Selection.releaseCaches()
-    graft.pipelines.ResultSort.releaseCaches()
+    graft.ops.CacheWindows.releaseAll()
     val docs = spark.read.parquet(s"$gateSf/documents.parquet")
     graft.ops.Dedup.jaccardPairsAdaptive(docs, "doc_id", "text", 3, 0.8,
       cap = 50).count()
@@ -124,8 +119,8 @@ class PlanGateSpec extends SparkSpec {
     graft.ops.Linkage.qgramBestMatchAdaptive(dirty, corpus,
       "doc_id", "name").count()
     graft.ops.Ranks.globalPercentRank(docs, "n_chars").count()
-    graft.pipelines.ResultSort.sortedSmall(
-      docs.select("doc_id", "n_chars"), col("doc_id")).count()
+    // the query layer's window, through the supplier mart's diamond
+    graft.pipelines.SupplierPerformance(spark, gateSf).count()
     // populate the retrieval postings + selection feature windows
     // (ADVICE r15: these persisted frames were only gated when reachable
     // from a query's own plan)
@@ -133,22 +128,16 @@ class PlanGateSpec extends SparkSpec {
       docs.filter(col("doc_id") < 20), "doc_id", "text", k = 3).count()
     graft.ops.Selection.dsirWeights(docs, "doc_id", "text",
       col("doc_id") % 2 === 0, buckets = 64).count()
-    val windows = Map(
-      "dedup" -> graft.ops.Dedup.shingleCacheWindow,
-      "linkage" -> graft.ops.Linkage.cacheWindow,
-      "ranks" -> graft.ops.Ranks.cacheWindow,
-      "retrieval" -> graft.ops.Retrieval.postCacheWindow,
-      "selection" -> graft.ops.Selection.featCacheWindow,
-      "resultsort" -> graft.pipelines.ResultSort.window)
     var checked = 0
-    for ((mod, w) <- windows; (df, i) <- w.registered(spark).zipWithIndex) {
+    for ((w, wi) <- graft.ops.CacheWindows.all.zipWithIndex;
+         (df, i) <- w.registered(spark).zipWithIndex) {
       val vs = PlanGate.violations(df)
       assert(vs.isEmpty,
-        s"$mod window frame $i violations: ${vs.mkString(", ")}\n" +
+        s"window $wi frame $i violations: ${vs.mkString(", ")}\n" +
           PlanGate.staticPlan(df).toString.linesIterator.take(40).mkString("\n"))
       checked += 1
     }
     assert(checked >= 6, s"expected every module window populated, gated $checked")
-    windows.values.foreach(_.release(spark))
+    graft.ops.CacheWindows.release(spark)
   }
 }

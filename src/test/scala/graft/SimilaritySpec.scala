@@ -502,7 +502,7 @@ class SimilaritySpec extends SparkSpec {
     // neighbors again) while the raw ADC ranking stays at the m=4/16
     // config's saturation floor (1250 -> 1000 bp — a 16-bit code cannot
     // rank 500 mixed-distribution vectors however it is seeded; the
-    // DriftScaleProbe 100x lesson in miniature). Re-seeding fixes the
+    // SCALE.md Round-17 100x drift lesson in miniature). Re-seeding fixes the
     // PROBE miss; only re-SIZING fixes the quantization miss — which is
     // exactly why retrainIvfPqIndex takes a new config.
     assert((retrain._4, retrain._5) == (1000L, 4250L),
@@ -529,8 +529,8 @@ class SimilaritySpec extends SparkSpec {
     // same-config retrain stopped at 4250, and holds ADC at the append
     // floor rather than under it. At 8 queries x k=5 each ADC hit is
     // 250 bp, so the toy fixture cannot resolve ADC recovery beyond the
-    // floor — the 200k-vector DriftScaleProbe retrain arm is where the
-    // config-resize ADC recovery is measured (SCALE.md r18).
+    // floor — the 200k-vector retrain arm is where the config-resize ADC
+    // recovery is measured (SCALE.md r18, NOTES_r18).
     assert((resized.last._4, resized.last._5) == (1250L, 5250L),
       s"re-sized retrain point moved: ${resized.last}")
     assert(resized.last._5 >= sameCfg(2)._5 + 1000,

@@ -62,7 +62,7 @@ class SkewSpec extends SparkSpec {
     def executedSmjSkewFlags(df: org.apache.spark.sql.DataFrame): Seq[Boolean] = {
       // collect(), not write/count: those build their OWN query execution,
       // leaving df's adaptive plan un-executed (its executedPlan would be
-      // the initial, never-optimized shape — the MiniReuseProbe lesson)
+      // the initial, never-optimized shape — the NOTES_r6 reuse-bisect lesson)
       df.collect()
       val p = df.queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.executedPlan

@@ -78,7 +78,7 @@ class IndexStoreSpec extends SparkSpec {
     } finally IndexStore.invalidate(key)
   }
 
-  test("getOrBuild read-back is plan-memoized per (session, path, mtime)") {
+  test("getOrBuild read-back is plan-memoized per (session, path, publication)") {
     val key = s"spec-memo-${System.nanoTime()}"
     try {
       def call() = IndexStore.getOrBuild(spark, key) {
@@ -87,8 +87,26 @@ class IndexStoreSpec extends SparkSpec {
       val a = call(); val b = call()
       assert(a eq b, "second read of an unchanged index must reuse the plan")
       IndexStore.invalidate(key)
-      val c = call() // rebuild bumps the dir mtime → fresh frame, same rows
+      val c = call() // rebuild publishes a new nonce → fresh frame, same rows
       assert(c.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    } finally IndexStore.invalidate(key)
+  }
+
+  test("a rebuild within one mtime tick reads the new rows, not the memo") {
+    val key = s"spec-tick-${System.nanoTime()}"
+    val root = sys.env.getOrElse("GRAFT_INDEX_STORE", "/tmp/graft_index_store")
+    val dir = java.nio.file.Paths.get(s"$root/$key")
+    def call(fp: String, n: Long) = IndexStore.getOrBuild(spark, key, fp) {
+      Seq(Tuple1(n)).toDF("n")
+    }
+    try {
+      assert(call("fp-a", 1L).first().getLong(0) == 1L)
+      val tick = java.nio.file.Files.getLastModifiedTime(dir)
+      assert(call("fp-b", 2L).first().getLong(0) == 2L)
+      // give the rebuilt dir the first build's mtime, as a rebuild inside
+      // one timestamp tick would leave it
+      java.nio.file.Files.setLastModifiedTime(dir, tick)
+      assert(call("fp-b", 2L).collect().map(_.getLong(0)).toSeq == Seq(2L))
     } finally IndexStore.invalidate(key)
   }
 

@@ -6,11 +6,10 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev probe: per-query wall time, job count, task count, and (with
   * GRAFT_JOB_DEBUG) a per-job timeline for ANY comma-list of
-  * `SparkEntry.queries` names — the generic form of MartJobProbe, built
-  * for the r18 optimization round's floor-vs-compute decomposition
-  * (guide §1: measure first; §7.1: where does the wall time go).
+  * `SparkEntry.queries` names — the floor-vs-compute decomposition
+  * behind OPTIMIZATION_r18.md's per-cell job/floor tables and the
+  * NOTES_r18 customer-mart swing decomposition.
   * args: queryNames.csv [sfDir] [reps]
-  * Backs: OPTIMIZATION_r18.md per-cell job/floor decompositions.
   */
 object QueryJobProbe {
   def main(args: Array[String]): Unit = {
@@ -24,7 +23,7 @@ object QueryJobProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // extra confs via env (the ReuseProbe convention), e.g.
+    // extra confs via env, ";"-separated key=value pairs, e.g.
     // SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.parallelismFirst=false"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
@@ -58,17 +57,7 @@ object QueryJobProbe {
     val all = graft.SparkEntry.queries
     (1 to reps).foreach { rep =>
       // cold cache windows per rep, exactly like a Bench pass
-      graft.ops.Classifier.releaseCaches()
-      graft.ops.Dedup.releaseCaches()
-      graft.ops.Linkage.releaseCaches()
-      graft.ops.Ranks.releaseCaches()
-      graft.ops.Retrieval.releaseCaches()
-      graft.ops.Selection.releaseCaches()
-      graft.ops.LanguageModel.releaseCaches()
-      graft.ops.SemanticDedup.releaseCaches()
-      graft.ops.TextAnalysis.releaseCaches()
-      graft.ops.TimeSeries.releaseCaches()
-      graft.pipelines.ResultSort.releaseCaches()
+      graft.ops.CacheWindows.releaseAll()
       names.foreach { name =>
         val j0 = jobs.get(); val k0 = tasks.get(); val m0 = taskTimeMs.get()
         val t0 = System.nanoTime()
