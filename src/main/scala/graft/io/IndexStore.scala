@@ -1,74 +1,85 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Tiny parquet-backed build-once store for corpus indexes (DSIR feature
-  * frames, lexical postings, PQ code tables): `getOrBuild` materializes
-  * the frame to parquet under a content-versioned key on FIRST use and
-  * every later call — across sessions and bench passes — reads the
-  * parquet back without re-running the build.
+/** The one artifact store: every persisted corpus index (DSIR, postings,
+  * IVF-PQ) and saved model (NB) is written and reopened here. An artifact
+  * is N named parquet frames under one directory, with one fingerprint,
+  * one nonce and one publish: `<dir>/<part>/part-*.parquet` plus a
+  * `<dir>/_ARTIFACT` sidecar (nonce, part names, source fingerprint).
+  * `getOrBuild`/`getOrBuildAll` build one under a versioned key on FIRST
+  * use, and every later call — across sessions and bench passes — reads
+  * it back; `publish`/`open` do the same at a given path.
   *
-  * This is the deployment shape the indexed query variants measure: at
-  * 100 TB an index is an artifact with its own build job (hours,
-  * scheduled) and its own storage path; queries pay the READ side only.
-  * Keys embed a caller-supplied version so a change to a build's
-  * dataflow invalidates stale artifacts instead of silently reusing
-  * them; keys embed the fixture dir so sf0.01 / sf0.1 / replica builds
-  * never collide.
+  * Every filesystem step uses the Hadoop `FileSystem` of the path, from
+  * the session's Hadoop configuration (where [[Sources.configureFs]]
+  * registers schemes), so the root may be any Hadoop URI. Parts are
+  * staged, compacted into `<dir>.tmp-<nonce>`, the sidecar is written
+  * last, and the tmp dir is RENAMED to `<dir>`: a reader never sees half
+  * an artifact, and a `try/finally` deletes stage and tmp dirs whatever
+  * failed. Hadoop's `rename` onto an EXISTING dir returns true and moves
+  * the source INSIDE it, so a builder that loses a cross-process race
+  * takes its nested copy back out and never overwrites the winner
+  * (readers open parts by the sidecar's names, never that entry).
   *
-  * Staleness (ADVICE r17): a key alone cannot see a REGENERATED source at
-  * the same path (e.g. /tmp/replica100 rebuilt with a different factor) —
-  * callers pass `fingerprint` (use [[dirFingerprint]]: a stat hash of the
-  * source files) and the store records it in a `_FINGERPRINT` sidecar at
-  * build time; a mismatch on read rebuilds instead of silently serving an
-  * index of data that no longer exists. Builds land in a temp dir and
-  * RENAME into place, so a concurrent builder in another process either
-  * wins the rename or discards its copy and reads the winner — never a
-  * half-visible index.
+  * Keys embed a version (bumped when a build's dataflow or the layout
+  * changes) and the fixture dir; a [[dirFingerprint]] mismatch rebuilds
+  * a REGENERATED source at the same path (ADVICE r17).
   *
-  * The store root is /tmp by default (dev/bench artifact, not engine
-  * state) — point GRAFT_INDEX_STORE at durable storage for real use. */
+  * Deliberately outside: `Dedup.persistCorpusIndex` stays a catalog-
+  * bucketed table (the bucket spec lives only in the catalog and lets the
+  * probe skip the corpus-side exchange, BucketingSpec); and no
+  * `_SUCCESS`-marker fallback for stores without atomic rename exists,
+  * since no caller or connector here has one. The root is /tmp by
+  * default — point GRAFT_INDEX_STORE at durable storage for real use. */
 object IndexStore {
 
   private def root: String =
     sys.env.getOrElse("GRAFT_INDEX_STORE", "/tmp/graft_index_store")
 
-  /** Target parquet file size for stored indexes (guide §6: aim for
-    * output files in the 128 MB – 1 GB range). Before r19 an index was
-    * written straight off the build plan's final stage — one file PER
-    * SHUFFLE PARTITION regardless of size, e.g. the sf0.1 DSIR index
-    * landed as 32 × 28 KB files, so every read-side query paid a
-    * 32-task scan stage (plus footer opens) for < 1 MB of integers, and
-    * a 100 TB build at cluster parallelism would spray tens of
-    * thousands of undersized files. */
+  /** Target parquet file size of a stored part (guide §6: 128 MB – 1 GB
+    * files, never one tiny file per shuffle partition of the build). */
   private val TargetFileBytes: Long = 128L << 20
 
-  // Per-(session, path, publication) memo of reloaded index frames — the
-  // Entities.read pattern: every `spark.read.parquet` pays a listing/
-  // footer job plus a fresh analysis, and the indexed query family
-  // re-reads the same artifacts on every call (q_hybrid_rrf_ann alone
-  // reloads FIVE frames per invocation). DataFrames are immutable
-  // plans, so sharing one per publication is safe. A publication is the
-  // published `_FINGERPRINT` plus the `_NONCE` written with it, so a
-  // rebuild gets a fresh listing even within one mtime tick, and the
-  // bounded LRU frees a stopped session's plans.
-  private val readMemo =
+  /** Part name of a single-frame artifact. */
+  private val Data = "data"
+
+  private val Sidecar = "_ARTIFACT"
+
+  /** A publication's sidecar; its `text` versions the read memo (the
+    * nonce makes each publication distinct, even within one mtime tick). */
+  private final case class Artifact(nonce: String, parts: Seq[String], fingerprint: String) {
+    def text: String = s"$nonce\n${parts.mkString(",")}\n$fingerprint"
+  }
+
+  // The one memo of reloaded frames, shared with `Entities.read`: each
+  // `spark.read.parquet` pays a listing job plus a fresh analysis. A
+  // BOUNDED LRU (128 = the two memos it replaced); a weak session key would
+  // be illusory (a Dataset holds its session), so stopped ones drop on a miss.
+  private val memo =
     new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](
       16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(SparkSession, String, String), DataFrame])
-          : Boolean = size() > 64
+          : Boolean = size() > 128
     }
 
-  private def readMemoized(spark: SparkSession, path: String): DataFrame =
-    synchronized {
-      val k = (spark, path,
-        s"${readSidecar(path, "_FINGERPRINT")}\n${readSidecar(path, "_NONCE")}")
-      val hit = readMemo.get(k)
+  /** `spark.read.parquet(path)`, memoized per (session, path, version);
+    * the caller chooses what `version` means (a publication, an mtime).
+    * The returned frame is SHARED by every caller of that version: never
+    * persist or unpersist it. */
+  def readParquet(spark: SparkSession, path: String, version: String): DataFrame =
+    memo.synchronized {
+      val k = (spark, path, version)
+      val hit = memo.get(k)
       if (hit != null) hit
       else {
+        memo.keySet.removeIf(_._1.sparkContext.isStopped)
         val df = spark.read.parquet(path)
-        readMemo.put(k, df)
+        memo.put(k, df)
         df
       }
     }
@@ -78,107 +89,137 @@ object IndexStore {
     dir.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** Cheap source fingerprint: md5 over the sorted (relative path, size,
-    * mtime) triples of every regular file under `dir` (one level of
-    * recursion covers Spark-written parquet directories). Driver-side
-    * stats only — no data is read, so it is safe to compute per call even
-    * against a 100 TB source tree's manifest. */
-  def dirFingerprint(dir: String): String = {
-    def files(f: java.io.File, prefix: String): Seq[String] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
-          .flatMap(c => files(c, s"$prefix${f.getName}/"))
-      else Seq(s"$prefix${f.getName}:${f.length}:${f.lastModified}")
-    val manifest = files(new java.io.File(dir), "").mkString("\n")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    * mtime) triples of every file under `dir`. Stats only — no data is
+    * read, so it is safe per call even against a 100 TB source tree. */
+  def dirFingerprint(spark: SparkSession, dir: String): String = {
+    val top = new Path(dir)
+    val fs = fsOf(spark, top)
+    def files(st: FileStatus, prefix: String): Seq[String] = {
+      val name = st.getPath.getName
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).sortBy(_.getPath.getName).toSeq
+          .flatMap(files(_, s"$prefix$name/"))
+      else Seq(s"$prefix$name:${st.getLen}:${st.getModificationTime}")
+    }
+    val manifest = files(fs.getFileStatus(top), "").mkString("\n")
+    java.security.MessageDigest.getInstance("MD5").digest(manifest.getBytes(UTF_8))
       .map("%02x".format(_)).mkString
   }
 
-  private def readSidecar(path: String, name: String): String = {
-    val f = java.nio.file.Paths.get(s"$path/$name")
-    if (java.nio.file.Files.exists(f))
-      new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)
-    else ""
-  }
-
-  /** Read the index at `key`, building + persisting it first if absent
-    * or if the recorded source `fingerprint` no longer matches (a
-    * regenerated fixture at the same path must rebuild, not silently
-    * reuse). Presence = parquet _SUCCESS marker (a killed half-write
-    * rebuilds). Synchronized: concurrent first-callers in one JVM build
-    * once; cross-process racers resolve at the rename. */
+  /** The one-part case of [[getOrBuildAll]]. */
   def getOrBuild(spark: SparkSession, key: String, fingerprint: String = "")
-                (build: => DataFrame): DataFrame = synchronized {
-    val path = s"$root/$key"
-    val done = new java.io.File(s"$path/_SUCCESS")
-    val stale = done.exists() && readSidecar(path, "_FINGERPRINT") != fingerprint
-    if (stale) {
-      System.err.println(s"[index-store] $key fingerprint changed — rebuilding")
-      invalidate(key)
-    } else if (!done.exists() && new java.io.File(path).exists()) {
-      // killed half-write (dir present, no _SUCCESS): clear it so the
-      // rebuild's rename can land
-      invalidate(key)
+                (build: => DataFrame): DataFrame =
+    getOrBuildAll(spark, key, fingerprint)(Seq(Data -> build))(Data)
+
+  /** The artifact at `key`, its parts by name. Builds and publishes all of
+    * `build`'s frames as ONE artifact first if it is absent, half-written
+    * (a part without its `_SUCCESS`), or built from a source whose
+    * `fingerprint` no longer matches. Synchronized: concurrent callers in
+    * one JVM build once; cross-process racers resolve at the publish. The
+    * frames are shared: never persist or unpersist them. */
+  def getOrBuildAll(spark: SparkSession, key: String, fingerprint: String = "")
+                   (build: => Seq[(String, DataFrame)]): Map[String, DataFrame] =
+    synchronized {
+      val dir = new Path(root, key)
+      val fs = fsOf(spark, dir)
+      val found = published(fs, dir)
+      val artifact = found.filter(_.fingerprint == fingerprint).getOrElse {
+        if (found.isDefined)
+          System.err.println(s"[index-store] $key fingerprint changed — rebuilding")
+        System.err.println(s"[index-store] building $key")
+        write(spark, fs, dir, fingerprint, build)
+        published(fs, dir).getOrElse(
+          throw new IllegalStateException(s"[index-store] $key did not publish"))
+      }
+      frames(spark, dir, artifact)
     }
-    if (!done.exists() || stale) {
-      System.err.println(s"[index-store] building $key")
-      val nonce = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
-      val tmp = s"$path.tmp-$nonce"
-      // Stage the build as the plan lays it out, then COMPACT to
-      // size-targeted files (guide §6): the staging write keeps the
-      // build's full parallelism (an AQE-coalesce window here would
-      // serialize the expensive amplifying stages — the r18 rejection),
-      // and the compaction pass is a narrow `coalesce` over the staged
-      // bytes — deterministic (no shuffle, no round-robin), exact (file
-      // count derived from the REAL staged size, not an estimate), and
-      // proportional to the index, not the corpus. Build-time only;
-      // the read side sees sized files instead of one per shuffle task.
-      val staging = s"$path.stage-$nonce"
-      build.write.mode("overwrite").parquet(staging)
-      val stagedFiles = Option(new java.io.File(staging).listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.startsWith("part-"))
-      val stagedBytes = stagedFiles.map(_.length).sum
-      val nFiles = math.max(1L,
-        (stagedBytes + TargetFileBytes - 1) / TargetFileBytes).toInt
-      if (stagedFiles.length <= nFiles) {
-        // already at-or-under the target count — promote staging as-is
-        if (!new java.io.File(staging).renameTo(new java.io.File(tmp)))
-          throw new IllegalStateException(
-            s"[index-store] could not stage $key (rename $staging failed)")
-      } else {
-        spark.read.parquet(staging).coalesce(nFiles)
-          .write.mode("overwrite").parquet(tmp)
-        rmTree(new java.io.File(staging))
-      }
-      Seq("_FINGERPRINT" -> fingerprint, "_NONCE" -> nonce).foreach {
-        case (name, v) =>
-          java.nio.file.Files.write(java.nio.file.Paths.get(s"$tmp/$name"),
-            v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      val won = new java.io.File(tmp).renameTo(new java.io.File(path))
-      if (!won) {
-        // another process completed the same key between our check and
-        // rename — discard our copy and read the winner (same key ⇒ same
-        // dataflow ⇒ same frame)
-        rmTree(new java.io.File(tmp))
-        if (!done.exists())
-          throw new IllegalStateException(
-            s"[index-store] could not publish $key (rename failed, no winner)")
-      }
-    }
-    readMemoized(spark, path)
+
+  /** Publish `parts` as one artifact at `path`, replacing any there.
+    * Readers see the old artifact, none, or the new one — never a mix. */
+  def publish(spark: SparkSession, path: String, parts: Seq[(String, DataFrame)]): Unit = {
+    val dir = new Path(path)
+    write(spark, fsOf(spark, dir), dir, "", parts)
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(): Unit
+  /** The artifact published at `path`, its parts by name; throws if there
+    * is no complete publication, never returns a partial one. The frames
+    * are shared: never persist or unpersist them. */
+  def open(spark: SparkSession, path: String): Map[String, DataFrame] = {
+    val dir = new Path(path)
+    frames(spark, dir, published(fsOf(spark, dir), dir).getOrElse(
+      throw new IllegalStateException(s"[index-store] no artifact published at $path")))
   }
 
   /** Drop one stored index (test hygiene / forced rebuild). */
-  def invalidate(key: String): Unit = synchronized {
-    val f = new java.io.File(s"$root/$key")
-    if (f.exists()) rmTree(f)
+  def invalidate(spark: SparkSession, key: String): Unit =
+    synchronized { val dir = new Path(root, key); fsOf(spark, dir).delete(dir, true): Unit }
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The sidecar of the complete publication at `dir`, if there is one. */
+  private def published(fs: FileSystem, dir: Path): Option[Artifact] = {
+    val side = new Path(dir, Sidecar)
+    if (!fs.exists(side)) None
+    else {
+      val in = fs.open(side)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val Array(nonce, parts, fingerprint) = text.split("\n", 3)
+      Some(Artifact(nonce, parts.split(",").toSeq, fingerprint))
+        .filter(_.parts.forall(p => fs.exists(new Path(dir, s"$p/_SUCCESS"))))
+    }
+  }
+
+  private def frames(spark: SparkSession, dir: Path, a: Artifact): Map[String, DataFrame] =
+    a.parts.map(p => p -> readParquet(spark, new Path(dir, p).toString, a.text)).toMap
+
+  /** Replace whatever is at `dir` (a stale or half-written artifact, or
+    * one being re-saved) with `build`'s parts: stage, compact, publish. A
+    * publication that appears meanwhile (another process won) is kept
+    * and ours dropped. */
+  private def write(spark: SparkSession, fs: FileSystem, dir: Path, fingerprint: String,
+                    build: => Seq[(String, DataFrame)]): Unit = {
+    fs.delete(dir, true)
+    val nonce = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+    val stage = new Path(s"$dir.stage-$nonce")
+    val tmp = new Path(s"$dir.tmp-$nonce")
+    try {
+      val parts = build
+      val names = parts.map(_._1)
+      require(names.nonEmpty && names.distinct == names && names.forall(
+        _.matches("[A-Za-z0-9][A-Za-z0-9_-]*")), s"bad artifact part names $names")
+      fs.mkdirs(tmp)
+      parts.foreach { case (name, df) =>
+        compact(spark, fs, df, new Path(stage, name), new Path(tmp, name))
+      }
+      val out = fs.create(new Path(tmp, Sidecar), false)
+      try out.write(Artifact(nonce, names, fingerprint).text.getBytes(UTF_8))
+      finally out.close()
+      if (!fs.exists(dir) && !fs.rename(tmp, dir) && !fs.exists(dir))
+        throw new IllegalStateException(s"[index-store] could not publish $dir")
+      // a racer published first: Hadoop moved tmp INSIDE it — take it out
+      fs.delete(new Path(dir, tmp.getName), true)
+    } finally {
+      fs.delete(stage, true)
+      fs.delete(tmp, true)
+    }
+  }
+
+  /** Write `frame` as the part at `target`: stage it as the plan lays it
+    * out (an AQE-coalesce window here would serialize the expensive
+    * amplifying stages — the r18 rejection), then compact with a narrow
+    * `coalesce` to a file count derived from the REAL staged bytes —
+    * deterministic, exact, and proportional to the index, not the corpus. */
+  private def compact(spark: SparkSession, fs: FileSystem, frame: DataFrame,
+                      staging: Path, target: Path): Unit = {
+    frame.write.mode("overwrite").parquet(staging.toString)
+    val staged = fs.listStatus(staging)
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+    val nFiles = math.max(1L,
+      (staged.map(_.getLen).sum + TargetFileBytes - 1) / TargetFileBytes).toInt
+    if (staged.length > nFiles)
+      spark.read.parquet(staging.toString).coalesce(nFiles).write.parquet(target.toString)
+    else if (!fs.rename(staging, target)) // at or under target: promote as-is
+      throw new IllegalStateException(s"[index-store] could not stage $target")
   }
 }

@@ -44,55 +44,26 @@ object Entities {
   def dec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = c.cast(Money)
   def decD(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = c.cast(DiscDec)
 
-  // Per-(session, path) memo of the base parquet frames: every
-  // `spark.read.parquet` call costs a footer/schema-listing job plus a
-  // fresh analysis of the relation, and the mart pipelines re-read the
-  // same 4 tables on every invocation (4 × ~35 ms of jobs per apply()
-  // at bench cadence). DataFrames are immutable plans, so sharing one
-  // per (session, path) is safe. Residency is a BOUNDED LRU — a weak
-  // session key would be illusory here because each memoized Dataset
-  // strongly references its own session (the CacheWindows scaladoc
-  // documents the same trap), so eviction is what actually frees a
-  // stopped session's plans; 64 entries cover many sessions × the
-  // fixture tables, and an evicted entry just re-lists on next use.
-  // The key carries the path's LAST-MODIFIED time, so a rewrite of the
-  // parquet directory during a live session gets a FRESH file listing /
-  // schema snapshot on next read instead of a stale memoized frame (the
-  // stale entry ages out of the LRU). One filesystem stat per call —
-  // microseconds against the ~35 ms listing job the memo avoids.
-  // KNOWN COVERAGE BOUNDS of the mtime key (deliberate, ADVICE r14): a
-  // rewrite landing in the SAME millisecond as the memoized listing, or
-  // one that rewrites part-file BYTES without creating/deleting any
-  // directory entry (dir mtime unchanged), still serves the memoized
-  // frame; a stat failure maps all error cases onto the shared mtime=0
-  // key. Spark's own writers always create/delete entries (temp dirs,
-  // _SUCCESS), so every fixture/driver rewrite bumps the dir mtime; a
-  // listing digest (names+sizes+mtimes) would close the residual gap at
-  // a per-call directory-walk cost that grows with part-file count —
-  // wrong trade for an engine whose inputs are immutable-at-scale.
-  private val readMemo =
-    new java.util.LinkedHashMap[(SparkSession, String, Long), DataFrame](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long), DataFrame])
-          : Boolean = size() > 64
-    }
-  def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    readMemo.synchronized {
-      val path = s"$dir/$table.parquet"
-      val mtime =
-        try java.nio.file.Files.getLastModifiedTime(
-          java.nio.file.Paths.get(path)).toMillis
-        catch { case _: Throwable => 0L } // non-local/missing: memo on path
-      val key = (spark, path, mtime)
-      val hit = readMemo.get(key)
-      if (hit != null) hit
-      else {
-        val df = spark.read.parquet(path)
-        readMemo.put(key, df)
-        df
-      }
-    }
+  // Base tables go through the shared read memo
+  // ([[graft.io.IndexStore.readParquet]]): the mart pipelines re-read the
+  // same 4 tables on every invocation, and each `spark.read.parquet`
+  // costs a ~35 ms listing job plus a fresh analysis. The memo version is
+  // the path's LAST-MODIFIED time, so a rewrite of the parquet directory
+  // during a live session gets a FRESH listing — one stat per call.
+  // KNOWN BOUNDS of the mtime version (deliberate, ADVICE r14): a rewrite
+  // in the SAME millisecond, or one that rewrites part-file bytes without
+  // adding/removing a directory entry, still serves the memoized frame; a
+  // failed stat memoizes on the path alone (mtime 0). Spark's writers
+  // always add/remove entries, and a listing digest would close the gap
+  // at a per-call walk cost that grows with part-file count.
+  def read(spark: SparkSession, dir: String, table: String): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val mtime =
+      try java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(path)).toMillis
+      catch { case _: Throwable => 0L } // non-local/missing: memo on path
+    graft.io.IndexStore.readParquet(spark, path, mtime.toString)
+  }
 
   /** suppliers (reference `raw.suppliers_pre`): SUPPLIER_ID, SUPPLIER_NAME.
     * Fixture: `supplier` (s_suppkey 0-based, 10 rows at sf0.001). */

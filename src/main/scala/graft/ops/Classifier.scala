@@ -62,7 +62,7 @@ object Classifier {
     *   - `classes`: one row per class — (cls, den_bits = bits2(n_c + V),
     *     prior_bits = bits2(d_c) − bits2(d_train)).
     * Save/load with [[saveNbModel]]/[[loadNbModel]] to amortize training
-    * across sessions (the [[Dedup.persistCorpusIndex]] pattern). */
+    * across sessions (a two-part [[graft.io.IndexStore]] artifact). */
   final case class NbModel(tokenCounts: DataFrame, classes: DataFrame)
 
   /** Fit the model on EVERY row of `docs` (the caller owns the split —
@@ -100,16 +100,16 @@ object Classifier {
     NbModel(ctc, classes)
   }
 
-  /** Persist a trained model under `dir` (two parquet tables). */
-  def saveNbModel(model: NbModel, dir: String): Unit = {
-    model.tokenCounts.write.mode("overwrite").parquet(s"$dir/token_counts")
-    model.classes.write.mode("overwrite").parquet(s"$dir/classes")
-  }
+  /** Publish a trained model at `dir` as one two-part artifact. */
+  def saveNbModel(model: NbModel, dir: String): Unit =
+    graft.io.IndexStore.publish(model.tokenCounts.sparkSession, dir,
+      Seq("token_counts" -> model.tokenCounts, "classes" -> model.classes))
 
-  /** Reopen a [[saveNbModel]] artifact. */
-  def loadNbModel(spark: org.apache.spark.sql.SparkSession, dir: String): NbModel =
-    NbModel(spark.read.parquet(s"$dir/token_counts"),
-      spark.read.parquet(s"$dir/classes"))
+  /** Reopen a [[saveNbModel]] artifact; throws if none is published. */
+  def loadNbModel(spark: org.apache.spark.sql.SparkSession, dir: String): NbModel = {
+    val parts = graft.io.IndexStore.open(spark, dir)
+    NbModel(parts("token_counts"), parts("classes"))
+  }
 
   /** Score arbitrary documents against a trained model: one row per
     * document × class — (`idCol`, cls, score). Empty documents score

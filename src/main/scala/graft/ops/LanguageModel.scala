@@ -120,20 +120,16 @@ object LanguageModel {
 
     // widen on textCol — the ONLY column this function reads from ref
     // (keying on idCol silently required ref to carry it; ADVICE r18).
-    // Cached + eagerly materialized like the self-scoring form's `toks`:
-    // the unigram and bigram count branches BOTH consume the reference
-    // token arrays, and AQE's runtime stage cache does not reuse their
-    // exchanges (the r13 tfidf finding) — uncached, the reference corpus
-    // was tokenized TWICE per call. Local A/B at sf0.1 is wall-neutral
-    // (the two branches overlapped as parallel stages, so only summed
-    // task time paid the duplicate; the cache write costs about what the
-    // saved pass returns — r19 probe), but at corpus scale one tokenize
-    // pass plus a narrow token cache beats two full amplifying passes,
-    // and it makes this function consistent with [[bigramBitScores]]'
-    // documented contract.
+    // Persisted because the unigram and bigram count branches BOTH
+    // consume the reference token arrays, and AQE's runtime stage cache
+    // does not reuse their exchanges (the r13 tfidf finding) — uncached,
+    // the reference corpus was tokenized TWICE per call. The persist is
+    // lazy: the first action on the returned frame materializes it, and
+    // the other branch reads the cached blocks. No eager count(): this
+    // stays a plan builder, and a materializing action here would add a
+    // whole reference tokenize job ahead of the query's own.
     val refToks = tokCacheWindow.add(Par.widen(ref, col(textCol))
       .select(TextAnalysis.tokens(col(textCol)).as("__tk")))
-    refToks.count()
     val uni = refToks.select(explode(col("__tk")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cu"))
     val big = refToks

@@ -189,9 +189,9 @@ object CorpusStreams {
     * document — the model-based routing/labeling stage of a streaming
     * ingest (language routing, quality-tier tagging). The model is a
     * FIXED [[graft.ops.Classifier.NbModel]] (train once on the curated
-    * corpus, [[graft.ops.Classifier.loadNbModel]] at stream start);
-    * scoring is [[graft.ops.Classifier.nbPredictWith]]'s exact plan, so
-    * batch and per-micro-batch results are identical by construction.
+    * corpus; [[graft.ops.Classifier.loadNbModel]] opens the published model
+    * artifact at stream start); scoring is [[graft.ops.Classifier.nbPredictWith]]'s
+    * exact plan, so batch and per-micro-batch results are identical by construction.
     *
     * Same `foreachBatch` contract as the index-backed gates: the
     * per-document argmax aggregation groups on a stream-derived key and

@@ -191,6 +191,15 @@ class ClassifierSpec extends SparkSpec {
     assert(viaModel == direct)
   }
 
+  test("loadNbModel refuses a directory holding both parts but never published") {
+    val df = fixture.toDF("doc_id", "lang", "text")
+    val model = Classifier.nbTrain(df, "text", "lang")
+    val dir = java.nio.file.Files.createTempDirectory("nbmodel-bare").toString
+    model.tokenCounts.write.parquet(s"$dir/token_counts")
+    model.classes.write.parquet(s"$dir/classes")
+    intercept[IllegalStateException](Classifier.loadNbModel(spark, dir))
+  }
+
   test("one-pass k-fold CV equals k independent train/score runs") {
     val df = fixture.toDF("doc_id", "lang", "text")
     val k = 3
