@@ -1,13 +1,16 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Sink connectors — reference §2.1 S7, S8, S10.
   *
   * Scale posture: parquet writes inherit the frame's partitioning — callers
   * control file count via the upstream plan (repartition by the write key),
   * never via driver-side collects. `snapshot` applies the reference's
-  * raw-overwrite + legacy-append convention in one call.
+  * raw-overwrite + legacy-append convention in one call; `stage` splits it
+  * into a staged write and a rename-only publish.
   */
 object Sinks {
 
@@ -87,9 +90,72 @@ object Sinks {
 
   /** The reference's snapshot-ledger convention (`ingestion_task.py:66-69`
     * and parallels): the current frame overwrites `raw`, and the same frame
-    * appends to the `legacy` history — a hand-rolled SCD-0 daily ledger. */
-  def snapshot(df: DataFrame, rawPath: String, legacyPath: String): Unit = {
-    parquet(df, rawPath, SaveMode.Overwrite)
-    parquet(df, legacyPath, SaveMode.Append)
+    * appends to the `legacy` history — a hand-rolled SCD-0 daily ledger.
+    * `check` runs on the staged output before anything lands (the
+    * gate-then-write ordering: pass `Quality.gate(_, keys)`). Returns the
+    * landed row count. */
+  def snapshot(df: DataFrame, rawPath: String, legacyPath: String,
+               check: DataFrame => Unit = _ => ()): Long = {
+    val s = stage(df, rawPath, legacyPath, check)
+    try s.publish() finally s.discard()
+    s.rows
+  }
+
+  /** A snapshot written but not yet landed: `rows` is the frame's row
+    * count, `publish()` lands it by renames alone (no Spark job) and
+    * `discard()` deletes whatever of its stage dirs remain — a no-op
+    * after `publish()`. */
+  final class Staged private[Sinks] (val rows: Long, val path: String,
+                                     publishFn: () => Unit, discardFn: () => Unit) {
+    def publish(): Unit = publishFn()
+    def discard(): Unit = discardFn()
+  }
+
+  /** Stage a [[snapshot]] without landing it. `df` is evaluated ONCE: it is
+    * written to `<raw>.stage-<nonce>` with its row count taken by a
+    * `Dataset.observe` on that write; `check` then runs on the staged
+    * parquet (a gate reads the small written output, not the lineage); and
+    * executors copy the staged rows to `<legacy>.stage-<nonce>`. Nothing
+    * under `raw`/`legacy` changes until `publish()`, which replaces `raw`
+    * with its stage dir, then renames each legacy part file into `legacy`
+    * (part names carry the write job's UUID, so nights never collide).
+    * Raw lands first, so a retry after a failed publish re-overwrites raw
+    * harmlessly. Any failure while staging deletes both stage dirs.
+    * Every step uses the Hadoop `FileSystem` of its path. */
+  def stage(df: DataFrame, rawPath: String, legacyPath: String,
+            check: DataFrame => Unit = _ => ()): Staged = {
+    val spark = df.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = new Path(rawPath)
+    val legacy = new Path(legacyPath)
+    val rawFs = raw.getFileSystem(conf)
+    val legacyFs = legacy.getFileSystem(conf)
+    val nonce = s"${ProcessHandle.current().pid()}-${System.nanoTime()}"
+    val rawStage = new Path(s"$raw.stage-$nonce")
+    val legacyStage = new Path(s"$legacy.stage-$nonce")
+    def discard(): Unit = { rawFs.delete(rawStage, true); legacyFs.delete(legacyStage, true): Unit }
+    try {
+      val obs = Observation()
+      df.observe(obs, count(lit(1)).as("rows")).write.parquet(rawStage.toString)
+      val rows = obs.get("rows").asInstanceOf[Long]
+      val staged = spark.read.parquet(rawStage.toString)
+      check(staged)
+      staged.write.parquet(legacyStage.toString)
+      new Staged(rows, rawPath, () => {
+        rawFs.delete(raw, true)
+        if (!rawFs.rename(rawStage, raw))
+          throw new java.io.IOException(s"could not publish $raw")
+        legacyFs.mkdirs(legacy)
+        legacyFs.listStatus(legacyStage)
+          .filter(_.getPath.getName.startsWith("part-"))
+          .foreach { st =>
+            if (!legacyFs.rename(st.getPath, new Path(legacy, st.getPath.getName)))
+              throw new java.io.IOException(s"could not publish ${st.getPath} into $legacy")
+          }
+        legacyFs.delete(legacyStage, true): Unit
+      }, () => discard())
+    } catch {
+      case e: Throwable => discard(); throw e
+    }
   }
 }

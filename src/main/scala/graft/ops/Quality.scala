@@ -27,8 +27,9 @@ object Quality {
       .filter(col("cnt") > 1)
 
   /** Throws [[DuplicateException]] when `df` has duplicate primary keys;
-    * otherwise returns `df` unchanged so the gate composes with a write:
-    * `Sinks.append(Quality.gate(df, keys), ...)`. */
+    * otherwise returns `df` unchanged so the gate composes with a write,
+    * e.g. as the check of a snapshot load:
+    * `Sinks.snapshot(df, raw, legacy, Quality.gate(_, keys))`. */
   def gate(df: DataFrame, primaryKey: Seq[String]): DataFrame = {
     if (!duplicates(df, primaryKey).isEmpty)
       throw new DuplicateException(

@@ -14,6 +14,14 @@ import graft.ops.Quality
   * reference's gate-then-write ordering (a duplicate-key failure means
   * no partial load).
   *
+  * Every mart reads the source fixture, not another task's output, so
+  * the chain fixes only the order in which results LAND. Each load is
+  * therefore computed once and staged ahead, all seven concurrently
+  * ([[Sinks.stage]]: one write, an observed row count, the gate on the
+  * staged output), and published by renames in the reference's group
+  * order ([[runStagedGroups]]); after any failure `raw/` and `legacy/`
+  * hold exactly what the sequential chain would have left.
+  *
   * Scheduling and alerting stay with whatever runs the driver (cron,
   * Airflow's SparkSubmitOperator, …), but the RETRY/FAILURE contract the
   * reference pins — every task body wrapped in a typed failure
@@ -142,20 +150,57 @@ object Dag {
                  (body: A => StageResult): Seq[TaskOutcome] =
     runTaskGroups(Seq(expand(name, items)(body)), policy)
 
-  /** The production pipeline's stage groups as named thunks — shared by
-    * the fail-fast [[runAll]] and the policy-driven [[runAllWithRetries]].
-    * Group structure mirrors the reference DAG exactly
-    * (`dags/metamorph_etl_dag.py:28`): the three ingests fan IN (parallel
-    * group), then sales and the marts chain sequentially. */
+  /** Stage-ahead, publish-in-order execution of staged loads. Every task
+    * is a [[Sinks.stage]] thunk; the first stage attempt of ALL of them
+    * starts at once on one pool, because a stage has no visible effect
+    * (it writes only `*.stage-*` dirs and runs gates). [[runTaskGroups]]
+    * then runs publish thunks in declaration order: a
+    * task's first attempt waits for its speculative stage and publishes
+    * it, a retry re-stages synchronously. On return every speculative
+    * stage has finished and each one not published (failed, skipped or
+    * replaced by a retry) is discarded, so `raw/` and `legacy/` hold
+    * exactly what the sequential DAG would have left, and no stage dir
+    * outlives the call. */
+  private[graft] def runStagedGroups(groups: Seq[Seq[(String, () => Sinks.Staged)]],
+                                     policy: RetryPolicy = RetryPolicy()): Seq[TaskOutcome] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, groups.map(_.size).sum))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val ahead = groups.map(_.map { case (name, stage) => (name, stage, Future(stage())) })
+    try {
+      runTaskGroups(ahead.map(_.map { case (name, stage, speculative) =>
+        var first = true
+        name -> { () =>
+          val s = if (first) { first = false; Await.result(speculative, Duration.Inf) }
+                  else stage()
+          try s.publish() finally s.discard()
+          StageResult(name, s.rows, s.path)
+        }
+      }), policy)
+    } finally {
+      ahead.flatten.foreach { case (_, _, f) =>
+        Await.ready(f, Duration.Inf).value.foreach(_.foreach(_.discard()))
+      }
+      pool.shutdown()
+    }
+  }
+
+  /** The production pipeline's stage groups as named stage thunks —
+    * shared by the fail-fast [[runAll]] and the policy-driven
+    * [[runAllWithRetries]]. Group structure mirrors the reference DAG
+    * exactly (`dags/metamorph_etl_dag.py:28`): the three ingests fan IN
+    * (parallel group), then sales and the marts chain sequentially. Each
+    * load gates its primary key on the staged output. */
   private def stages(spark: SparkSession, sfDir: String,
-                     outDir: String): Seq[Seq[(String, () => StageResult)]] = {
+                     outDir: String): Seq[Seq[(String, () => Sinks.Staged)]] = {
 
     def load(name: String, df: => DataFrame,
-             pk: Option[Seq[String]]): (String, () => StageResult) =
+             pk: Option[Seq[String]]): (String, () => Sinks.Staged) =
       name -> { () =>
-        val gated = pk.fold(df)(Quality.gate(df, _))
-        Sinks.snapshot(gated, s"$outDir/raw/$name", s"$outDir/legacy/$name")
-        StageResult(name, gated.count(), s"$outDir/raw/$name")
+        Sinks.stage(df, s"$outDir/raw/$name", s"$outDir/legacy/$name",
+          staged => pk.foreach(Quality.gate(staged, _)))
       }
 
     // ingestion fan-in (the reference's three parallel ingests + sales).
@@ -192,18 +237,20 @@ object Dag {
   /** Policy-driven run: per-task bounded retries, typed outcomes,
     * parallel ingest fan-in, and downstream abort on failure — the
     * reference's operational contract without an orchestrator
-    * dependency. */
+    * dependency. Every load is staged ahead and published in the
+    * reference's order ([[runStagedGroups]]). */
   def runAllWithRetries(spark: SparkSession, sfDir: String, outDir: String,
                         policy: RetryPolicy = RetryPolicy()): Seq[TaskOutcome] =
-    runTaskGroups(stages(spark, sfDir, outDir), policy)
+    runStagedGroups(stages(spark, sfDir, outDir), policy)
 
   /** The reference's SECOND production DAG (`dags/usa_etl_dag.py:6-10`,
     * one task: `usa_population_ingestion.py:20-56`) — canonicalize + gate
     * via [[Ingestion.usaPopulation]], landed with the same raw/legacy
     * snapshot convention as [[runAll]]'s stages. */
   def runUsaEtl(spark: SparkSession, sfDir: String, outDir: String): StageResult = {
-    val gated = Ingestion.usaPopulationSnapshot(spark, sfDir)
-    Sinks.snapshot(gated, s"$outDir/raw/usa_population", s"$outDir/legacy/usa_population")
-    StageResult("usa_population", gated.count(), s"$outDir/raw/usa_population")
+    val raw = s"$outDir/raw/usa_population"
+    val rows = Sinks.snapshot(Ingestion.usaPopulationSnapshot(spark, sfDir), raw,
+      s"$outDir/legacy/usa_population")
+    StageResult("usa_population", rows, raw)
   }
 }

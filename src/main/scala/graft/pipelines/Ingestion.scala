@@ -28,14 +28,12 @@ object Ingestion {
 
   /** Full snapshot ingest: gate-then-write ordering preserved from the
     * reference (failure ⇒ no partial load; SURVEY.md §7.5 item 5). The
-    * frame is written twice (raw overwrite + legacy append) — unlike the
-    * reference, which recomputes the lineage per action, callers at scale
-    * should persist upstream of this call if the extract is expensive. */
+    * frame is evaluated once: the gate runs on the staged output and
+    * nothing lands unless it passes ([[Sinks.snapshot]]). */
   def snapshotIngest(df: DataFrame, names: Seq[String], primaryKey: Seq[String],
                      rawPath: String, legacyPath: String): DataFrame = {
     val canonical = canonicalize(df, names)
-    Quality.gate(canonical, primaryKey)
-    Sinks.snapshot(canonical, rawPath, legacyPath)
+    Sinks.snapshot(canonical, rawPath, legacyPath, Quality.gate(_, primaryKey))
     canonical
   }
 

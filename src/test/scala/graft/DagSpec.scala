@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import graft.io.Sinks
 import graft.pipelines.Dag
 
 class DagSpec extends SparkSpec {
@@ -171,5 +173,89 @@ class DagSpec extends SparkSpec {
     val ex = Dag.DagTaskException("only", failed.attempts, failed.cause)
     assert(ex.getMessage == "task 'only' failed after 1 attempt(s)")
     assert(ex.getCause.getMessage == "nope")
+  }
+
+  /** Every `*.stage-*` entry at any depth under `root`. */
+  private def stageEntries(root: String): Seq[Path] = {
+    val walk = Files.walk(java.nio.file.Paths.get(root))
+    try walk.filter(_.getFileName.toString.contains(".stage-")).toArray.toSeq
+      .map(_.asInstanceOf[Path])
+    finally walk.close()
+  }
+
+  private def exists(p: String): Boolean = Files.exists(java.nio.file.Paths.get(p))
+
+  test("a duplicate supplier key fails suppliers, lands its group siblings, " +
+       "skips every later task and leaves no stage dir") {
+    val dirty = Files.createTempDirectory("graft_dag_dirty_").toString
+    Files.list(java.nio.file.Paths.get(sf)).forEach { f =>
+      if (f.getFileName.toString != "supplier.parquet")
+        Files.copy(f, java.nio.file.Paths.get(dirty, f.getFileName.toString))
+    }
+    val supplier = spark.read.parquet(s"$sf/supplier.parquet")
+    supplier.union(supplier.limit(1)).write.parquet(s"$dirty/supplier.parquet")
+    val out = Files.createTempDirectory("graft_dag_fail_").toString
+    val outcomes = Dag.runAllWithRetries(spark, dirty, out)
+    val later = Seq("sales", "supplier_performance", "product_performance",
+      "customer_sales_report")
+    outcomes match {
+      case Seq(Dag.TaskFailed("suppliers", 3, cause),
+               Dag.TaskSucceeded("products", _, 1),
+               Dag.TaskSucceeded("customers", _, 1), rest @ _*) =>
+        assert(cause.isInstanceOf[graft.ops.DuplicateException])
+        assert(rest == later.map(Dag.TaskSkipped(_, "suppliers")))
+      case other => fail(s"unexpected outcomes: $other")
+    }
+    Seq("products", "customers").foreach { t =>
+      val rows = spark.read.parquet(s"$out/raw/$t").count()
+      assert(rows > 0 && spark.read.parquet(s"$out/legacy/$t").count() == rows)
+    }
+    ("suppliers" +: later).foreach { t =>
+      assert(!exists(s"$out/raw/$t") && !exists(s"$out/legacy/$t"), s"$t landed")
+    }
+    assert(stageEntries(out).isEmpty, s"stage dirs left: ${stageEntries(out)}")
+  }
+
+  test("a staged task whose first stage attempt fails succeeds on the retry " +
+       "and lands legacy exactly once") {
+    val out = Files.createTempDirectory("graft_dag_retry_").toString
+    val checks = new java.util.concurrent.atomic.AtomicInteger()
+    val df = spark.range(0, 7).toDF("id")
+    val outcomes = Dag.runStagedGroups(Seq(Seq("flaky" -> { () =>
+      Sinks.stage(df, s"$out/raw/flaky", s"$out/legacy/flaky", { _ =>
+        if (checks.incrementAndGet() == 1) sys.error("transient gate failure")
+      })
+    })))
+    outcomes match {
+      case Seq(Dag.TaskSucceeded("flaky", r, 2)) => assert(r.rows == 7)
+      case other => fail(s"unexpected outcomes: $other")
+    }
+    assert(spark.read.parquet(s"$out/raw/flaky").count() == 7)
+    assert(spark.read.parquet(s"$out/legacy/flaky").count() == 7)
+    assert(stageEntries(out).isEmpty, s"stage dirs left: ${stageEntries(out)}")
+  }
+
+  test("a downstream stage finished before its upstream failed leaves nothing") {
+    val out = Files.createTempDirectory("graft_dag_ahead_").toString
+    val staged = new java.util.concurrent.CountDownLatch(1)
+    val outcomes = Dag.runStagedGroups(Seq(
+      Seq("upstream" -> { () =>
+        if (!staged.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          sys.error("downstream was not staged ahead")
+        throw new graft.ops.DuplicateException("upstream gate failed")
+      }),
+      Seq("downstream" -> { () =>
+        val s = Sinks.stage(spark.range(0, 3).toDF("id"),
+          s"$out/raw/downstream", s"$out/legacy/downstream")
+        staged.countDown()
+        s
+      })), Dag.RetryPolicy(retries = 0))
+    outcomes match {
+      case Seq(Dag.TaskFailed("upstream", 1, cause), Dag.TaskSkipped("downstream", "upstream")) =>
+        assert(cause.isInstanceOf[graft.ops.DuplicateException])
+      case other => fail(s"unexpected outcomes: $other")
+    }
+    assert(!exists(s"$out/raw/downstream") && !exists(s"$out/legacy/downstream"))
+    assert(stageEntries(out).isEmpty, s"stage dirs left: ${stageEntries(out)}")
   }
 }

@@ -140,6 +140,23 @@ class IoSpec extends SparkSpec {
     assert(spark.read.parquet(s"$d/legacy").count() == 2)   // accumulated
   }
 
+  test("snapshot over a non-local FileSystem: raw overwritten, legacy appended, " +
+       "no stage entry left") {
+    import graft.io.RamFs
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    val d = Files.createTempDirectory(RamFs.root.toPath, "snap").toString
+    val night1 = Seq((1, "a"), (2, "b")).toDF("id", "v")
+    val night2 = Seq((3, "c"), (4, "d"), (5, "e")).toDF("id", "v")
+    assert(Sinks.snapshot(night1, s"ramfs:$d/raw", s"ramfs:$d/legacy") == 2)
+    assert(Sinks.snapshot(night2, s"ramfs:$d/raw", s"ramfs:$d/legacy") == 3)
+    val raw = spark.read.parquet(s"ramfs:$d/raw")
+    assert(raw.as[(Int, String)].collect().sorted.toSeq == Seq((3, "c"), (4, "d"), (5, "e")))
+    assert(spark.read.parquet(s"ramfs:$d/legacy").count() == 5)
+    val left = Files.walk(java.nio.file.Paths.get(d))
+    try assert(!left.anyMatch(_.getFileName.toString.contains(".stage-")))
+    finally left.close()
+  }
+
   test("jsonl roundtrip preserves rows and declared schema avoids inference") {
     val d = Files.createTempDirectory("graft_jsonl").toString
     val docs = Seq((1L, "hello world", "en"), (2L, "hallo welt", "de"))
@@ -212,6 +229,8 @@ class IoSpec extends SparkSpec {
         Seq("SUPPLIER_ID"), s"$d/raw", s"$d/legacy")
     }
     assert(!Files.exists(java.nio.file.Paths.get(s"$d/raw"))) // no partial load
+    assert(!Files.exists(java.nio.file.Paths.get(s"$d/legacy")))
+    assert(Files.list(java.nio.file.Paths.get(d)).toArray.isEmpty, "no stage dir left")
   }
 
   test("text source: line mode and whole-file mode; csv sink round-trips") {
