@@ -27,16 +27,17 @@ import org.apache.spark.sql.functions._
   * Choosing (see SCALE.md "exact vs approximate"): exact selection costs
   * up to 7 full scans on a 64-bit range and is reproducible to the bit —
   * right for gates and contracts. The sketches cost ONE scan — right for
-  * interactive profiling and monitoring. [[Quantiles.exactQuantilesSeeded]]
-  * splits the difference: sketch-narrowed exact selection, bit-identical
-  * output in ~4 scans. */
+  * interactive profiling and monitoring. [[Quantiles]] splits the
+  * difference on wide-range columns: it seeds its exact selection with
+  * a sketch that only brackets each rank, so the output stays
+  * bit-identical in ~4 scans. */
 object Approx {
 
   /** (q, value) pairs from one GK pass; rank error ≤ `relativeError`·n
     * per the contract above. Nulls are ignored (not counted in n);
     * returns NaN values if the column has no non-null rows. Integral
     * columns ride through double: values above 2⁵³ may round by up to
-    * one ulp (≤ 1024 at the 2⁶³ extreme) — use the exact or seeded path
+    * one ulp (≤ 1024 at the 2⁶³ extreme) — use [[Quantiles]]
     * when bit-exactness matters there. */
   def approxQuantiles(df: DataFrame, valueCol: String, qs: Seq[Double],
                       relativeError: Double = 0.01): Seq[(Double, Double)] = {

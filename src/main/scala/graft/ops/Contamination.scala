@@ -18,12 +18,7 @@ import org.apache.spark.sql.functions._
   * an |eval| × |train| cross join. Cost is Σ_shingle df_eval · df_train,
   * and the eval side is tiny relative to the corpus (benchmarks, not the
   * 100 TB crawl), so candidate generation is bounded by the eval side's
-  * index. `maxDf` applies the same df-capping as [[Dedup.jaccardPairs]]
-  * when a degenerate shingle is shared by everything: shingles with
-  * train-df above the cap are dropped from CANDIDATE GENERATION only,
-  * and every candidate's containment is then computed exactly over the
-  * full indexes — a pair is missed only if ALL its shared shingles
-  * exceed the cap.
+  * index.
   */
 object Contamination {
 
@@ -52,35 +47,15 @@ object Contamination {
     * containment ≥ threshold. Shingle hashing/distinctness matches
     * [[Dedup.jaccardPairs]] (xxhash64'd word n-grams — 8-byte shuffle
     * keys). Eval docs with fewer than `n` tokens have no shingles and
-    * produce no pairs. `maxDf = None` (default) is fully exact. */
+    * produce no pairs. */
   def containmentPairs(train: DataFrame, eval: DataFrame, idCol: String,
                        textCol: String, n: Int = 3,
-                       threshold: Double = 0.5,
-                       maxDf: Option[Int] = None): DataFrame = {
+                       threshold: Double = 0.5): DataFrame = {
     val evalIdx = index(eval, "eval", idCol, textCol, n)
     val trainIdx = index(train, "train", idCol, textCol, n)
-    val evalSizes = sizes(eval, idCol, textCol, n)
-    val common = maxDf match {
-      case None =>
-        evalIdx.join(trainIdx, "shash")
-          .groupBy("eval_id", "train_id").agg(count(lit(1)).as("common"))
-      case Some(cap) =>
-        // candidates only from rare (train-df ≤ cap) shingles, then the
-        // TRUE common count over the full indexes for those candidates
-        val rare = trainIdx.groupBy("shash").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("shash")
-        val cands = evalIdx.join(trainIdx.join(rare, "shash"), "shash")
-          .select("eval_id", "train_id").distinct()
-        cands.as("c")
-          .join(evalIdx.as("e"), col("c.eval_id") === col("e.eval_id"))
-          .join(trainIdx.as("t"),
-            col("c.train_id") === col("t.train_id") &&
-              col("e.shash") === col("t.shash"))
-          .groupBy(col("c.eval_id").as("eval_id"),
-            col("c.train_id").as("train_id"))
-          .agg(count(lit(1)).as("common"))
-    }
-    score(common, evalSizes, threshold)
+    val common = evalIdx.join(trainIdx, "shash")
+      .groupBy("eval_id", "train_id").agg(count(lit(1)).as("common"))
+    score(common, sizes(eval, idCol, textCol, n), threshold)
   }
 
   /** [[containmentPairs]] with the train-side index BLOOM-REDUCED at the
@@ -96,17 +71,15 @@ object Contamination {
     * exchange, so train-side shuffle volume falls from |corpus shingles|
     * to |true matches| + fpp·|corpus shingles|.
     *
-    * The result row-for-row EQUALS `containmentPairs(maxDf = None)`: a
+    * The result row-for-row EQUALS [[containmentPairs]]: a
     * Bloom filter has no false negatives, and a false positive's shingle
     * hash does not exist on the eval side of the equi-join, so every FP
     * dies in the exact join it was admitted to — fpp tunes shuffle
     * volume, never output. (`ContaminationSpec` asserts the equivalence
     * at fpp = 0.5, where false positives are guaranteed.)
     *
-    * Sizing: pass `expectedShingles` when the eval suite's shingle count
-    * is known (it usually is — benchmarks are fixed artifacts) and the
-    * build is a single treeAggregate job. Left at None, one
-    * approx_count_distinct job (±2%, padded 1.25×) sizes it — the filter
+    * Sizing: one approx_count_distinct job (±2%, padded 1.25×) sizes
+    * the filter, then one treeAggregate job builds it — the filter
     * is built over the RAW eval index either way, since duplicate inserts
     * are idempotent and a distinct() here would cost the very shuffle the
     * sketch exists to avoid. Undersizing degrades fpp, never rows.
@@ -117,15 +90,9 @@ object Contamination {
                             textCol: String, n: Int = 3,
                             threshold: Double = 0.5,
                             fpp: Double = 0.01,
-                            expectedShingles: Option[Long] = None,
                             filterBytes: Option[Array[Byte]] = None): DataFrame = {
     val evalIdx = index(eval, "eval", idCol, textCol, n)
-    val bytes = filterBytes.getOrElse {
-      val expected = math.max(expectedShingles.getOrElse(
-        (evalIdx.agg(approx_count_distinct(col("shash")).as("d"))
-          .head.getLong(0) * 1.25).toLong), 1L)
-      BloomJoin.buildFilter(evalIdx.select("shash"), "shash", expected, fpp)
-    }
+    val bytes = filterBytes.getOrElse(evalIdxFilter(evalIdx, fpp))
     val trainIdx = index(train, "train", idCol, textCol, n)
       .filter(graft.functions.BloomMightContain.mightContain(col("shash"), bytes))
     val common = evalIdx.join(trainIdx, "shash")
@@ -159,12 +126,11 @@ object Contamination {
                                     n: Int = 3, threshold: Double = 0.5,
                                     fpp: Double = 0.01,
                                     engageFactor: Double = 24.0,
-                                    expectedShingles: Option[Long] = None,
                                     filterBytes: Option[Array[Byte]] = None): DataFrame =
     if (filterBytes.isDefined ||
         train.count() >= engageFactor * math.max(eval.count(), 1L))
       containmentPairsBloom(train, eval, idCol, textCol, n, threshold, fpp,
-        expectedShingles, filterBytes)
+        filterBytes)
     else
       containmentPairs(train, eval, idCol, textCol, n, threshold)
 
@@ -173,12 +139,14 @@ object Contamination {
     * (the streaming gate's shape: build once at stream start, probe every
     * micro-batch). Sizing as in [[containmentPairsBloom]]. */
   def evalFilterBytes(eval: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, fpp: Double = 0.01,
-                      expectedShingles: Option[Long] = None): Array[Byte] = {
-    val evalIdx = index(eval, "eval", idCol, textCol, n)
-    val expected = math.max(expectedShingles.getOrElse(
-      (evalIdx.agg(approx_count_distinct(col("shash")).as("d"))
-        .head.getLong(0) * 1.25).toLong), 1L)
+                      n: Int = 3, fpp: Double = 0.01): Array[Byte] =
+    evalIdxFilter(index(eval, "eval", idCol, textCol, n), fpp)
+
+  /** Bloom filter over an eval shingle index, sized by one
+    * approx_count_distinct job. */
+  private def evalIdxFilter(evalIdx: DataFrame, fpp: Double): Array[Byte] = {
+    val expected = math.max((evalIdx.agg(approx_count_distinct(col("shash")))
+      .head.getLong(0) * 1.25).toLong, 1L)
     BloomJoin.buildFilter(evalIdx.select("shash"), "shash", expected, fpp)
   }
 

@@ -735,10 +735,6 @@ object Dedup {
     * aggregate (partial+final, elementwise-min merge) instead of 128
     * separate `min()` columns — the wide formulation cost ~2s of
     * whole-stage codegen per JVM before any row moved. */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3): DataFrame =
-    minhashSignaturesFromIndex(shingleIndex(docs, idCol, textCol, n)._1)
-
   private def minhashSignaturesFromIndex(index: DataFrame): DataFrame =
     index.groupBy(col("id")).agg(
       graft.functions.MinHashSketch

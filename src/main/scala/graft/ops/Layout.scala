@@ -39,14 +39,6 @@ object Layout {
       .drop("__z")
   }
 
-  /** Write `df` z-ordered on (`xCol`, `yCol`) as `files` parquet files.
-    * Each file's (min, max) footer stats on BOTH columns then span a
-    * bounded tile, which is what makes reader-side min/max skipping
-    * effective for 2-d box predicates. */
-  def writeZOrdered(df: DataFrame, path: String, xCol: String, yCol: String,
-                    files: Int): Unit =
-    zorder(df, xCol, yCol, files).write.mode("overwrite").parquet(path)
-
   /** Result of a [[compactFiles]] rewrite: what was on disk before and
     * the file count the rewrite targeted. */
   final case class CompactionStats(filesBefore: Int, bytesBefore: Long,
@@ -63,9 +55,9 @@ object Layout {
     * input bytes approximate output bytes. The rewrite is one
     * round-robin `repartition(n)` — even file sizes, no key skew by
     * construction — and content is preserved row-for-row (order is
-    * not, which parquet does not promise anyway). Use
-    * [[writeZOrdered]] instead when the rewrite should ALSO cluster
-    * for data skipping; this op is the layout-neutral form.
+    * not, which parquet does not promise anyway). Write the output of
+    * [[zorder]] instead when the rewrite should ALSO cluster for data
+    * skipping; this op is the layout-neutral form.
     */
   def compactFiles(spark: org.apache.spark.sql.SparkSession, inPath: String,
                    outPath: String,

@@ -60,6 +60,20 @@ object Linkage {
           i => xxhash64(s.substr(i, lit(q)))))
         .otherwise(array()))
 
+  /** (id, name) projection with side-prefixed column names. The inverted
+    * index carries ONLY (id, gram-hash) — 16-byte rows; the candidate
+    * distinct runs over id pairs, and names are re-attached from the
+    * compact (id, name) frames afterwards (distinct-ing rows that carry
+    * both name strings shuffled ~10× the bytes). */
+  private def sideNames(df: DataFrame, side: String,
+                        idCol: String, nameCol: String): DataFrame =
+    df.select(col(idCol).as(s"${side}_id"), col(nameCol).as(s"${side}_name"))
+
+  private def sideIndex(df: DataFrame, side: String,
+                        idCol: String, nameCol: String, q: Int): DataFrame =
+    sideNames(df, side, idCol, nameCol).select(col(s"${side}_id"),
+      explode(gramHashes(col(s"${side}_name"), q)).as("gh"))
+
   /** All (left_id, right_id, dist) pairs with levenshtein ≤ maxDist,
     * via q-gram inverted-index blocking + exact verify. Both inputs are
     * (id, name) projections; ids must be disjoint across sides only if
@@ -76,26 +90,11 @@ object Linkage {
     * every record's discriminative grams at any scale while an absolute
     * cap tuned at sf0.01 missed half the sf0.1 matches). Costs one
     * count() of the right side. */
-  /** (id, name) projection with side-prefixed column names. The inverted
-    * index carries ONLY (id, gram-hash) — 16-byte rows; the candidate
-    * distinct runs over id pairs, and names are re-attached from the
-    * compact (id, name) frames afterwards (distinct-ing rows that carry
-    * both name strings shuffled ~10× the bytes). */
-  private def sideNames(df: DataFrame, side: String,
-                        idCol: String, nameCol: String): DataFrame =
-    df.select(col(idCol).as(s"${side}_id"), col(nameCol).as(s"${side}_name"))
-
-  private def sideIndex(df: DataFrame, side: String,
-                        idCol: String, nameCol: String, q: Int): DataFrame =
-    sideNames(df, side, idCol, nameCol).select(col(s"${side}_id"),
-      explode(gramHashes(col(s"${side}_name"), q)).as("gh"))
-
   def qgramPairs(left: DataFrame, right: DataFrame,
                  idCol: String, nameCol: String,
                  maxDist: Int = 2, q: Int = 3,
                  maxDf: Option[Int] = None,
-                 maxDfRatio: Option[Double] = None,
-                 countPrune: Boolean = true): DataFrame = {
+                 maxDfRatio: Option[Double] = None): DataFrame = {
     require(maxDf.isEmpty || maxDfRatio.isEmpty,
       "maxDf and maxDfRatio are mutually exclusive")
     val li = cached(sideIndex(left, "left", idCol, nameCol, q))
@@ -104,8 +103,7 @@ object Linkage {
       .map(r => math.max(1L, math.ceil(r * right.count()).toLong).toInt)
       .orElse(maxDf)
     val ri = cached(cappedRight(ri0, cap0))
-    pairsFromIndexes(li, ri, left, right, idCol, nameCol,
-      maxDist, q, countPrune)
+    pairsFromIndexes(li, ri, left, right, idCol, nameCol, maxDist, q)
   }
 
   /** The right index restricted to grams with df ≤ cap (identity when no
@@ -129,41 +127,13 @@ object Linkage {
   private def pairsFromIndexes(li: DataFrame, ri: DataFrame,
                                left: DataFrame, right: DataFrame,
                                idCol: String, nameCol: String,
-                               maxDist: Int, q: Int,
-                               countPrune: Boolean): DataFrame = {
+                               maxDist: Int, q: Int): DataFrame = {
     def names(df: DataFrame, side: String): DataFrame =
       sideNames(df, side, idCol, nameCol)
-    // shared-gram COUNT per candidate pair (same shuffle as a distinct,
-    // but the count feeds an exact pigeonhole prune): an edit destroys at
-    // most q grams of either side, so a true pair at distance ≤ k shares
-    // ≥ keptGrams(side) − k·q of the SURVIVING (cap-kept) grams — pairs
-    // below the bound are provably beyond maxDist and skip the verify.
-    // On a tiny-vocabulary corpus this is the difference between
-    // verifying every gram-colliding pair and verifying ~the true pairs.
-    val candPairs = li.join(ri, "gh")
+    // candidate pairs: every (left, right) sharing a kept gram
+    val cands = li.join(ri, "gh")
       .groupBy("left_id", "right_id")
       .agg(count(lit(1)).as("c"))
-    // The prune pays for itself when the cap keeps MOST grams (diverse
-    // vocabularies — the bound keep−k·q is then close to keep and kills
-    // nearly every false candidate before its levenshtein). When an
-    // aggressive cap leaves only a handful of grams per record the bound
-    // approaches zero and the prune's extra joins are pure overhead —
-    // callers on tiny-vocabulary corpora can disable it.
-    val cands = if (!countPrune) candPairs else {
-      // kept-gram counts per id, on the same capped gram universe the
-      // join ran over (the left index joined a capped right, so shared
-      // counts are within the kept set; left's kept count needs the
-      // same filter)
-      val keptGrams = ri.select("gh").distinct()
-      val keepL = li.join(keptGrams, "gh")
-        .groupBy("left_id").agg(count(lit(1)).as("keep_l"))
-      val keepR = ri.groupBy("right_id").agg(count(lit(1)).as("keep_r"))
-      candPairs
-        .join(keepL, "left_id").join(keepR, "right_id")
-        .filter(col("c") >=
-          greatest(col("keep_l"), col("keep_r")) - lit(maxDist * q))
-        .select("left_id", "right_id", "c")
-    }
     val gramPairs = cands
       .join(names(left, "left"), "left_id")
       .join(names(right, "right"), "right_id")
@@ -251,16 +221,12 @@ object Linkage {
     *
     * Recall: the uncapped branch is the FULL pigeonhole contract — a
     * superset of the capped branch's recall, so flipping branches can
-    * only add true pairs, never lose one. `countPrune` applies to
-    * whichever branch runs (its payback condition — cap keeps most
-    * grams — is the engaged branch's diverse-vocab case, and on the
-    * uncapped branch every gram is kept, the best case for the bound). */
+    * only add true pairs, never lose one. */
   def qgramPairsAdaptive(left: DataFrame, right: DataFrame,
                          idCol: String, nameCol: String,
                          maxDist: Int = 2, q: Int = 3,
                          maxDfRatio: Double = 0.1,
-                         engageFactor: Double = 4.0,
-                         countPrune: Boolean = true): DataFrame = {
+                         engageFactor: Double = 4.0): DataFrame = {
     // ONE index build per side, shared by the probe and the chosen branch
     val li = cached(sideIndex(left, "left", idCol, nameCol, q))
     val ri0 = cached(sideIndex(right, "right", idCol, nameCol, q))
@@ -269,15 +235,13 @@ object Linkage {
     // gram join) and it deletes enough of the volume
     val engaged = cap.filter(_ => vol > engageFactor * math.max(volCapped, 1.0))
     if (engaged.isEmpty)
-      pairsFromIndexes(li, ri0, left, right, idCol, nameCol,
-        maxDist, q, countPrune)
+      pairsFromIndexes(li, ri0, left, right, idCol, nameCol, maxDist, q)
     else {
       // engaged: the capped index is a THIRD window entry (raw right +
       // capped right) — the raw cache feeds the cap's own df aggregation
       // and filter join, which the probe already materialized it for
       val ri = cached(cappedRight(ri0, engaged))
-      pairsFromIndexes(li, ri, left, right, idCol, nameCol,
-        maxDist, q, countPrune)
+      pairsFromIndexes(li, ri, left, right, idCol, nameCol, maxDist, q)
     }
   }
 
@@ -288,10 +252,9 @@ object Linkage {
                              idCol: String, nameCol: String,
                              maxDist: Int = 2, q: Int = 3,
                              maxDfRatio: Double = 0.1,
-                             engageFactor: Double = 4.0,
-                             countPrune: Boolean = true): DataFrame =
+                             engageFactor: Double = 4.0): DataFrame =
     bestOf(qgramPairsAdaptive(dirty, clean, idCol, nameCol, maxDist, q,
-      maxDfRatio, engageFactor, countPrune), dirty, clean, idCol, nameCol)
+      maxDfRatio, engageFactor), dirty, clean, idCol, nameCol)
 
   /** Best clean match per dirty record (min distance, then min clean id)
     * over [[qgramPairs]] candidates — the scale-safe composition of the
@@ -303,10 +266,9 @@ object Linkage {
                      idCol: String, nameCol: String,
                      maxDist: Int = 2, q: Int = 3,
                      maxDf: Option[Int] = None,
-                     maxDfRatio: Option[Double] = None,
-                     countPrune: Boolean = true): DataFrame =
+                     maxDfRatio: Option[Double] = None): DataFrame =
     bestOf(qgramPairs(dirty, clean, idCol, nameCol,
-      maxDist, q, maxDf, maxDfRatio, countPrune), dirty, clean, idCol, nameCol)
+      maxDist, q, maxDf, maxDfRatio), dirty, clean, idCol, nameCol)
 
   /** Shared best-match selection: min (dist, clean id) per dirty record,
     * names re-attached from the compact (id, name) frames. */

@@ -38,12 +38,14 @@ object Outliers {
     // (plain equi-join drops the group), and a group whose values are
     // ALL null — absent from the stats frames entirely — keeps its rows
     // with NULL med/mad and false is_outlier instead of vanishing
-    val med = Quantiles.groupedExactQuantileDouble(df, groupCol, valueCol, 0.5)
+    val med = Quantiles.groupedExactQuantilesDouble(df, groupCol, valueCol,
+        Seq("value" -> 0.5))
       .withColumnRenamed("value", "med").withColumnRenamed(groupCol, "__g")
     val withMed = df.join(broadcast(med), col(groupCol) <=> col("__g"), "left")
       .drop("__g")
       .withColumn("dev", abs(col(valueCol).cast("double") - col("med")))
-    val mad = Quantiles.groupedExactQuantileDouble(withMed, groupCol, "dev", 0.5)
+    val mad = Quantiles.groupedExactQuantilesDouble(withMed, groupCol, "dev",
+        Seq("value" -> 0.5))
       .withColumnRenamed("value", "mad").withColumnRenamed(groupCol, "__g")
     withMed.join(broadcast(mad), col(groupCol) <=> col("__g"), "left")
       .drop("__g")

@@ -3,22 +3,51 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Exact distributed quantiles over integral columns — the corpus-audit
+/** Exact distributed quantiles at ranks ⌈q·n⌉ — the corpus-audit
   * primitive behind "filter docs below the p10 quality length" style
-  * sweeps.
+  * sweeps, per group or over a whole column, for integral columns and
+  * (through the order-preserving IEEE-bits mapping) doubles.
   *
   * The usual exact route (global sort, or a single-partition window) is
   * a 100 TB scale-killer, and `approx_percentile` is neither exact nor
-  * engine-reproducible. This is the distributed selection algorithm
-  * instead: each pass histograms the surviving value range into `bins`
-  * equal-width buckets with ONE map-side-combined aggregation, locates
-  * the bucket holding the k-th value, and recurses into it. The value
-  * range shrinks by ~`bins`× per pass, so a full 64-bit range needs at
-  * most ⌈64/log₂bins⌉ = 7 passes at the default 1024 bins; each pass
-  * ships `bins` counters to the driver, never data rows. No sort, no
-  * repartition-to-1, no collect of values.
+  * engine-reproducible. Every entry runs ONE selection protocol
+  * ([[groupedExactQuantilesImpl]]; ungrouped = one constant group):
+  *
+  *  1. one fused bounds job: per group (min, max, count) and, for a
+  *     group of ≤ [[smallGroupCap]] values, its sorted values — such a
+  *     group resolves right there (the monitoring regime: one job);
+  *  2. for each still-unresolved group whose range plain refinement
+  *     could not finish in two rounds ([[seedPays]]), one grouped
+  *     `percentile_approx` job brackets every rank and one exact count
+  *     job verifies each bracket (gathering a small one's values in the
+  *     same job); a disproved bracket keeps the full range;
+  *  3. refinement rounds: each histograms every still-active range into
+  *     equal-width buckets with ONE map-side-combined aggregation, keeps
+  *     the bucket holding the rank, and gathers any range whose measured
+  *     count fits the gather caps.
+  *
+  * The sketch only brackets; exact counts decide every rank, so seeding
+  * changes the job count, never a bit of the output. No sort, no
+  * repartition-to-1; the driver sees counters and bounded gathers only.
   */
 object Quantiles {
+
+  /** Histogram width of the grouped protocol (auto-shrunk so a round
+    * ships ≤ ~2²⁰ counters across all active (group, rank) ranges). */
+  private val GroupedBins = 1024
+
+  /** Ungrouped = ONE group, so the whole ≤2²⁰-counters-per-round reduce
+    * budget belongs to it. Only non-empty buckets ship, so a round's
+    * reduce input never exceeds min(2²⁰, rows-in-range) counters, while
+    * a wide bracket (IEEE-bits doubles span ~2⁴⁰ after verify) resolves
+    * in 1-2 rounds instead of the ~4 that 1024 bins pay (measured on
+    * the customer mart at 10×: the per-round full-column scans were the
+    * cell's whole superlinear residue). */
+  private val UngroupedBins = 1 << 20
+
+  /** Rank error of the seeding `percentile_approx` sketch: brackets sit
+    * at q ∓ 2ε with accuracy 1/ε. */
+  private val SketchRelError = 0.01
 
   /** Gather fast-path caps: a (group, rank) whose VERIFIED in-bracket
     * count is ≤ per-key cap may collect its bracket values in one job
@@ -95,15 +124,6 @@ object Quantiles {
         org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)))
       .toDF()
 
-  /** Exact k-th smallest (1-based, duplicates counted) of integral
-    * column `valueCol`. Requires 1 ≤ k ≤ count; one aggregate action per
-    * refinement pass plus one bounds scan. */
-  def exactKth(df: DataFrame, valueCol: String, k: Long, bins: Int = 1024): Long =
-    withProtocolConf(df.sparkSession) {
-      val (lo, hi, n) = bounds(df, valueCol)
-      selectKth(df, valueCol, k, lo, hi, n, bins)
-    }
-
   /** Saturating `a + b` for the refinement upper bound: when the
     * surviving range abuts Long.MaxValue (a column containing it),
     * `newLo + width - 1` would wrap negative and silently return a wrong
@@ -115,134 +135,64 @@ object Quantiles {
     else s
   }
 
-  /** One (min, max, count) scan — shared by all selections over the same
-    * column so multi-quantile calls don't rescan per rank. */
-  private def bounds(df: DataFrame, valueCol: String): (Long, Long, Long) = {
-    val v = col(valueCol).cast("long")
-    val b = df.agg(min(v).as("lo"), max(v).as("hi"), count(v).as("n")).head()
-    require(!b.isNullAt(0), "column has no non-null values")
-    (b.getLong(0), b.getLong(1), b.getLong(2))
-  }
-
-  private def selectKth(df: DataFrame, valueCol: String, k: Long,
-                        initLo: Long, initHi: Long, n: Long, bins: Int): Long = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(k <= n, s"k=$k exceeds count=$n")
-    val v = col(valueCol).cast("long")
-    var lo = initLo
-    var hi = initHi
-    var kk = k
-    // a range spanning both signs can overflow (hi - lo) and (v - lo):
-    // split at zero first (one count job), then each side spans < 2^63
-    if (lo < 0 && hi > 0) {
-      val nNeg = df.filter(v >= lo && v < 0).count()
-      if (kk <= nNeg) hi = -1L else { kk -= nNeg; lo = 0L }
-    }
-    while (lo < hi) {
-      // ceil-div keeps bucket count <= bins; after the zero-split both
-      // bounds share a sign so (hi - lo) can't wrap, and the upper-bound
-      // update saturates (satAdd) so a range abutting Long.MaxValue is safe
-      val width = math.max(1L, (hi - lo) / bins + 1L)
-      // integer `div`, NOT `/`: Spark's `/` on longs is double division,
-      // which loses exactness above 2^53
-      val hist = df.select(v.as("__v")).filter(col("__v") >= lo && col("__v") <= hi)
-        .groupBy(expr(s"(__v - ${lo}L) div ${width}L").as("b"))
-        .agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-      var cum = 0L
-      var i = 0
-      while (cum + hist(i)._2 < kk) { cum += hist(i)._2; i += 1 }
-      kk -= cum
-      val b = hist(i)._1
-      val newLo = lo + b * width
-      hi = math.min(hi, satAdd(newLo, width - 1))
-      lo = newLo
-    }
-    lo
-  }
-
   /** Exact quantiles at ranks ⌈q·n⌉ (percentile-disc style, lower
-    * rounding via ⌈⌉ on the 1-based rank). Returns (q, value) pairs.
-    * Runs as the grouped protocol over one constant group: a small
-    * column (n ≤ the capped-sort gate) resolves in ONE fused job;
-    * larger columns run bounds + batched refinement. */
+    * rounding via ⌈⌉ on the 1-based rank) of integral column
+    * `valueCol`; NULLs are ignored. Returns (q, value) pairs. A column
+    * of ≤ [[smallGroupCap]] values resolves in ONE fused job; larger
+    * columns run the protocol (object scaladoc). */
   def exactQuantiles(df: DataFrame, valueCol: String,
                      qs: Seq[Double]): Seq[(Double, Long)] =
-    exactQuantilesVia(df, valueCol, qs, None, 1024)
-
-  /** [[exactQuantiles]] accelerated by a one-pass GK sketch — SAME exact
-    * result, fewer scans on wide-range columns: the grouped seeded
-    * protocol over one constant group. Small columns resolve in the ONE
-    * fused capped-sort job; big columns pay sketch + verify + bounded
-    * gather (zero refinement rounds when the verified bracket is small)
-    * and fall back to refinement only past the gather caps. Correctness
-    * never rests on the sketch — every bracket is verified with exact
-    * counts, so the output is bit-identical to [[exactQuantiles]]. */
-  def exactQuantilesSeeded(df: DataFrame, valueCol: String, qs: Seq[Double],
-                           relativeError: Double = 0.01,
-                           bins: Int = 1024): Seq[(Double, Long)] = {
-    require(relativeError > 0 && relativeError < 0.25,
-      s"relativeError out of (0, 0.25): $relativeError")
-    exactQuantilesVia(df, valueCol, qs, Some(relativeError), bins)
-  }
+    exactQuantilesVia(df, valueCol, qs)
 
   /** Ungrouped quantiles = the grouped protocol over `lit(1)`: one code
     * path to test and tune, and the constant group costs nothing (the
     * fused aggregation's single hash bucket). */
   private def exactQuantilesVia(df: DataFrame, valueCol: String,
-                                qs: Seq[Double], relError: Option[Double],
-                                bins: Int,
+                                qs: Seq[Double],
                                 known: Option[(Long, Long, Long)] = None,
                                 knownSketch: Option[Seq[Long]] = None
                                ): Seq[(Double, Long)] = {
     qs.foreach(q => require(q > 0.0 && q <= 1.0, s"quantile out of (0,1]: $q"))
     val names = qs.indices.map(i => s"__q$i")
-    // Ungrouped = ONE group, so the whole ≤2²⁰-counters-per-round reduce
-    // budget belongs to it: grow the histogram to the full budget. Only
-    // non-empty buckets ship, so a round's reduce input never exceeds
-    // min(2²⁰, rows-in-range) counters either way, while a wide sketch
-    // bracket (IEEE-bits doubles span ~2⁴⁰ after verify) resolves in 1-2
-    // rounds instead of the ~4 that 1024 bins pay (measured on the
-    // customer mart at 10×: the per-round full-column scans were the
-    // cell's whole superlinear residue).
     val out = groupedExactQuantilesImpl(df.withColumn("__cg", lit(1)),
-      "__cg", valueCol, names.zip(qs), math.max(bins, 1 << 20), relError,
-      known, knownSketch)
+      "__cg", valueCol, names.zip(qs), UngroupedBins, known, knownSketch)
     val rows = out.collect()
     require(rows.nonEmpty, "column has no non-null values")
     val r = rows.head
     qs.zipWithIndex.map { case (q, i) => q -> r.getLong(i + 1) }
   }
 
-  /** [[exactQuantilesSeeded]] for a caller that ALREADY KNOWS the
-    * column's non-null count and exact min/max (typically folded into a
-    * count aggregation it runs anyway): skips the protocol's fused
-    * bounds job entirely — the sketch/verify/gather jobs seed straight
-    * from the supplied bounds. Bit-identical output ([[exactQuantiles]]
-    * contract). The capped-sort small-column gate is also skipped, so
-    * reserve this for columns past that gate (> ~2¹⁷ values); small
-    * columns resolve cheaper through [[exactQuantilesSeeded]]'s fused
-    * bounds job. Wrong (non-superset) bounds would silently select
-    * wrong values — `nn`/`lo`/`hi` must be the exact aggregates. */
+  /** [[exactQuantiles]] for a caller that ALREADY KNOWS the column's
+    * non-null count and exact min/max (typically folded into a count
+    * aggregation it runs anyway). Past the small-column gate the
+    * protocol skips its fused bounds job and seeds straight from the
+    * supplied bounds — and, with a caller `sketch` ((lo, hi) per rank),
+    * skips its percentile job too; at or under the gate the fused job
+    * resolves the column in one pass, which no seeding can beat.
+    * Bit-identical output either way. Wrong (non-superset) bounds would
+    * silently select wrong values — `nn`/`lo`/`hi` must be the exact
+    * aggregates; a wrong sketch only costs speed. */
   private[graft] def exactQuantilesKnownBounds(
       df: DataFrame, valueCol: String, qs: Seq[Double],
       nn: Long, lo: Long, hi: Long,
-      relativeError: Double = 0.01,
       sketch: Option[Seq[Long]] = None): Seq[(Double, Long)] = {
     require(nn > 0, s"need a positive non-null count, got $nn")
     require(lo <= hi, s"lo > hi: $lo > $hi")
     sketch.foreach(ps => require(ps.size == 2 * qs.size,
       s"sketch must carry (lo, hi) per rank: ${ps.size} values for ${qs.size} ranks"))
-    exactQuantilesVia(df, valueCol, qs, Some(relativeError), 1024,
-      Some((nn, lo, hi)), sketch)
+    exactQuantilesVia(df, valueCol, qs,
+      Some((nn, lo, hi)).filter(_ => nn > smallGroupCap), sketch)
   }
 
-  /** The capped-sort small-column gate ([[smallGroupCap]]), for callers
-    * choosing between [[exactQuantilesSeeded]] (fused bounds job
-    * resolves ≤-cap columns in ONE pass) and
-    * [[exactQuantilesKnownBounds]] (skips the bounds job — right past
-    * the gate). */
-  private[graft] def smallColumnGate: Long = smallGroupCap
+  /** Seeding pays for a range exactly when plain refinement at `bins`
+    * buckets could need more than two rounds: round r leaves a span of
+    * ⌊span/binsʳ⌋, so two rounds always finish a span < bins². That
+    * separates the two regimes the protocol sees — bits-mapped doubles
+    * (~2⁶²: ~4-7 rounds plain, ~3 jobs seeded) from document-length
+    * style ranges (≤ 2 rounds plain, where the sketch job would cost
+    * more than it saves). */
+  private def seedPays(range: (Long, Long), bins: Int): Boolean =
+    BigInt(range._2) - BigInt(range._1) >= BigInt(bins) * bins
 
   /** Clamp a sketch double to a widened long bound inside [lo, hi]:
     * ±one ulp of padding absorbs the double's representation error (a
@@ -261,75 +211,42 @@ object Quantiles {
     }
   }
 
-  /** Exact per-group quantile at rank ⌈q·n_g⌉ — the scalable form of a
-    * `row_number() over (partition by g)` median: a partitioned window
-    * puts each whole group in ONE task (fine for 5 languages at sf0.1,
-    * a straggler/OOM once a group holds billions of rows), while this
-    * runs the same refinement passes as [[exactQuantiles]] with the
-    * histogram keyed by (group, bucket) — every round is ONE
-    * map-side-combined aggregation covering ALL still-active groups, so
-    * the pass count stays ≤ 7 regardless of group count or skew.
+  /** Exact per-group quantiles at ranks ⌈q·n_g⌉ in ONE shared protocol —
+    * the scalable form of a `row_number() over (partition by g)` median:
+    * a partitioned window puts each whole group in ONE task (fine for 5
+    * languages at sf0.1, a straggler/OOM once a group holds billions of
+    * rows), while here every job covers ALL still-active (group, rank)
+    * pairs: the same bounds job, one sketch and verify job, one sign-split
+    * job, and refinement rounds keyed by (group, rank, bucket). Several
+    * ranks cost one protocol with a slightly wider histogram key — the
+    * [[Scaling.robustScale]] shape (p25/p50/p75) at a third of the passes
+    * of three one-rank calls.
     *
-    * Driver state is O(groups) and each round ships ≤ groups·bins
-    * counters; `bins` auto-shrinks so that stays ≤ ~2²⁰ per round. Meant
-    * for categorical group domains (languages, sources, shards — up to
-    * ~10⁵ groups), not high-cardinality keys. Rows with a NULL group key
-    * form their own group (SQL GROUP BY semantics); NULL values are
-    * ignored (not counted in n_g).
+    * Driver state is O(groups · ranks) and each round ships ≤ ~2²⁰
+    * counters. Meant for categorical group domains (languages, sources,
+    * shards — up to ~10⁵ groups), not high-cardinality keys. Rows with a
+    * NULL group key form their own group (SQL GROUP BY semantics); NULL
+    * values are ignored (not counted in n_g); a group with no non-null
+    * value has no row.
     *
-    * Returns (groupCol [original type], value LONG), one row per group. */
-  def groupedExactQuantile(df: DataFrame, groupCol: String, valueCol: String,
-                           q: Double, bins: Int = 1024): DataFrame =
-    groupedExactQuantiles(df, groupCol, valueCol, Seq("value" -> q), bins)
-
-  /** Multiple exact per-group quantiles in ONE shared protocol — the
-    * same bounds scan, the same sign-split job, and refinement rounds
-    * that cover every still-active (group, rank) pair in one
-    * map-side-combined aggregation each. Three separate
-    * [[groupedExactQuantile]] calls cost three full protocols over the
-    * input; this costs one protocol with a slightly wider histogram key
-    * — the [[Scaling.robustScale]] shape (p25/p50/p75) at a third of the
-    * passes. `rankSpecs` maps output column name → quantile in (0, 1].
-    * Returns one row per group: (groupCol [original type], <name> LONG
-    * per rank). */
+    * `rankSpecs` maps output column name → quantile in (0, 1]. Returns
+    * one row per group: (groupCol [original type], <name> LONG per
+    * rank). */
   def groupedExactQuantiles(df: DataFrame, groupCol: String, valueCol: String,
-                            rankSpecs: Seq[(String, Double)],
-                            bins: Int = 1024): DataFrame =
-    groupedExactQuantilesImpl(df, groupCol, valueCol, rankSpecs, bins, None)
-
-  /** [[groupedExactQuantiles]] accelerated by one grouped
-    * `percentile_approx` pass — SAME exact result (bit-for-bit): the
-    * sketch only BRACKETS each (group, rank) target, one exact count
-    * job verifies every bracket, and disproved brackets fall back to
-    * the full range for that (group, rank). Worth it exactly when the
-    * value range is wide — ~7 full refinement passes collapse to
-    * sketch + verify + ~1 refine. [[groupedExactQuantileDouble]] seeds
-    * by default: IEEE-bits-mapped doubles always span a wide long
-    * range. Narrow integral columns (document lengths: ≤ 2 passes
-    * unseeded) should stay on the plain form — the sketch pass costs
-    * more than it saves there. */
-  def groupedExactQuantilesSeeded(df: DataFrame, groupCol: String,
-                                  valueCol: String,
-                                  rankSpecs: Seq[(String, Double)],
-                                  relativeError: Double = 0.01,
-                                  bins: Int = 1024): DataFrame = {
-    require(relativeError > 0 && relativeError < 0.25,
-      s"relativeError out of (0, 0.25): $relativeError")
-    groupedExactQuantilesImpl(df, groupCol, valueCol, rankSpecs, bins,
-      Some(relativeError))
-  }
+                            rankSpecs: Seq[(String, Double)]): DataFrame =
+    groupedExactQuantilesImpl(df, groupCol, valueCol, rankSpecs, GroupedBins)
 
   private def groupedExactQuantilesImpl(
       df: DataFrame, groupCol: String, valueCol: String,
       rankSpecs: Seq[(String, Double)], bins: Int,
-      seedRelError: Option[Double],
       // (nn, lo, hi) for the single-constant-group caller that already
       // counted/bounded the column: skips the fused bounds job (and with
       // it the capped-sort small-column gate)
       ungroupedKnown: Option[(Long, Long, Long)] = None,
-      // caller-supplied percentile sketch for the single known group,
-      // laid out (bracket_lo, bracket_hi) per rank in rankSpecs order:
-      // skips the percentile_approx job too. The exact bracket-verify
+      // caller-supplied percentile sketch for the single group, laid
+      // out (bracket_lo, bracket_hi) per rank in rankSpecs order: always
+      // used when the group is unresolved (it costs no job), in place
+      // of the percentile_approx job. The exact bracket-verify
       // count still runs, so a stale/loose sketch only costs speed
       // (disproved brackets fall back to the full range), never
       // correctness.
@@ -353,7 +270,7 @@ object Quantiles {
     // every rank EXECUTOR-side (only ≤|groups| result rows reach the
     // driver). Small groups (the monitoring regime: hours, languages,
     // event types) finish right here with zero further jobs; a big
-    // group's NULL overflow marker routes it to the seeded selection
+    // group's NULL overflow marker routes it to the selection
     // protocol below. Results are bit-identical on both paths — the same
     // GREATEST(1, ceil(q·n)) rank definition, exact selection.
     val rankCols = rankSpecs.map { case (name, q) =>
@@ -366,7 +283,7 @@ object Quantiles {
         // caller-supplied single-group bounds: synthesize the one bounds
         // row (group value matches exactQuantilesVia's `lit(1)`) with a
         // NULL capped-sort marker so the rank columns stay unresolved
-        // and the seeded protocol below does the selection
+        // and the protocol below does the selection
         // Seq[Any] guards the Int group value against Scala's literal
         // widening (Seq(1, lo: Long, ...) would unify to Seq[Long] and
         // box the group as a Long where the schema says IntegerType)
@@ -381,8 +298,9 @@ object Quantiles {
         .select(Seq(col("__g"), col("lo"), col("hi"), col("n")) ++ rankCols: _*)
         .collect()
     }
-    // groups with only NULL values have no quantile; drop them like
-    // exactKth's require, but per-group and non-fatal. State is keyed by
+    // groups with only NULL values have no quantile; drop them (per
+    // group, non-fatal — exactQuantiles turns an empty result into a
+    // require failure). State is keyed by
     // (group value, rank name) — resolved ranks enter converged, big
     // groups enter with their full range for the protocol to refine.
     var state: Map[(Any, String), (Long, Long, Long)] = boundsRows.iterator
@@ -418,13 +336,14 @@ object Quantiles {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
 
-    // sketch-seeded bracketing (groupedExactQuantilesSeeded), for the
-    // groups the small-group gate did NOT resolve: one grouped
-    // percentile_approx job (semi-joined down to the still-active groups
-    // when the gate resolved some) brackets every (group, rank) at
-    // φ = q ∓ 2ε, one exact count job verifies all brackets, disproved
-    // brackets keep the full range — output identical either way (the
-    // exactQuantilesSeeded protocol, grouped). Bracket endpoints widen
+    // sketch-seeded bracketing, for the groups the small-group gate did
+    // NOT resolve and whose range is too wide for two plain refinement
+    // rounds (seedPays — the protocol decides, never the caller; a
+    // caller-supplied sketch costs no job and always rides): one grouped
+    // percentile_approx job (semi-joined down to the seeded groups when
+    // others exist) brackets every (group, rank) at φ = q ∓ 2ε, one
+    // exact count job verifies all brackets, disproved brackets keep the
+    // full range — output identical either way. Bracket endpoints widen
     // by one ulp (bracketLong) so the long→double conversion of wide
     // bits-values can't shave the target.
     // EXACT in-range row counts per still-active (group, rank), kept
@@ -435,23 +354,25 @@ object Quantiles {
     // refining the range to width 1. Never estimated — an optimistic
     // count would un-bound the gather's executor buffer.
     var exactCnt = Map.empty[(Any, String), Long]
-    seedRelError.foreach { re =>
-      val activeGs = state.collect {
-        case ((gv, _), (lo, hi, _)) if lo < hi => gv }.toSet
+    val seedGs: Set[Any] = state.collect {
+      case ((gv, _), (lo, hi, _)) if lo < hi && (ungroupedSketch.isDefined ||
+          seedPays(groupBounds(gv), effBins)) => gv
+    }.toSet
+    if (seedGs.nonEmpty) {
       val sk: Map[Any, Seq[Long]] =
-        if (activeGs.isEmpty) Map.empty
-        else if (ungroupedSketch.isDefined)
-          activeGs.iterator.map(gv => gv -> ungroupedSketch.get).toMap
+        if (ungroupedSketch.isDefined)
+          seedGs.iterator.map(gv => gv -> ungroupedSketch.get).toMap
         else {
+        val re = SketchRelError
         val probes = rankSpecs.flatMap { case (_, q) =>
           Seq(math.max(0.0, q - 2 * re), math.min(1.0, q + 2 * re)) }
-        val acc = math.max(100, math.ceil(1.0 / re).toInt)
+        val acc = math.ceil(1.0 / re).toInt
         val probesSql = probes.mkString("array(", ",", ")")
         val base = df.select(g.as("__gv"), v.as("__v"))
         val src =
-          if (activeGs.size == nByG.size) base
+          if (seedGs.size == nByG.size) base
           else base.join(
-            broadcast(localRows(spark, activeGs.toSeq.map(Row(_)),
+            broadcast(localRows(spark, seedGs.toSeq.map(Row(_)),
               StructType(Seq(groupField)))),
             col("__gv") <=> col("__g"), "leftsemi")
         src.groupBy(col("__gv"))
@@ -659,32 +580,16 @@ object Quantiles {
     } finally if (ownCache) df.unpersist(blocking = false)
   }
 
-  /** [[groupedExactQuantile]] for DOUBLE columns: values ride the
+  /** [[groupedExactQuantiles]] for DOUBLE columns: values ride the
     * order-preserving IEEE-bits mapping ([[graft.functions.SortableDoubleBits]],
-    * codegen'd) through the grouped selection and map back on the
-    * driver — the result frame is per-group (tiny) either way.
-    *
-    * Seeds by default (`seeded = false` opts out): bits-mapped doubles
-    * span a ~2⁶² long range, where the plain refinement pays ~7 full
-    * passes and the sketch+verify+refine path pays ~3 — the
-    * [[groupedExactQuantilesSeeded]] contract keeps the result
-    * bit-identical either way. */
-  def groupedExactQuantileDouble(df: DataFrame, groupCol: String, valueCol: String,
-                                 q: Double, bins: Int = 1024,
-                                 seeded: Boolean = true): DataFrame =
-    groupedExactQuantilesDouble(df, groupCol, valueCol, Seq("value" -> q),
-      bins, seeded)
-
-  /** Multiple exact per-group DOUBLE quantiles in one shared protocol —
-    * the multi-rank [[groupedExactQuantileDouble]]: all ranks ride the
-    * IEEE-bits mapping through ONE grouped selection (seeded by default
-    * — bits ranges are always wide) and map back on the driver. One row
-    * per group: (groupCol, <name> DOUBLE per rank). */
+    * codegen'd; ±0.0 compare equal, NaN sorts last as in SQL ORDER BY)
+    * through ONE grouped selection and map back on the driver — the
+    * result frame is per-group (tiny) either way. Bits-mapped ranges
+    * are wide (~2⁶²), so an unresolved group is seeded. One row per
+    * group: (groupCol, <name> DOUBLE per rank). */
   def groupedExactQuantilesDouble(df: DataFrame, groupCol: String,
                                   valueCol: String,
-                                  rankSpecs: Seq[(String, Double)],
-                                  bins: Int = 1024,
-                                  seeded: Boolean = true): DataFrame = {
+                                  rankSpecs: Seq[(String, Double)]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
     val spark = df.sparkSession
@@ -693,11 +598,7 @@ object Quantiles {
     // common all-small case is ONE job and caching would be pure overhead
     val mapped = df.select(col(groupCol), graft.functions.SortableDoubleBits
       .sortableDoubleBits(col(valueCol).cast("double")).as("__s"))
-    val sel =
-      if (seeded)
-        groupedExactQuantilesSeeded(mapped, groupCol, "__s", rankSpecs,
-          bins = bins)
-      else groupedExactQuantiles(mapped, groupCol, "__s", rankSpecs, bins)
+    val sel = groupedExactQuantiles(mapped, groupCol, "__s", rankSpecs)
     val rows = sel.collect().map { r =>
       Row.fromSeq(r.get(0) +: rankSpecs.indices.map(i =>
         graft.functions.SortableDoubleBits.fromSortable(r.getLong(i + 1))))
@@ -709,37 +610,13 @@ object Quantiles {
         StructField(name, DoubleType, nullable = false) }))
   }
 
-  /** Exact k-th smallest of a DOUBLE column: the values are mapped
-    * through the order-preserving IEEE bits transform
-    * ([[graft.functions.SortableDoubleBits]], codegen'd), selected as
-    * longs, and mapped back — same pass structure and exactness as the
-    * integral path (±0.0 compare equal; NaN sorts last, matching SQL
-    * ORDER BY). */
-  def exactKthDouble(df: DataFrame, valueCol: String, k: Long,
-                     bins: Int = 1024): Double = {
-    val mapped = df.select(graft.functions.SortableDoubleBits
-      .sortableDoubleBits(col(valueCol).cast("double")).as("__s"))
-    graft.functions.SortableDoubleBits.fromSortable(
-      exactKth(mapped, "__s", k, bins))
-  }
-
-  /** [[exactQuantiles]] for DOUBLE columns (ranks ⌈q·n⌉). Seeded by
-    * default — bits-mapped doubles span a ~2⁶² long range, where the
-    * plain refinement pays ~7 full passes and the seeded
-    * sketch+verify+gather path pays ~3 ([[exactQuantilesSeeded]]'s
-    * exactness contract makes the result bit-identical either way) —
-    * and the (bits) projection is persisted across the protocol's
-    * driver-coordinated rounds so each pass reads the compact cached
-    * column, not the source scan + lineage. */
+  /** [[exactQuantiles]] for DOUBLE columns (ranks ⌈q·n⌉), through the
+    * same IEEE-bits mapping as [[groupedExactQuantilesDouble]]. */
   def exactQuantilesDouble(df: DataFrame, valueCol: String,
-                           qs: Seq[Double],
-                           seeded: Boolean = true): Seq[(Double, Double)] = {
+                           qs: Seq[Double]): Seq[(Double, Double)] = {
     val mapped = df.select(graft.functions.SortableDoubleBits
       .sortableDoubleBits(col(valueCol).cast("double")).as("__s"))
-    val sel =
-      if (seeded) exactQuantilesSeeded(mapped, "__s", qs)
-      else exactQuantiles(mapped, "__s", qs)
-    sel.map { case (q, s) =>
+    exactQuantiles(mapped, "__s", qs).map { case (q, s) =>
       q -> graft.functions.SortableDoubleBits.fromSortable(s)
     }
   }

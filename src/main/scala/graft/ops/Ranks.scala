@@ -365,19 +365,11 @@ object Ranks {
       }
     }
     val defined = ks.flatten.distinct
-    // Double/float columns ride the IEEE-bits mapping whose long range
-    // spans ~2⁶² — there the seeded protocol (sketch + verify + gather)
-    // resolves in ~4 bounded jobs where plain refinement pays ~7 full
-    // histogram rounds (measured 1.7 s → 1.3 s on the customer mart's
-    // SALE_AMOUNT at sf0.1). Integrals/decimals keep the plain form:
-    // their ranges are narrow enough that refinement converges in ≤ 2
-    // rounds and the sketch pass would cost more than it saves.
     // The selection runs ungrouped (one group) so every reduce input is
     // bounded by construction: AQE's only contribution would be 2-3
     // stage-materialization jobs per action to coalesce already-tiny
     // exchanges — pin it off (plus a narrow reduce width) for the
     // selection window, AFTER the materializing count above.
-    val wideRange = dt == DoubleType || dt == FloatType
     val shufKey = "spark.sql.shuffle.partitions"
     val spark0 = df.sparkSession
     val smallShuf = math.min(8, spark0.conf.get(shufKey, "200").toInt).toString
@@ -406,17 +398,12 @@ object Ranks {
             Some(pairs.flatMap(p => Seq(p.get._1, p.get._2)))
           else None
         }
-        val got =
-          if (nn > graft.ops.Quantiles.smallColumnGate)
-            // big column: the count agg above already carried exact
-            // min/max (and usually the sketch), so the selection skips
-            // its bounds scan — and with a covering sketch, its
-            // percentile job too: verify + gather only
-            graft.ops.Quantiles.exactQuantilesKnownBounds(
-              sel, "__sel", qsFrac, nn, selLo, selHi, sketch = sketchSeq)
-          else if (wideRange)
-            graft.ops.Quantiles.exactQuantilesSeeded(sel, "__sel", qsFrac)
-          else graft.ops.Quantiles.exactQuantiles(sel, "__sel", qsFrac)
+        // the count agg above already carried exact min/max (and usually
+        // the sketch): a big column skips the selection's bounds scan —
+        // and with a covering sketch, its percentile job too — while a
+        // small one resolves in the selection's one fused job
+        val got = graft.ops.Quantiles.exactQuantilesKnownBounds(
+          sel, "__sel", qsFrac, nn, selLo, selHi, sketch = sketchSeq)
         got.zip(defined).map { case ((_, v), k) => k -> v }.toMap
       }
 

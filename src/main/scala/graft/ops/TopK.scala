@@ -32,10 +32,6 @@ object TopK {
   /** Descending contribution of a double column (order-preserving bits). */
   def ordDescDouble(c: Column): Column = SortableDoubleBits.sortableDoubleBits(c)
 
-  /** Ascending contribution of a double column. */
-  def ordAscDouble(c: Column): Column =
-    SortableDoubleBits.sortableDoubleBits(c).bitwiseXOR(lit(-1L))
-
   /** Top-k rows per group. Output: groupCols, `rk` (1-based, best first),
     * then payloadCols. */
   def topKPerGroup(df: DataFrame, groupCols: Seq[String], ordKeys: Seq[Column],

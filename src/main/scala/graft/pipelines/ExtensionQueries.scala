@@ -974,21 +974,6 @@ object ExtensionQueries {
 
     }),
 
-    // the sketch-SEEDED exact selection: a one-pass GK sketch brackets
-    // each target value, one counting job verifies the bracket, and the
-    // refinement runs inside it — bit-identical output (this entry shares
-    // the exact rank-definition oracle below), fewer full scans on
-    // wide-range columns; an invalid bracket falls back to the full
-    // range, so the sketch can speed up but never corrupt
-    "q_text_length_quantiles_seeded" -> ((s, dir) => {
-      import s.implicits._
-      graft.ops.Quantiles
-        .exactQuantilesSeeded(docs(s, dir), "n_chars", Seq(0.50, 0.90, 0.99))
-        .map { case (q, v) => (f"p${(q * 100).toInt}%02d", v) }
-        .toDF("metric", "value")
-
-    }),
-
     // quantile-threshold sweep: keep docs at or above the corpus median
     // length — the Quantiles selection composed as a filter cutoff (the
     // scalar is computed by distributed selection, never a global sort)
@@ -1021,7 +1006,8 @@ object ExtensionQueries {
     "q_lang_median_scalable" -> ((s, dir) => {
       val d = docs(s, dir)
       val t = d.schema("n_chars").dataType
-      graft.ops.Quantiles.groupedExactQuantile(d, "lang", "n_chars", 0.5)
+      graft.ops.Quantiles.groupedExactQuantiles(d, "lang", "n_chars",
+          Seq("value" -> 0.5))
         .select(col("lang"), col("value").cast(t).as("median_n_chars"))
 
     }),
@@ -1569,7 +1555,7 @@ object ExtensionQueries {
   )
 
   val oracles: Map[String, String] = Map(
-    // rank definition mirrors Quantiles.groupedExactQuantile:
+    // rank definition mirrors Quantiles.groupedExactQuantiles:
     // k = GREATEST(1, ceil(q·n_g)), lower value on ties
     "q_scale_robust" ->
       """WITH s AS (SELECT lang, n_chars,
@@ -2525,22 +2511,6 @@ object ExtensionQueries {
         |  WHERE rn = GREATEST(1, CAST(ceil(0.99 * n) AS BIGINT)))
         |ORDER BY metric""".stripMargin,
 
-    // the seeded path must be BIT-IDENTICAL to the exact one — same oracle
-    "q_text_length_quantiles_seeded" ->
-      """WITH s AS (SELECT n_chars, ROW_NUMBER() OVER (ORDER BY n_chars) AS rn
-        |           FROM documents),
-        |n AS (SELECT COUNT(*) AS n FROM documents)
-        |SELECT * FROM (
-        |  SELECT 'p50' AS metric, s.n_chars AS value FROM s, n
-        |  WHERE rn = GREATEST(1, CAST(ceil(0.50 * n) AS BIGINT))
-        |  UNION ALL
-        |  SELECT 'p90', s.n_chars FROM s, n
-        |  WHERE rn = GREATEST(1, CAST(ceil(0.90 * n) AS BIGINT))
-        |  UNION ALL
-        |  SELECT 'p99', s.n_chars FROM s, n
-        |  WHERE rn = GREATEST(1, CAST(ceil(0.99 * n) AS BIGINT)))
-        |ORDER BY metric""".stripMargin,
-
     "q_emb_normalize" ->
       s"""WITH n AS (
          |  SELECT vec_id, embedding, sqrt(${sqlDot("embedding", "embedding")}) AS nrm
@@ -3161,7 +3131,7 @@ object ExtensionQueries {
         |        JOIN u u2 ON pc.w2 = u2.token, nu, nb
         |ORDER BY lift DESC, w1, w2 LIMIT 100""".stripMargin,
 
-    // rank definition mirrors Quantiles.groupedExactQuantileDouble:
+    // rank definition mirrors Quantiles.groupedExactQuantilesDouble:
     // k = GREATEST(1, ceil(0.5·n_g)) over non-null values, lower on ties;
     // dev and the 3×MAD threshold are single IEEE double ops
     "q_outlier_mad" ->

@@ -666,7 +666,7 @@ object OperatorQueries {
         // scale (measured: the probe's cache pre-materialization makes
         // engaged-adaptive faster than even the direct capped call)
         (graft.ops.Linkage.qgramBestMatchAdaptive(dirty, corpus, "doc_id",
-            "name", maxDist = 2, q = 3, maxDfRatio = 0.1, countPrune = false))
+            "name", maxDist = 2, q = 3, maxDfRatio = 0.1))
       }),
       """WITH corpus AS (
         |  SELECT doc_id, substr(text, 1, 40) AS nm FROM documents),
@@ -709,11 +709,9 @@ object OperatorQueries {
         // adaptive: the probe engages the ratio cap exactly when it
         // measures the cap deleting candidate volume — here the cap
         // deletes ~90% at every scale, so the capped branch runs with
-        // both index caches pre-materialized (tiny-vocab fixture: the
-        // cap leaves ~6 grams/record, so the count-prune bound is ~0 and
-        // its joins are pure overhead — countPrune stays off)
+        // both index caches pre-materialized
         (graft.ops.Linkage.qgramPairsAdaptive(dirty, corpus, "doc_id", "name",
-            maxDist = 2, q = 3, maxDfRatio = 0.1, countPrune = false))
+            maxDist = 2, q = 3, maxDfRatio = 0.1))
       }),
       """WITH corpus AS (
         |  SELECT doc_id, substr(text, 1, 40) AS nm FROM documents),

@@ -5,9 +5,9 @@ import graft.ops.{Approx, Quantiles}
 
 /** The approximate companions' error CONTRACTS, asserted against the
   * exact forms — the tolerance check the driver's hash-match oracle
-  * cannot express (an approximate result hash-matches nothing; the
-  * sketch-SEEDED path is instead oracle-checked bit-exactly as
-  * `q_text_length_quantiles_seeded`). */
+  * cannot express (an approximate result hash-matches nothing). The
+  * exact protocol's sketch seeding only brackets ranks, so its output
+  * is checked bit-exactly here and in `QuantilesSpec`. */
 class ApproxSpec extends SparkSpec {
   import spark.implicits._
 
@@ -56,19 +56,26 @@ class ApproxSpec extends SparkSpec {
   }
 
   test("seeded exact quantiles match grouped/batched exact selection paths") {
-    // cross-check the three exact routes against each other on doubles-free
-    // integral data: plain batched, seeded, and kth-by-kth
+    // cross-check the exact routes against each other on doubles-free
+    // integral data: plain batched, seeded by a GK sketch from
+    // Approx.approxQuantiles (gate off, so the sketch brackets seed the
+    // protocol), and rank-by-rank
     val vals = Seq.tabulate(997)(i => ((i * 7919) % 1000).toLong)
     val df = vals.toDF("v")
     val sorted = vals.sorted
     val qs = Seq(0.1, 0.5, 0.9)
-    val seeded = Quantiles.exactQuantilesSeeded(df, "v", qs)
+    val sketch = Approx.approxQuantiles(df, "v",
+      qs.flatMap(q => Seq(q - 0.02, q + 0.02)), 0.01).map(_._2.toLong)
+    System.setProperty("graft.quantiles.smallGroupCap", "0")
+    val seeded = try Quantiles.exactQuantilesKnownBounds(df, "v", qs,
+        vals.length, sorted.head, sorted.last, sketch = Some(sketch))
+      finally System.clearProperty("graft.quantiles.smallGroupCap")
     val plain = Quantiles.exactQuantiles(df, "v", qs)
     assert(seeded === plain)
     seeded.foreach { case (q, v) =>
       val k = math.max(1L, math.ceil(q * vals.length).toLong)
       assert(v === sorted((k - 1).toInt), s"q=$q")
-      assert(v === Quantiles.exactKth(df, "v", k), s"q=$q kth")
+      assert(v === Quantiles.exactQuantiles(df, "v", Seq(q)).head._2, s"q=$q single")
     }
   }
 }

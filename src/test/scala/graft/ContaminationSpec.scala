@@ -41,20 +41,6 @@ class ContaminationSpec extends SparkSpec {
     assert(byId(3L) === ((0.0, None, false)))
   }
 
-  test("df-capped candidates + exact verify equal the uncapped pairs on the corpus") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val train = docs.filter($"doc_id" % 7 =!= 0)
-    val eval = docs.filter($"doc_id" % 7 === 0)
-    def pairs(maxDf: Option[Int]) = Contamination
-      .containmentPairs(train, eval, "doc_id", "text", 3, 0.5, maxDf)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = pairs(None)
-    val capped = pairs(Some(50))
-    assert(exact.nonEmpty)
-    assert(capped == exact,
-      "a contaminated pair shares rare shingles, so the cap loses nothing here")
-  }
-
   test("bloom-reduced pairs equal the exact pairs even at fpp 0.5") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val train = docs.filter($"doc_id" % 7 =!= 0)

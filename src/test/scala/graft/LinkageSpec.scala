@@ -62,16 +62,13 @@ class LinkageSpec extends SparkSpec {
       Seq((401L, 301L, 1)))
   }
 
-  test("maxDfRatio and countPrune=false leave the pair set unchanged") {
+  test("maxDfRatio leaves the pair set unchanged") {
     val base = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     val ratio = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2,
         maxDfRatio = Some(0.9)) // cap 5 of 5 records: prunes nothing
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val noPrune = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2,
-        countPrune = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(base.nonEmpty && ratio == base && noPrune == base)
+    assert(base.nonEmpty && ratio == base)
     intercept[IllegalArgumentException] {
       Linkage.qgramPairs(dirty, clean, "id", "name",
         maxDf = Some(3), maxDfRatio = Some(0.5))
