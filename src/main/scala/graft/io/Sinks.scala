@@ -1,8 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Sink connectors — reference §2.1 S7, S8, S10.
   *
@@ -114,11 +115,13 @@ object Sinks {
   /** Stage a [[snapshot]] without landing it. `df` is evaluated ONCE: it is
     * written to `<raw>.stage-<nonce>` with its row count taken by a
     * `Dataset.observe` on that write; `check` then runs on the staged
-    * parquet (a gate reads the small written output, not the lineage); and
-    * executors copy the staged rows to `<legacy>.stage-<nonce>`. Nothing
-    * under `raw`/`legacy` changes until `publish()`, which replaces `raw`
-    * with its stage dir, then renames each legacy part file into `legacy`
-    * (part names carry the write job's UUID, so nights never collide).
+    * parquet read with the frame's schema (a gate reads the small written
+    * output, not the lineage); and one task per part file copies the raw
+    * stage's part files, byte for byte and by name, into `<legacy>.stage-<nonce>`
+    * (made even when empty). Nothing under `raw`/`legacy` changes until
+    * `publish()`, which replaces `raw` with its stage dir, then renames each
+    * legacy part file into `legacy` (part names carry the raw write job's
+    * UUID, so nights never collide).
     * Raw lands first, so a retry after a failed publish re-overwrites raw
     * harmlessly. Any failure while staging deletes both stage dirs.
     * Every step uses the Hadoop `FileSystem` of its path. */
@@ -138,20 +141,25 @@ object Sinks {
       val obs = Observation()
       df.observe(obs, count(lit(1)).as("rows")).write.parquet(rawStage.toString)
       val rows = obs.get("rows").asInstanceOf[Long]
-      val staged = spark.read.parquet(rawStage.toString)
-      check(staged)
-      staged.write.parquet(legacyStage.toString)
+      check(spark.read.schema(df.schema).parquet(rawStage.toString))
+      val parts = rawFs.listStatus(rawStage).map(_.getPath).filter(_.getName.startsWith("part-"))
+      legacyFs.mkdirs(legacyStage)
+      if (parts.nonEmpty) {
+        val hadoopConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+        try spark.sparkContext.parallelize(parts.toSeq, parts.length).foreach { src =>
+          val (c, dst) = (hadoopConf.value.value, new Path(legacyStage, src.getName))
+          FileUtil.copy(src.getFileSystem(c), src, dst.getFileSystem(c), dst, false, true, c)
+        } finally hadoopConf.destroy()
+      }
       new Staged(rows, rawPath, () => {
         rawFs.delete(raw, true)
         if (!rawFs.rename(rawStage, raw))
           throw new java.io.IOException(s"could not publish $raw")
         legacyFs.mkdirs(legacy)
-        legacyFs.listStatus(legacyStage)
-          .filter(_.getPath.getName.startsWith("part-"))
-          .foreach { st =>
-            if (!legacyFs.rename(st.getPath, new Path(legacy, st.getPath.getName)))
-              throw new java.io.IOException(s"could not publish ${st.getPath} into $legacy")
-          }
+        legacyFs.listStatus(legacyStage).foreach { st =>
+          if (!legacyFs.rename(st.getPath, new Path(legacy, st.getPath.getName)))
+            throw new java.io.IOException(s"could not publish ${st.getPath} into $legacy")
+        }
         legacyFs.delete(legacyStage, true): Unit
       }, () => discard())
     } catch {

@@ -17,10 +17,14 @@ import graft.ops.Quality
   * Every mart reads the source fixture, not another task's output, so
   * the chain fixes only the order in which results LAND. Each load is
   * therefore computed once and staged ahead, all seven concurrently
-  * ([[Sinks.stage]]: one write, an observed row count, the gate on the
-  * staged output), and published by renames in the reference's group
-  * order ([[runStagedGroups]]); after any failure `raw/` and `legacy/`
-  * hold exactly what the sequential chain would have left.
+  * ([[Sinks.stage]]: one Spark write, an observed row count, the gate on
+  * the staged output, legacy as a byte copy of the staged part files),
+  * and published by renames in the reference's group order
+  * ([[runStagedGroups]]); after any failure `raw/` and `legacy/` hold
+  * exactly what the sequential chain would have left. The concurrent
+  * loads share the session-wide conf windows the customer mart's builder
+  * opens ([[graft.ops.ConfWindows]]), so a gate may plan with AQE off and
+  * the DAG's job and task counts vary slightly from run to run.
   *
   * Scheduling and alerting stay with whatever runs the driver (cron,
   * Airflow's SparkSubmitOperator, …), but the RETRY/FAILURE contract the

@@ -97,4 +97,23 @@ class ConfWindowsSpec extends SparkSpec {
       assert(s.conf.get(Key) == "true")
     }
   }
+
+  test("a window is session-wide: a query planned on another thread sees the " +
+       "override while it is open and the original after it closes") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val s = spark.newSession()
+    val orig = s.conf.get(Key)
+    assert(orig == "true")
+    def plannedAdaptive(): Boolean = Await.result(Future {
+      s.range(0, 100).selectExpr("id % 3 AS k").groupBy("k").count()
+        .queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    }(ExecutionContext.global), 60.seconds)
+    ConfWindows.withOverrides(s, Seq(Key -> "false")) {
+      assert(!plannedAdaptive(), "a concurrent query planned outside the open window")
+    }
+    assert(s.conf.get(Key) == orig)
+    assert(plannedAdaptive(), "the conf was not restored after the window")
+  }
 }

@@ -235,6 +235,35 @@ class DagSpec extends SparkSpec {
     assert(stageEntries(out).isEmpty, s"stage dirs left: ${stageEntries(out)}")
   }
 
+  test("a staged task whose first attempt fails in the legacy copy lands on " +
+       "its retry with legacy equal to raw") {
+    import graft.io.{RamFs, Sources}
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    val out = Files.createTempDirectory(RamFs.root.toPath, "dag_copy").toString
+    // every create of the first attempt's legacy stage fails, none after
+    val first = new java.util.concurrent.atomic.AtomicReference[String]()
+    RamFs.failCreate = { p =>
+      val dir = p.getParent.getName
+      dir.startsWith("copy.stage-") && p.toString.contains(s"$out/legacy/") && {
+        first.compareAndSet(null, dir); first.get == dir
+      }
+    }
+    val outcomes =
+      try Dag.runStagedGroups(Seq(Seq("copy" -> { () =>
+        Sinks.stage(spark.range(0, 9).repartition(3).toDF("id"),
+          s"ramfs:$out/raw/copy", s"ramfs:$out/legacy/copy")
+      })))
+      finally RamFs.failCreate = _ => false
+    outcomes match {
+      case Seq(Dag.TaskSucceeded("copy", r, 2)) => assert(r.rows == 9)
+      case other => fail(s"unexpected outcomes: $other")
+    }
+    assert(first.get != null, "the first attempt never reached the copy")
+    val raw = IoSpec.partDigests(spark, s"ramfs:$out/raw/copy")
+    assert(raw.size == 3 && IoSpec.partDigests(spark, s"ramfs:$out/legacy/copy") == raw)
+    assert(stageEntries(out).isEmpty, s"stage dirs left: ${stageEntries(out)}")
+  }
+
   test("a downstream stage finished before its upstream failed leaves nothing") {
     val out = Files.createTempDirectory("graft_dag_ahead_").toString
     val staged = new java.util.concurrent.CountDownLatch(1)

@@ -1,10 +1,28 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.{Sinks, Sources}
-import graft.ops.DuplicateException
+import org.apache.spark.sql.types.StructType
+import graft.io.{RamFs, Sinks, Sources}
+import graft.ops.{DuplicateException, Quality}
 import graft.pipelines.Ingestion
+
+object IoSpec {
+  /** Name → SHA-256 of every `part-*` file directly under `dir`, read
+    * through the dir's Hadoop `FileSystem`. */
+  def partDigests(spark: SparkSession, dir: String): Map[String, String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).map(_.getPath).filter(_.getName.startsWith("part-")).map { f =>
+      val in = fs.open(f)
+      val bytes = try in.readAllBytes() finally in.close()
+      f.getName -> java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+        .map("%02x".format(_)).mkString
+    }.toMap
+  }
+}
 
 class IoSpec extends SparkSpec {
   import spark.implicits._
@@ -155,6 +173,74 @@ class IoSpec extends SparkSpec {
     val left = Files.walk(java.nio.file.Paths.get(d))
     try assert(!left.anyMatch(_.getFileName.toString.contains(".stage-")))
     finally left.close()
+  }
+
+  test("snapshot lands legacy as a byte copy of each night's raw part files " +
+       "(local and non-local FileSystem)") {
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    Seq(Files.createTempDirectory("graft_bytes").toString,
+        s"ramfs:${Files.createTempDirectory(RamFs.root.toPath, "bytes")}").foreach { d =>
+      val nights = Seq(spark.range(0, 40).repartition(3), spark.range(40, 50).repartition(2))
+        .map(_.selectExpr("id", "concat('v', id) AS v"))
+      var landed = Map.empty[String, String]
+      nights.zip(Seq(3, 2)).foreach { case (night, files) =>
+        Sinks.snapshot(night, s"$d/raw", s"$d/legacy")
+        val raw = IoSpec.partDigests(spark, s"$d/raw")
+        assert(raw.size == files, s"$d: raw holds $raw")
+        assert(raw.keySet.intersect(landed.keySet).isEmpty, "part names of two nights collide")
+        landed ++= raw
+        // legacy gained exactly this night's raw parts: same names, same bytes
+        assert(IoSpec.partDigests(spark, s"$d/legacy") == landed, d)
+      }
+      assert(spark.read.parquet(s"$d/legacy").count() == 50)
+    }
+  }
+
+  test("a legacy copy that fails part-way leaves raw, legacy and no stage entry behind") {
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    val d = Files.createTempDirectory(RamFs.root.toPath, "copyfail").toString
+    val (raw, legacy) = (s"ramfs:$d/raw", s"ramfs:$d/legacy")
+    Sinks.snapshot(spark.range(0, 6).repartition(2).toDF("id"), raw, legacy)
+    val before = (IoSpec.partDigests(spark, raw), IoSpec.partDigests(spark, legacy))
+    val copies = new java.util.concurrent.atomic.AtomicInteger()
+    RamFs.failCreate = p =>
+      p.toString.contains(s"$d/legacy.stage-") && copies.incrementAndGet() > 1
+    try intercept[org.apache.spark.SparkException] {
+      Sinks.snapshot(spark.range(10, 40).repartition(3).toDF("id"), raw, legacy)
+    } finally RamFs.failCreate = _ => false
+    assert(copies.get() >= 2, "the copy must have failed after one file")
+    assert((IoSpec.partDigests(spark, raw), IoSpec.partDigests(spark, legacy)) == before)
+    assert(spark.read.parquet(legacy).count() == 6)
+    val left = Files.walk(java.nio.file.Paths.get(d))
+    try assert(!left.anyMatch(_.getFileName.toString.contains(".stage-")))
+    finally left.close()
+  }
+
+  test("an empty load lands, gated or not: raw keeps the frame's columns, " +
+       "legacy stays readable, the check sees the inferred schema") {
+    val d = Files.createTempDirectory("graft_empty").toString
+    val night = Seq((1L, "a")).toDF("ID", "V")
+    val empty = night.filter(lit(false))
+    val checks = Seq[(String, DataFrame => Unit)](
+      "ungated" -> (_ => ()), "gated" -> (staged => Quality.gate(staged, Seq("ID"))))
+    checks.foreach { case (label, check) =>
+      val (raw, legacy) = (s"$d/$label/raw", s"$d/$label/legacy")
+      var seen: StructType = null
+      def load(df: DataFrame): Long =
+        Sinks.snapshot(df, raw, legacy, staged => { seen = staged.schema; check(staged) })
+      assert(load(empty) == 0)
+      assert(spark.read.parquet(legacy).count() == 0, s"$label: first night empty")
+      assert(load(night) == 1)
+      assert(load(empty) == 0)
+      val back = spark.read.parquet(raw)
+      assert(back.count() == 0)
+      assert(back.schema.map(f => (f.name, f.dataType)) ==
+        empty.schema.map(f => (f.name, f.dataType)), label)
+      // the inferred schema of the staged parquet: every field nullable
+      assert(seen == back.schema && seen == StructType(empty.schema.map(_.copy(nullable = true))),
+        s"$label: check saw $seen")
+      assert(spark.read.parquet(legacy).count() == 1, s"$label: legacy count moved")
+    }
   }
 
   test("jsonl roundtrip preserves rows and declared schema avoids inference") {
