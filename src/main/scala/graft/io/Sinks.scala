@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{CreateFlag, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.IOUtils
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.util.SerializableConfiguration
@@ -146,10 +149,9 @@ object Sinks {
       legacyFs.mkdirs(legacyStage)
       if (parts.nonEmpty) {
         val hadoopConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-        try spark.sparkContext.parallelize(parts.toSeq, parts.length).foreach { src =>
-          val (c, dst) = (hadoopConf.value.value, new Path(legacyStage, src.getName))
-          FileUtil.copy(src.getFileSystem(c), src, dst.getFileSystem(c), dst, false, true, c)
-        } finally hadoopConf.destroy()
+        try spark.sparkContext.parallelize(parts.toSeq, parts.length)
+          .foreach(copyPart(_, legacyStage, hadoopConf.value.value))
+        finally hadoopConf.destroy()
       }
       new Staged(rows, rawPath, () => {
         rawFs.delete(raw, true)
@@ -165,5 +167,25 @@ object Sinks {
     } catch {
       case e: Throwable => discard(); throw e
     }
+  }
+
+  /** Copy one part file, byte for byte and by name, into `dstDir`. The
+    * destination is opened with `createNonRecursive`: Spark does not stop
+    * the running tasks of a failed job, so a copy task can outlive
+    * `discard()`, and a plain `create` would make the deleted stage dir
+    * again. This one fails on the missing parent instead. (The flag-set
+    * overload: `RawLocalFileSystem`'s boolean one makes the parent.) */
+  private[graft] def copyPart(src: Path, dstDir: Path, conf: Configuration): Unit = {
+    val dst = new Path(dstDir, src.getName)
+    val dstFs = dst.getFileSystem(conf)
+    val in = src.getFileSystem(conf).open(src)
+    try {
+      val out = dstFs.createNonRecursive(dst,
+        FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf)),
+        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+        conf.getInt("io.file.buffer.size", 4096), dstFs.getDefaultReplication(dst),
+        dstFs.getDefaultBlockSize(dst), null)
+      try IOUtils.copyBytes(in, out, conf, false) finally out.close()
+    } finally in.close()
   }
 }

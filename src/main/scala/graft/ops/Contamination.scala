@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * an |eval| × |train| cross join. Cost is Σ_shingle df_eval · df_train,
   * and the eval side is tiny relative to the corpus (benchmarks, not the
   * 100 TB crawl), so candidate generation is bounded by the eval side's
-  * index.
+  * index. A caller holding a once-built eval sketch ([[evalFilterBytes]])
+  * also drops definite non-member train shingles before the exchange.
   */
 object Contamination {
 
@@ -43,111 +44,62 @@ object Contamination {
       .filter(col("containment") >= threshold)
       .select("eval_id", "train_id", "containment")
 
+  /** False-positive rate of [[evalFilterBytes]]'s sketch: it tunes the
+    * train-side shuffle volume, never the rows. */
+  private val Fpp = 0.01
+
   /** (eval_id, train_id, containment) for every cross pair with
     * containment ≥ threshold. Shingle hashing/distinctness matches
     * [[Dedup.jaccardPairs]] (xxhash64'd word n-grams — 8-byte shuffle
     * keys). Eval docs with fewer than `n` tokens have no shingles and
-    * produce no pairs. */
+    * produce no pairs. LAZY: no Spark job runs until the caller's action.
+    *
+    * With `evalFilter` (a sketch from [[evalFilterBytes]]) the train-side
+    * index is BLOOM-REDUCED at the scan — the decontamination shape that
+    * fits a 100 TB corpus. The exact form shuffles EVERY training shingle
+    * into the bipartite join even though almost none match (eval sets are
+    * benchmarks — a few million shingles against trillions); with the
+    * sketch riding into the train-side scan via
+    * [[graft.functions.BloomMightContain]], definite non-members — the
+    * overwhelming majority — drop BEFORE the exchange, so train-side
+    * shuffle volume falls from |corpus shingles| to
+    * |true matches| + fpp·|corpus shingles|.
+    *
+    * The rows are the same with or without the filter: a Bloom filter has
+    * no false negatives, and a false positive's shingle hash does not
+    * exist on the eval side of the equi-join, so every FP dies in the
+    * exact join it was admitted to. The sketch is built once per eval
+    * suite, not per call: its two eval walks (sizing + build) amortize
+    * only across many train sides or batches against one fixed suite
+    * (SCALE.md: 2× win at x30/x100 fixed-eval, a measured LOSS when built
+    * per call at the balanced sf0.1 split). */
   def containmentPairs(train: DataFrame, eval: DataFrame, idCol: String,
                        textCol: String, n: Int = 3,
-                       threshold: Double = 0.5): DataFrame = {
+                       threshold: Double = 0.5,
+                       evalFilter: Option[Array[Byte]] = None): DataFrame = {
     val evalIdx = index(eval, "eval", idCol, textCol, n)
-    val trainIdx = index(train, "train", idCol, textCol, n)
+    val trainIdx0 = index(train, "train", idCol, textCol, n)
+    val trainIdx = evalFilter.fold(trainIdx0)(bytes => trainIdx0.filter(
+      graft.functions.BloomMightContain.mightContain(col("shash"), bytes)))
     val common = evalIdx.join(trainIdx, "shash")
       .groupBy("eval_id", "train_id").agg(count(lit(1)).as("common"))
     score(common, sizes(eval, idCol, textCol, n), threshold)
   }
 
-  /** [[containmentPairs]] with the train-side index BLOOM-REDUCED at the
-    * scan — the decontamination shape that actually fits a 100 TB corpus.
-    *
-    * The exact form shuffles EVERY training shingle into the bipartite
-    * join even though almost none match (eval sets are benchmarks — a few
-    * million shingles against trillions). Here a Bloom filter of the eval
-    * side's distinct shingle hashes (built by [[BloomJoin.buildFilter]],
-    * sized honestly by one small count job over the eval side) rides into
-    * the train-side scan via [[graft.functions.BloomMightContain]]:
-    * definite non-members — the overwhelming majority — drop BEFORE the
-    * exchange, so train-side shuffle volume falls from |corpus shingles|
-    * to |true matches| + fpp·|corpus shingles|.
-    *
-    * The result row-for-row EQUALS [[containmentPairs]]: a
-    * Bloom filter has no false negatives, and a false positive's shingle
-    * hash does not exist on the eval side of the equi-join, so every FP
-    * dies in the exact join it was admitted to — fpp tunes shuffle
-    * volume, never output. (`ContaminationSpec` asserts the equivalence
-    * at fpp = 0.5, where false positives are guaranteed.)
-    *
-    * Sizing: one approx_count_distinct job (±2%, padded 1.25×) sizes
-    * the filter, then one treeAggregate job builds it — the filter
-    * is built over the RAW eval index either way, since duplicate inserts
-    * are idempotent and a distinct() here would cost the very shuffle the
-    * sketch exists to avoid. Undersizing degrades fpp, never rows.
-    * Callers gating many batches against ONE eval suite (the streaming
-    * ingestion gate) prebuild the sketch once with [[evalFilterBytes]]
-    * and pass it as `filterBytes` — no per-call build jobs at all. */
-  def containmentPairsBloom(train: DataFrame, eval: DataFrame, idCol: String,
-                            textCol: String, n: Int = 3,
-                            threshold: Double = 0.5,
-                            fpp: Double = 0.01,
-                            filterBytes: Option[Array[Byte]] = None): DataFrame = {
-    val evalIdx = index(eval, "eval", idCol, textCol, n)
-    val bytes = filterBytes.getOrElse(evalIdxFilter(evalIdx, fpp))
-    val trainIdx = index(train, "train", idCol, textCol, n)
-      .filter(graft.functions.BloomMightContain.mightContain(col("shash"), bytes))
-    val common = evalIdx.join(trainIdx, "shash")
-      .groupBy("eval_id", "train_id").agg(count(lit(1)).as("common"))
-    score(common, sizes(eval, idCol, textCol, n), threshold)
-  }
-
-  /** [[containmentPairsBloom]] with the sketch engaged ADAPTIVELY — the
-    * same insurance discipline as [[Dedup.jaccardPairsAdaptive]]: pay a
-    * cheap probe, buy the reduction machinery only where it pays.
-    *
-    * The Bloom build costs two extra walks of the eval side (the sizing
-    * `approx_count_distinct` and the `treeAggregate` build), each
-    * re-shingling eval text. That amortizes only on the fixed-eval
-    * geometry the sketch exists for — a small benchmark suite against a
-    * corpus orders of magnitude larger (SCALE.md: 2× win at x30/x100
-    * fixed-eval, a measured LOSS at the balanced sf0.1 split). The probe
-    * compares ROW counts (`df.count()` — parquet-metadata cheap, never a
-    * text scan; document-count ratio is the right proxy because both
-    * sides shingle the same way) and engages the sketch only when the
-    * train side outnumbers eval by ≥ `engageFactor`. A caller holding a
-    * prebuilt `filterBytes` skips the probe entirely — the sketch is
-    * free, so it always rides.
-    *
-    * EAGER (two count jobs at call time) — a data-dependent plan choice,
-    * like every adaptive form here. Either branch returns row-identical
-    * results ([[containmentPairsBloom]]'s no-false-negatives argument),
-    * so the choice is invisible to correctness. */
-  def containmentPairsBloomAdaptive(train: DataFrame, eval: DataFrame,
-                                    idCol: String, textCol: String,
-                                    n: Int = 3, threshold: Double = 0.5,
-                                    fpp: Double = 0.01,
-                                    engageFactor: Double = 24.0,
-                                    filterBytes: Option[Array[Byte]] = None): DataFrame =
-    if (filterBytes.isDefined ||
-        train.count() >= engageFactor * math.max(eval.count(), 1L))
-      containmentPairsBloom(train, eval, idCol, textCol, n, threshold, fpp,
-        filterBytes)
-    else
-      containmentPairs(train, eval, idCol, textCol, n, threshold)
-
-  /** Serialized Bloom sketch of `eval`'s shingle hashes, for reuse across
-    * many [[containmentPairsBloom]] calls against one fixed eval suite
-    * (the streaming gate's shape: build once at stream start, probe every
-    * micro-batch). Sizing as in [[containmentPairsBloom]]. */
+  /** Serialized Bloom sketch of `eval`'s shingle hashes — the
+    * `evalFilter` of [[containmentPairs]], built once per fixed eval suite
+    * (the streaming gate's shape: build at stream start, probe every
+    * micro-batch). EAGER, two jobs: one approx_count_distinct (±2%,
+    * padded 1.25×) sizes the filter, then one treeAggregate builds it over
+    * the RAW eval index (duplicate inserts are idempotent, and a distinct()
+    * would cost the very shuffle the sketch exists to avoid). Undersizing
+    * degrades fpp, never rows. */
   def evalFilterBytes(eval: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, fpp: Double = 0.01): Array[Byte] =
-    evalIdxFilter(index(eval, "eval", idCol, textCol, n), fpp)
-
-  /** Bloom filter over an eval shingle index, sized by one
-    * approx_count_distinct job. */
-  private def evalIdxFilter(evalIdx: DataFrame, fpp: Double): Array[Byte] = {
+                      n: Int = 3): Array[Byte] = {
+    val evalIdx = index(eval, "eval", idCol, textCol, n)
     val expected = math.max((evalIdx.agg(approx_count_distinct(col("shash")))
       .head.getLong(0) * 1.25).toLong, 1L)
-    BloomJoin.buildFilter(evalIdx.select("shash"), "shash", expected, fpp)
+    BloomJoin.buildFilter(evalIdx.select("shash"), "shash", expected, Fpp)
   }
 
   /** Per-eval-document verdict: the worst (max-containment) offending

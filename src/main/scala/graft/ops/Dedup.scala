@@ -22,8 +22,9 @@ import org.apache.spark.sql.functions._
   *     (128 hashes, 32 bands × 4 rows) put the S-curve threshold at
   *     ~(1/32)^(1/4) ≈ 0.42 — recall at s ≥ 0.8 is 1-(1-0.8⁴)³² ≈ 1-5e-8.
   *   - Cosine near-dup ships both modes: [[cosinePairs]] (exact
-  *     small-side self-join) and [[cosinePairsLsh]] (hyperplane-bucketed
-  *     candidates + exact verify — the 100 TB path).
+  *     small-side self-join) and hyperplane-bucketed candidates + exact
+  *     verify ([[cosinePairsLshAuto]], [[cosinePairsLshPinned]] — the
+  *     100 TB path).
   */
 object Dedup {
 
@@ -478,32 +479,32 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs via the inverted-index join:
     * (doc_i, doc_j, jaccard) for all pairs with similarity ≥ threshold.
     * Never materializes the full pair matrix — only pairs sharing ≥1
-    * shingle are generated.
-    *
-    * `maxDf`: pair-join work is Σ df(shingle)² — quadratic in shingle
-    * document frequency (measured 19× cost at a 10× corpus whose common
-    * grams are shared). With a cap, CANDIDATE GENERATION only joins on
-    * shingles appearing in ≤ maxDf docs (bounding the join at
-    * ~|docs|·avgSh·maxDf); candidates are then verified with exact
-    * Jaccard over the FULL index, so reported similarities are always
-    * exact (an upper-bound prune — shared-rare count plus the smaller
-    * side's non-rare budget — drops provably-below-threshold pairs first,
-    * so the exact verify only touches plausible candidates). A pair is
-    * missed only if every one of its shared shingles exceeds the cap —
-    * for threshold ≥ 0.8 a pair shares most of its (mostly rare)
-    * shingles, so recall loss is negligible on natural corpora. None
-    * (default) is fully exact — the oracle-checked mode. */
+    * shingle are generated. LAZY: no Spark job runs until the caller's
+    * action — the form to compose into larger plans; a corpus whose
+    * common shingles make Σdf² explode wants [[jaccardPairsAdaptive]]. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int = 3, threshold: Double = 0.8,
-                   maxDf: Option[Int] = None): DataFrame = {
+                   n: Int = 3, threshold: Double = 0.8): DataFrame = {
     val (index, sizes) = shingleIndex(docs, idCol, textCol, n)
-    jaccardPairsFromIndex(index, sizes, threshold, maxDf)
+    jaccardPairsFromIndex(index, sizes, threshold, maxDf = None)
   }
 
   /** Pair generation + verify over an already-built (index, sizes) pair —
     * the shared tail of [[jaccardPairs]] and [[jaccardPairsAdaptive]], so
     * the adaptive path builds (and registers in the cache window) its
     * shingle index exactly ONCE for both the probe and the chosen branch.
+    *
+    * `maxDf` = None is fully exact. With a cap, CANDIDATE GENERATION only
+    * joins on shingles appearing in ≤ maxDf docs — pair-join work is
+    * Σ df(shingle)², quadratic in shingle document frequency (measured
+    * 19× cost at a 10× corpus whose common grams are shared), and the cap
+    * bounds it at ~|docs|·avgSh·maxDf. Candidates are then verified with
+    * exact Jaccard over the FULL index, so reported similarities are
+    * always exact (an upper-bound prune — shared-rare count plus the
+    * smaller side's non-rare budget — drops provably-below-threshold
+    * pairs first, so the exact verify only touches plausible candidates).
+    * A pair is missed only if every one of its shared shingles exceeds
+    * the cap — for threshold ≥ 0.8 a pair shares most of its (mostly
+    * rare) shingles, so recall loss is negligible on natural corpora.
     *
     * WHY THE SELF-JOIN'S EXCHANGE IS NOT REUSED (the executed plan shows
     * two `Generate` nodes over the same shingle lineage): a Spark 4.1
@@ -643,23 +644,29 @@ object Dedup {
     }
   }
 
-  /** [[jaccardPairs]] with the df-cap engaged ADAPTIVELY: one cheap probe
-    * aggregation over the (persisted) shingle index projects the
-    * candidate-join volume, and the cap + bound-prune machinery is paid
-    * only when that volume actually threatens.
-    *
-    * Why: the cap is insurance — measured ~2× fixed premium on a benign
-    * disjoint-vocabulary corpus (extra df join + stats joins) vs a 6–19×
-    * payback when common shingles make Σdf² explode. Candidate generation
-    * produces Σ df·(df−1)/2 ≈ Σdf²/2 rows uncapped; under the cap exactly
-    * the shingles with df ≤ cap contribute, i.e. Σ_{df≤cap} df²/2 — the
-    * probe computes BOTH volumes exactly from one df aggregation and
-    * engages the cap only when the uncapped volume exceeds `engageFactor`
-    * × the capped one (default 4: the cap must delete ≥ 3/4 of the
-    * candidate volume to be worth its premium — measured on the verbatim
-    * ×10 corpus the ratio is 58, on disjoint-vocabulary replicas exactly
-    * 1.0, so the decision is not borderline). A loose bound like cap·Σdf
-    * is NOT used: it over-estimates the capped cost by orders of
+  /** Document-frequency cap of [[jaccardPairsAdaptive]]'s capped branch. */
+  private val JaccardMaxDf = 50
+
+  /** The engage rule every adaptive df cap here shares (Jaccard and
+    * [[Linkage.qgramPairs]]): the cap is insurance — measured ~2× fixed
+    * premium on a benign disjoint-vocabulary corpus vs a 6–19× payback
+    * when common keys make the candidate volume explode — so it is paid
+    * only when it deletes at least 3/4 of the EXACT candidate volume
+    * (`vol` uncapped, `volCapped` under the cap). Measured on the verbatim
+    * ×10 corpus the Jaccard ratio is 58, on disjoint-vocabulary replicas
+    * exactly 1.0, so the decision is not borderline. */
+  private[ops] def capPays(vol: Double, volCapped: Double): Boolean =
+    vol > 4.0 * math.max(volCapped, 1.0)
+
+  /** [[jaccardPairs]] with the df cap engaged ADAPTIVELY — the
+    * scale-insured form: one cheap probe aggregation over the (persisted)
+    * shingle index projects the candidate-join volume, and the cap +
+    * bound-prune machinery is paid only when that volume actually
+    * threatens. Candidate generation produces Σ df·(df−1)/2 ≈ Σdf²/2 rows
+    * uncapped; under the cap exactly the shingles with df ≤ 50 contribute,
+    * i.e. Σ_{df≤50} df²/2 — the probe computes BOTH volumes exactly from
+    * one df aggregation and engages by [[capPays]]. A loose bound like
+    * cap·Σdf is NOT used: it over-estimates the capped cost by orders of
     * magnitude precisely on the corpora where the cap wins. Sums are
     * taken as doubles: they are projections for a branch decision, and
     * Σdf² can overflow a long on a corpus where the decision is most
@@ -671,9 +678,17 @@ object Dedup {
     * (id + 8-byte hashes), not the corpus text; the chosen branch then
     * reuses that same cached index frame. */
   def jaccardPairsAdaptive(docs: DataFrame, idCol: String, textCol: String,
-                           n: Int = 3, threshold: Double = 0.8,
-                           cap: Int = 50,
-                           engageFactor: Double = 4.0): DataFrame = {
+                           n: Int = 3, threshold: Double = 0.8): DataFrame =
+    jaccardPairsWith(docs, idCol, textCol, n, threshold, engage = None)._1
+
+  /** [[jaccardPairsAdaptive]] with its cap decision exposed: `engage` =
+    * None runs the probe, `Some(b)` forces the branch without it (specs
+    * pin both through here). Returns the pairs and whether the cap was
+    * applied. */
+  private[graft] def jaccardPairsWith(docs: DataFrame, idCol: String,
+                                      textCol: String, n: Int,
+                                      threshold: Double,
+                                      engage: Option[Boolean]): (DataFrame, Boolean) = {
     // ONE index build shared by the probe and the chosen branch: building
     // it per-step registered two aliases of the same plan-keyed cache
     // entry in the window (burning 2 of the session's slots, and evicting
@@ -681,26 +696,15 @@ object Dedup {
     // aggregates the compact cache, which doubles as the eager
     // pre-materialization the uncapped self-join needs (NOTES_r5).
     val (index, sizes) = shingleIndex(docs, idCol, textCol, n)
-    jaccardPairsFromIndex(index, sizes, threshold,
-      maxDf = if (capEngagesOnIndex(index, cap, engageFactor)) Some(cap)
-        else None)
+    val engaged = engage.getOrElse(capEngagesOnIndex(index))
+    (jaccardPairsFromIndex(index, sizes, threshold,
+      maxDf = if (engaged) Some(JaccardMaxDf) else None), engaged)
   }
 
-  /** The probe behind [[jaccardPairsAdaptive]] (exposed for specs/tools):
-    * true when the exact uncapped candidate volume Σdf²/2 exceeds
-    * `engageFactor` × the exact capped volume Σ_{df≤cap} df²/2.
-    * One Spark job over the compact index. Standalone form — builds (and
-    * window-registers) its own index; [[jaccardPairsAdaptive]] instead
-    * probes the single index it already built. */
-  private[graft] def jaccardCapEngages(docs: DataFrame, idCol: String,
-                                       textCol: String, n: Int, cap: Int,
-                                       engageFactor: Double): Boolean = {
-    val (index, _) = shingleIndex(docs, idCol, textCol, n)
-    capEngagesOnIndex(index, cap, engageFactor)
-  }
-
-  private def capEngagesOnIndex(index: DataFrame, cap: Int,
-                                engageFactor: Double): Boolean = {
+  /** True when the exact uncapped candidate volume Σdf²/2 exceeds the
+    * exact capped volume Σ_{df≤50} df²/2 by [[capPays]]. One Spark job
+    * over the compact index. */
+  private def capEngagesOnIndex(index: DataFrame): Boolean = {
     // plain aggregation, deliberately NOT persisted: only the engaged
     // (rare) branch could reuse the df frame, and paying a cache write on
     // the common benign path costs more than the engaged branch's one
@@ -710,11 +714,11 @@ object Dedup {
     // cold cache and compute the index twice).
     val stats = index.groupBy("shash").agg(count(lit(1)).as("df"))
       .agg(sum((col("df") * col("df")).cast("double")).as("sum_df2"),
-        sum(when(col("df") <= cap, (col("df") * col("df")).cast("double"))
+        sum(when(col("df") <= JaccardMaxDf, (col("df") * col("df")).cast("double"))
           .otherwise(0.0)).as("sum_df2_capped"))
       .head()
-    if (stats.isNullAt(0)) false // empty corpus: nothing to cap
-    else stats.getDouble(0) > engageFactor * math.max(stats.getDouble(1), 1.0)
+    // empty corpus: nothing to cap
+    !stats.isNullAt(0) && capPays(stats.getDouble(0), stats.getDouble(1))
   }
 
   /** Number of minhash functions / LSH bands (rows per band = hashes/bands). */
@@ -970,23 +974,6 @@ object Dedup {
       .filter(col("cos") >= threshold)
   }
 
-  /** Embedding-cosine near-dup pairs via random-hyperplane LSH candidate
-    * generation + exact verify — the scale path that replaces
-    * [[cosinePairs]]'s all-pairs join: candidates come from an equi-join
-    * on (table, bucket) (shuffle-partitioned, never a nested loop), and
-    * every candidate's TRUE cosine is computed and thresholded, so
-    * reported similarities are always exact and false positives cost only
-    * one verify fold.
-    *
-    * Recall: a pair at angle θ collides on one b-plane table with
-    * p₁ = (1 − θ/π)ᵇ, so P[miss] = (1 − p₁)^tables. Tune (tables, planes)
-    * to the threshold: production near-dup sweeps (cos ≥ 0.9, θ ≤ 26°)
-    * take planes 6-8 with tables 16-32 (deep buckets, strong pruning);
-    * looser thresholds need shallower tables — at cos 0.4, 32 tables × 2
-    * planes gives P[miss] ≈ 9e-8 (the oracle-shared configuration; at such
-    * low thresholds the candidate set approaches all-pairs, which is
-    * intrinsic to the operating point, not the algorithm — the join is
-    * still hash-partitioned, not a broadcast nested loop). */
   /** (tables, planes) for a corpus of `n` vectors at `threshold`, sized so
     * the candidate join stays NEAR-LINEAR as the corpus grows. A fixed
     * configuration is quadratic at scale: candidates per table ≈
@@ -1043,9 +1030,7 @@ object Dedup {
   /** [[cosinePairsLsh]] with the (tables, planes) sized by [[lshConfigFor]]
     * from the corpus's actual row count — the form that stays near-linear
     * as the corpus grows. The sizing pass is ONE count() (a metadata-cheap
-    * aggregate, not a collect of rows); a production sweep that already
-    * knows |corpus| can call [[cosinePairsLsh]] with
-    * `lshConfigFor(n, …)` directly and skip it. */
+    * aggregate, not a collect of rows). */
   def cosinePairsLshAuto(embeddings: DataFrame, idCol: String, vecCol: String,
                          threshold: Double = 0.95, targetOccupancy: Long = 8L,
                          pMiss: Double = 1e-4, dims: Int = 64): DataFrame = {
@@ -1074,11 +1059,10 @@ object Dedup {
     * production owner may refuse — the two modes are the two ends of
     * the n^(1+ρ) trade and both deserve a name.
     *
-    * Do NOT confuse with pinning (tables, planes) BOTH — that is
-    * [[cosinePairsLsh]] called raw, and at fixed planes the candidate
-    * join is QUADRATIC in n (the measured 102×-for-30× cliff, SCALE.md
-    * round 4). Pinned-tables + auto-planes is the only pinning that
-    * scales. */
+    * Do NOT confuse with pinning (tables, planes) BOTH — at fixed planes
+    * the candidate join is QUADRATIC in n (the measured 102×-for-30×
+    * cliff, SCALE.md round 4). Pinned-tables + auto-planes is the only
+    * pinning that scales. */
   def cosinePairsLshPinned(embeddings: DataFrame, idCol: String, vecCol: String,
                            threshold: Double = 0.95, tables: Int = 32,
                            targetOccupancy: Long = 8L,
@@ -1092,10 +1076,32 @@ object Dedup {
       broadcastVerify = bcast)
   }
 
-  def cosinePairsLsh(embeddings: DataFrame, idCol: String, vecCol: String,
-                     threshold: Double = 0.95, tables: Int = 16,
-                     planes: Int = 8, dims: Int = 64,
-                     broadcastVerify: Boolean = false): DataFrame = {
+  /** Embedding-cosine near-dup pairs via random-hyperplane LSH candidate
+    * generation + exact verify — the scale path that replaces
+    * [[cosinePairs]]'s all-pairs join: candidates come from an equi-join
+    * on (table, bucket) (shuffle-partitioned, never a nested loop), and
+    * every candidate's TRUE cosine is computed and thresholded, so
+    * reported similarities are always exact and false positives cost only
+    * one verify fold.
+    *
+    * Recall: a pair at angle θ collides on one b-plane table with
+    * p₁ = (1 − θ/π)ᵇ, so P[miss] = (1 − p₁)^tables. Tune (tables, planes)
+    * to the threshold: production near-dup sweeps (cos ≥ 0.9, θ ≤ 26°)
+    * take planes 6-8 with tables 16-32 (deep buckets, strong pruning);
+    * looser thresholds need shallower tables — at cos 0.4, 32 tables × 2
+    * planes gives P[miss] ≈ 9e-8 (the oracle-shared configuration; at such
+    * low thresholds the candidate set approaches all-pairs, which is
+    * intrinsic to the operating point, not the algorithm — the join is
+    * still hash-partitioned, not a broadcast nested loop).
+    *
+    * (tables, planes) BOTH pinned is quadratic at scale (see
+    * [[cosinePairsLshPinned]]), so callers outside this package size
+    * them through [[cosinePairsLshAuto]] or [[cosinePairsLshPinned]]. */
+  private[graft] def cosinePairsLsh(embeddings: DataFrame, idCol: String,
+                                    vecCol: String, threshold: Double = 0.95,
+                                    tables: Int = 16, planes: Int = 8,
+                                    dims: Int = 64,
+                                    broadcastVerify: Boolean = false): DataFrame = {
     val e = embeddings.select(col(idCol).as("id"), col(vecCol).as("v"),
       l2norm(col(vecCol)).as("nrm"))
     // persisted (bounded window) and eagerly materialized: the bucket
@@ -1134,28 +1140,9 @@ object Dedup {
       .filter(col("cos") >= threshold)
   }
 
-  /** Incremental embedding dedup — cosine near-dup pairs between an
-    * existing corpus and a NEW batch, the embedding-side analog of
-    * [[minhashLshCrossPairs]]: a *bipartite* (table, bucket) join
-    * (corpus buckets × batch buckets — the corpus is never self-paired),
-    * then the exact verify fold. Per-batch cost is |batch|-proportional
-    * against the corpus bucket index; at 100 TB the corpus side's
-    * buckets are computed once and persisted, exactly like
-    * [[CorpusIndex]] for shingles. Output is (vec_i = corpus id,
-    * vec_j = batch id, cos ≥ threshold); id sets are assumed disjoint
-    * (different batches by contract). Same (tables, planes) recall
-    * tuning as [[cosinePairsLsh]]. */
-  def cosineCrossPairsLsh(corpus: DataFrame, batch: DataFrame, idCol: String,
-                          vecCol: String, threshold: Double = 0.95,
-                          tables: Int = 16, planes: Int = 8,
-                          dims: Int = 64): DataFrame =
-    cosineCrossPairsIndexed(
-      buildEmbeddingIndex(corpus, idCol, vecCol, tables, planes, dims),
-      batch, idCol, vecCol, threshold)
-
-  /** [[cosineCrossPairsLsh]] with (tables, planes) sized by
-    * [[lshConfigFor]] from the CORPUS row count (the big side — batch
-    * occupancy follows it): the bipartite candidate join stays
+  /** [[cosineCrossPairsIndexed]] over an inline index with (tables,
+    * planes) sized by [[lshConfigFor]] from the CORPUS row count (the big
+    * side — batch occupancy follows it): the bipartite candidate join stays
     * |batch|-proportional as the corpus grows instead of quadratic in
     * occupancy. Production pipelines that persist an [[EmbeddingIndex]]
     * size it once at build time the same way. */
@@ -1170,29 +1157,6 @@ object Dedup {
     // same fits-broadcast heuristic as cosinePairsLshAuto, on the batch
     // (its bucket frame is tables x bigger than the vector frame — the
     // cap keeps BOTH comfortably under executor broadcast budgets)
-    val bcast = batch.count() * (dims * 4L + 24L) * (tables + 1L) <= (128L << 20)
-    cosineCrossPairsIndexed(
-      buildEmbeddingIndex(corpus, idCol, vecCol, tables, planes, dims),
-      batch, idCol, vecCol, threshold, broadcastBatch = bcast)
-  }
-
-  /** [[cosinePairsLshPinned]]'s bipartite twin — the incremental shape
-    * production dedup actually runs at 100 TB, under the same
-    * linear-at-decaying-recall budget: tables pinned by the owner,
-    * planes occupancy-sized from the CORPUS count (the big side), so
-    * per-batch cost stays O(tables·|batch|·occ) as the corpus grows
-    * while P[miss] decays with the deepening planes
-    * ([[lshMissProbability]]). Pipelines that persist an
-    * [[EmbeddingIndex]] get the same behavior by building it with
-    * `(tables, lshPlanesFor(nCorpus))` — the index records its config,
-    * so batches can't mismatch. */
-  def cosineCrossPairsLshPinned(corpus: DataFrame, batch: DataFrame,
-                                idCol: String, vecCol: String,
-                                threshold: Double = 0.95, tables: Int = 32,
-                                targetOccupancy: Long = 8L,
-                                dims: Int = 64): DataFrame = {
-    require(tables > 0 && tables <= 512, s"tables in [1, 512]: $tables")
-    val planes = lshPlanesFor(corpus.count(), targetOccupancy)
     val bcast = batch.count() * (dims * 4L + 24L) * (tables + 1L) <= (128L << 20)
     cosineCrossPairsIndexed(
       buildEmbeddingIndex(corpus, idCol, vecCol, tables, planes, dims),
@@ -1224,10 +1188,24 @@ object Dedup {
     EmbeddingIndex(buckets, v, tables, planes, dims)
   }
 
-  /** [[cosineCrossPairsLsh]] against a prebuilt (typically persisted)
-    * [[EmbeddingIndex]] — the per-batch incremental form. The batch is
-    * bucketed with the INDEX's (tables, planes, dims), so hyperplane
-    * mismatch can't happen by construction. */
+  /** Incremental embedding dedup — cosine near-dup pairs between an
+    * existing corpus and a NEW batch, the embedding-side analog of
+    * [[minhashLshCrossPairs]]: a *bipartite* (table, bucket) join
+    * (corpus buckets × batch buckets — the corpus is never self-paired),
+    * then the exact verify fold. Per-batch cost is |batch|-proportional
+    * against the corpus bucket index; at 100 TB the corpus side's
+    * buckets are computed once and persisted, exactly like
+    * [[CorpusIndex]] for shingles. Output is (vec_i = corpus id,
+    * vec_j = batch id, cos ≥ threshold); id sets are assumed disjoint
+    * (different batches by contract). Same (tables, planes) recall
+    * tuning as [[cosinePairsLsh]].
+    *
+    * This is the per-batch form against a prebuilt (typically persisted)
+    * [[EmbeddingIndex]]. The batch is bucketed with the INDEX's (tables,
+    * planes, dims), so hyperplane mismatch can't happen by construction.
+    * The linear-at-decaying-recall budget of [[cosinePairsLshPinned]]
+    * carries over by building the index with
+    * `(tables, lshPlanesFor(nCorpus))`. */
   def cosineCrossPairsIndexed(corpus: EmbeddingIndex, batch: DataFrame,
                               idCol: String, vecCol: String,
                               threshold: Double = 0.95,

@@ -57,18 +57,6 @@ object Drift {
       .select("bin", "bin_lo", "bin_hi", "a_n", "b_n",
         "a_frac", "b_frac", "gap")
 
-  /** [[driftBins]] with the shared grid bounds taken from one (min, max)
-    * scan over the UNION of both sides — the bounds must be shared or
-    * the bins don't align. */
-  def driftBinsAuto(a: DataFrame, b: DataFrame, valueCol: String,
-                    bins: Int): DataFrame = {
-    val v = col(valueCol).cast("long")
-    val r = a.select(v.as("__v")).union(b.select(v.as("__v")))
-      .agg(min("__v"), max("__v")).first()
-    require(!r.isNullAt(0), s"$valueCol has no non-null values")
-    driftBins(a, b, valueCol, r.getLong(0), r.getLong(1), bins)
-  }
-
   /** One-row drift summary: (a_total, b_total, tvd, max_gap).
     * tvd = Σ|a_n·b_total − b_n·a_total| / (2·a_total·b_total) with the
     * numerator in exact DECIMAL(38) integer arithmetic (sound beyond

@@ -29,9 +29,10 @@ import org.apache.spark.sql.expressions.Window
   *     but not the full pigeonhole guarantee.
   *
   * Like the shingle index (Dedup), grams are xxhash64'd so the self-join
-  * shuffles 8-byte keys, and a df-cap bounds the Σdf² of pathological
-  * grams (same contract as `jaccardPairs(maxDf)`: a pair is missed only
-  * if EVERY shared gram exceeds the cap — at distance ≤ k a pair shares
+  * shuffles 8-byte keys, and a df cap bounds the Σdf² of pathological
+  * grams where it pays (same contract as the capped branch of
+  * [[Dedup.jaccardPairsAdaptive]]: a pair is missed only if EVERY shared
+  * gram exceeds the cap — at distance ≤ k a pair shares
   * ≥ minLen−q+1−k·q grams, so a cap ≥ that margin per-pair cannot
   * destroy recall unless all its grams are corpus-common).
   */
@@ -74,6 +75,16 @@ object Linkage {
     sideNames(df, side, idCol, nameCol).select(col(s"${side}_id"),
       explode(gramHashes(col(s"${side}_name"), q)).as("gh"))
 
+  /** A gram is pathological when it occurs in more than this share of
+    * the right side's records. A RATIO, not an absolute df: record
+    * frequency scales with the corpus, so a fixed cap that prunes
+    * correctly at one scale silently destroys recall at 10× (measured on
+    * the documents fixture: worst per-record min-gram-df is ~4–6% of the
+    * corpus at both sf0.01 and sf0.1, so 0.1 keeps every record's
+    * discriminative grams at any scale while an absolute cap tuned at
+    * sf0.01 missed half the sf0.1 matches). */
+  private val MaxDfRatio = 0.1
+
   /** All (left_id, right_id, dist) pairs with levenshtein ≤ maxDist,
     * via q-gram inverted-index blocking + exact verify. Both inputs are
     * (id, name) projections; ids must be disjoint across sides only if
@@ -81,49 +92,65 @@ object Linkage {
     * is applied — pass the same frame twice for self-linkage and filter
     * `left_id < right_id` downstream).
     *
-    * `maxDfRatio` is the scale-correct form of the cap: a gram is
-    * pathological if it occurs in more than ratio·|right| records —
-    * record frequency scales with the corpus, so a FIXED absolute cap
-    * that prunes correctly at one scale silently destroys recall at 10×
-    * (measured on the documents fixture: worst per-record min-gram-df is
-    * ~4–6% of the corpus at both sf0.01 and sf0.1, so a 0.1 ratio keeps
-    * every record's discriminative grams at any scale while an absolute
-    * cap tuned at sf0.01 missed half the sf0.1 matches). Costs one
-    * count() of the right side. */
+    * The df cap ([[MaxDfRatio]]) is engaged ADAPTIVELY, by the same rule
+    * as [[Dedup.jaccardPairsAdaptive]] ([[Dedup.capPays]]): one probe
+    * job computes the EXACT candidate volumes with and without the cap,
+    * and the cap machinery (df filter join + the capped-index cache) is
+    * paid only when it deletes at least 3/4 of the volume. The round-6
+    * measurement that forced this criterion: an absolute small-volume
+    * threshold is wrong in BOTH directions — on the tiny-vocab documents
+    * fixture the cap wins at every scale (sf0.01: capped 0.9 s vs
+    * uncapped 1.9 s; sf0.1: 3.6 s vs 4.7 s, cap deletes ~90% of the
+    * volume), while on a diverse-vocabulary corpus the cap deletes
+    * ~nothing at ANY volume and its stages are pure tax. Savings, not
+    * size, is the signal. The ratio cap's `|right|` count rides the probe
+    * job itself, and the probe's side effect of materializing both index
+    * caches before the candidate join is itself the measured engaged-path
+    * win (0.88 s vs 1.14 s direct-capped at sf0.01).
+    *
+    * EAGER — the probe runs one Spark job at call time (a data-dependent
+    * plan choice). Recall: the uncapped branch is the FULL pigeonhole
+    * contract — a superset of the capped branch's recall, so flipping
+    * branches can only add true pairs, never lose one. */
   def qgramPairs(left: DataFrame, right: DataFrame,
                  idCol: String, nameCol: String,
-                 maxDist: Int = 2, q: Int = 3,
-                 maxDf: Option[Int] = None,
-                 maxDfRatio: Option[Double] = None): DataFrame = {
-    require(maxDf.isEmpty || maxDfRatio.isEmpty,
-      "maxDf and maxDfRatio are mutually exclusive")
+                 maxDist: Int = 2, q: Int = 3): DataFrame =
+    qgramPairsWith(left, right, idCol, nameCol, maxDist, q, engage = None)._1
+
+  /** [[qgramPairs]] with its cap decision exposed: `engage` = None lets
+    * the probe decide, `Some(b)` forces the branch (specs pin both
+    * through here). Returns the pairs and whether the cap was applied —
+    * never on an empty gram join, which has no cap to apply. */
+  private[graft] def qgramPairsWith(left: DataFrame, right: DataFrame,
+                                    idCol: String, nameCol: String,
+                                    maxDist: Int, q: Int,
+                                    engage: Option[Boolean]): (DataFrame, Boolean) = {
+    // ONE index build per side, shared by the probe and the chosen branch
     val li = cached(sideIndex(left, "left", idCol, nameCol, q))
-    val ri0 = sideIndex(right, "right", idCol, nameCol, q)
-    val cap0 = maxDfRatio
-      .map(r => math.max(1L, math.ceil(r * right.count()).toLong).toInt)
-      .orElse(maxDf)
-    val ri = cached(cappedRight(ri0, cap0))
-    pairsFromIndexes(li, ri, left, right, idCol, nameCol, maxDist, q)
+    val ri0 = cached(sideIndex(right, "right", idCol, nameCol, q))
+    val (vol, volCapped, cap) = qgramVolumes(li, ri0, right)
+    val engaged = cap.filter(_ => engage.getOrElse(Dedup.capPays(vol, volCapped)))
+    // engaged: the capped index is a THIRD window entry (raw right +
+    // capped right) — the raw cache feeds the cap's own df aggregation
+    // and filter join, which the probe already materialized it for
+    val ri = engaged.fold(ri0)(c => cached(cappedRight(ri0, c)))
+    (pairsFromIndexes(li, ri, left, right, idCol, nameCol, maxDist, q),
+      engaged.isDefined)
   }
 
-  /** The right index restricted to grams with df ≤ cap (identity when no
-    * cap): candidate cost per gram is df_l·df_r, so bounding ONE side
-    * bounds the product; recall contract as in the object scaladoc. */
-  private def cappedRight(ri0: DataFrame, cap0: Option[Int]): DataFrame =
-    cap0 match {
-      case None => ri0
-      case Some(cap) =>
-        ri0.join(ri0.groupBy("gh").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= cap).select("gh"), "gh")
-    }
+  /** The right index restricted to grams with df ≤ cap: candidate cost
+    * per gram is df_l·df_r, so bounding ONE side bounds the product;
+    * recall contract as in the object scaladoc. */
+  private def cappedRight(ri0: DataFrame, cap: Int): DataFrame =
+    ri0.join(ri0.groupBy("gh").agg(count(lit(1)).as("df"))
+      .filter(col("df") <= cap).select("gh"), "gh")
 
   /** Candidate generation + exact verify over already-built gram
-    * indexes — the shared tail of [[qgramPairs]] and
-    * [[qgramPairsAdaptive]]. BOTH `li` and `ri` (already capped if the
-    * caller wants a cap) must be cache-registered by the caller, exactly
-    * once each — registering an alias of an already-registered plan
-    * burns a window slot and lets one alias's eviction unpersist the
-    * entry the other relies on. */
+    * indexes — the tail of both [[qgramPairs]] branches. BOTH `li` and
+    * `ri` (already capped on the engaged branch) must be cache-registered
+    * by the caller, exactly once each — registering an alias of an
+    * already-registered plan burns a window slot and lets one alias's
+    * eviction unpersist the entry the other relies on. */
   private def pairsFromIndexes(li: DataFrame, ri: DataFrame,
                                left: DataFrame, right: DataFrame,
                                idCol: String, nameCol: String,
@@ -179,8 +206,8 @@ object Linkage {
     * branch decision, and Σdf_l·df_r can overflow a long exactly on the
     * corpora where the decision matters. An empty gram join (no shared
     * q-gram) has no cap: both volumes are 0, which never engages it. */
-  private def qgramVolumes(li: DataFrame, ri0: DataFrame, right: DataFrame,
-                           maxDfRatio: Double): (Double, Double, Option[Int]) = {
+  private def qgramVolumes(li: DataFrame, ri0: DataFrame,
+                           right: DataFrame): (Double, Double, Option[Int]) = {
     val dfl = li.groupBy("gh").agg(count(lit(1)).cast("double").as("df_l"))
     val dfr = ri0.groupBy("gh").agg(count(lit(1)).cast("double").as("df_r"))
     // the ratio cap's |right| count rides the SAME job as the volumes
@@ -189,7 +216,7 @@ object Linkage {
     // old separate `right.count()` computed (r19, guide §1.2: one fused
     // probe job). max(__cap) just carries the scalar back out.
     val nr = right.agg(count(lit(1)).as("__nr"))
-    val capCol = greatest(lit(1L), ceil(lit(maxDfRatio) * col("__nr")))
+    val capCol = greatest(lit(1L), ceil(lit(MaxDfRatio) * col("__nr")))
     val row = dfl.join(dfr, "gh")
       .crossJoin(broadcast(nr))
       .agg(sum(col("df_l") * col("df_r")).as("vol"),
@@ -201,74 +228,18 @@ object Linkage {
     else (row.getDouble(0), row.getDouble(1), Some(row.getLong(2).toInt))
   }
 
-  /** [[qgramPairs]] with the df cap engaged ADAPTIVELY, by the same
-    * criterion as [[Dedup.jaccardPairsAdaptive]]: one probe job computes
-    * the EXACT candidate volumes with and without the cap, and the cap
-    * machinery (df filter join + the capped-index cache) is paid only
-    * when it deletes at least 1−1/`engageFactor` of the volume. The
-    * round-6 measurement that forced this criterion: an absolute
-    * small-volume threshold is wrong in BOTH directions — on the
-    * tiny-vocab documents fixture the cap wins at every scale (sf0.01:
-    * capped 0.9 s vs uncapped 1.9 s; sf0.1: 3.6 s vs 4.7 s, cap deletes
-    * ~90% of the volume), while on a diverse-vocabulary corpus the cap
-    * deletes ~nothing at ANY volume and its stages are pure tax. Savings,
-    * not size, is the signal. The ratio cap's `|right|` count rides the
-    * probe job itself (broadcast 1-row cross join — r19; it was a
-    * separate driver action before), and the probe's side effect of
-    * materializing both index caches before the candidate join is
-    * itself the measured engaged-path win (0.88 s vs 1.14 s
-    * direct-capped at sf0.01).
-    *
-    * Recall: the uncapped branch is the FULL pigeonhole contract — a
-    * superset of the capped branch's recall, so flipping branches can
-    * only add true pairs, never lose one. */
-  def qgramPairsAdaptive(left: DataFrame, right: DataFrame,
-                         idCol: String, nameCol: String,
-                         maxDist: Int = 2, q: Int = 3,
-                         maxDfRatio: Double = 0.1,
-                         engageFactor: Double = 4.0): DataFrame = {
-    // ONE index build per side, shared by the probe and the chosen branch
-    val li = cached(sideIndex(left, "left", idCol, nameCol, q))
-    val ri0 = cached(sideIndex(right, "right", idCol, nameCol, q))
-    val (vol, volCapped, cap) = qgramVolumes(li, ri0, right, maxDfRatio)
-    // the cap engages only when the probe measured one (never on an empty
-    // gram join) and it deletes enough of the volume
-    val engaged = cap.filter(_ => vol > engageFactor * math.max(volCapped, 1.0))
-    if (engaged.isEmpty)
-      pairsFromIndexes(li, ri0, left, right, idCol, nameCol, maxDist, q)
-    else {
-      // engaged: the capped index is a THIRD window entry (raw right +
-      // capped right) — the raw cache feeds the cap's own df aggregation
-      // and filter join, which the probe already materialized it for
-      val ri = cached(cappedRight(ri0, engaged))
-      pairsFromIndexes(li, ri, left, right, idCol, nameCol, maxDist, q)
-    }
-  }
-
-  /** [[qgramBestMatch]] over [[qgramPairsAdaptive]] candidates — the
-    * benched linkage entry: the cap is paid exactly when the probe
-    * measures it deleting candidate volume, at any scale. */
-  def qgramBestMatchAdaptive(dirty: DataFrame, clean: DataFrame,
-                             idCol: String, nameCol: String,
-                             maxDist: Int = 2, q: Int = 3,
-                             maxDfRatio: Double = 0.1,
-                             engageFactor: Double = 4.0): DataFrame =
-    bestOf(qgramPairsAdaptive(dirty, clean, idCol, nameCol, maxDist, q,
-      maxDfRatio, engageFactor), dirty, clean, idCol, nameCol)
-
   /** Best clean match per dirty record (min distance, then min clean id)
     * over [[qgramPairs]] candidates — the scale-safe composition of the
     * classic best-match shape: blocking cardinality grows with the
-    * corpus, so no fixed-cardinality cliff (the benched linkage row uses
-    * this; [[blockedBestMatch]] keeps the equi-block form for callers
-    * whose key genuinely grows with the data). */
+    * corpus, so no fixed-cardinality cliff, and the cap is paid exactly
+    * when the probe measures it deleting candidate volume (the benched
+    * linkage entry; [[blockedBestMatch]] keeps the equi-block form for
+    * callers whose key genuinely grows with the data). */
   def qgramBestMatch(dirty: DataFrame, clean: DataFrame,
                      idCol: String, nameCol: String,
-                     maxDist: Int = 2, q: Int = 3,
-                     maxDf: Option[Int] = None,
-                     maxDfRatio: Option[Double] = None): DataFrame =
-    bestOf(qgramPairs(dirty, clean, idCol, nameCol,
-      maxDist, q, maxDf, maxDfRatio), dirty, clean, idCol, nameCol)
+                     maxDist: Int = 2, q: Int = 3): DataFrame =
+    bestOf(qgramPairs(dirty, clean, idCol, nameCol, maxDist, q),
+      dirty, clean, idCol, nameCol)
 
   /** Shared best-match selection: min (dist, clean id) per dirty record,
     * names re-attached from the compact (id, name) frames. */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Scale posture (100 TB): the lexical arm is the inverted-index join
   * shape shared with [[Contamination]] — postings are (token, doc) rows,
   * `maxDf` caps boilerplate-token posting lists BEFORE the query join
-  * (a df-capped stop-set, the [[Dedup.jaccardPairsCapped]] argument: a
+  * (a df-capped stop-set, the [[Dedup.jaccardPairsAdaptive]] argument: a
   * token in every document contributes ~0 idf bits but would quadratically
   * dominate the join), and the only wide shuffle carries
   * (query_id, nn_id, int) rows. The vector arm is pluggable: the bundled

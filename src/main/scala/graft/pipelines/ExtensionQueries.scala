@@ -415,27 +415,20 @@ object ExtensionQueries {
     "q_dedup_exact_key" -> ((s, dir) =>
       Dedup.exactByKey(docs(s, dir), Seq("text"), "doc_id")),
 
+    // the lazy exact form — the one every composing cell uses
     "q_dedup_jaccard" -> ((s, dir) =>
       (Dedup.jaccardPairs(docs(s, dir), "doc_id", "text", 3, JaccardThreshold))),
 
-    // the df-capped 100 TB mode, sharing the exact oracle: candidate
-    // generation skips shingles with df > 50, the verify is exact over the
-    // full index, and a pair is missed only if EVERY shared shingle
-    // exceeds the cap — near-dups at J ≥ 0.8 share their (mostly rare)
-    // shingles, so the cap provably loses nothing here (spec-checked too)
-    "q_dedup_jaccard_capped" -> ((s, dir) =>
-      (Dedup.jaccardPairs(docs(s, dir), "doc_id", "text", 3, JaccardThreshold,
-          maxDf = Some(50)))),
-
-    // the adaptive mode: a one-job probe over the shingle index projects
-    // the candidate-join volume and engages the cap only when the exact
-    // uncapped volume Σdf²/2 exceeds 4× the exact capped volume
-    // Σ_{df≤cap}df²/2 — on this benign fixture it stays uncapped
+    // the eager scale-insured form: a one-job probe over the shingle index
+    // projects the candidate-join volume and engages its df cap (50) only
+    // when the exact uncapped volume Σdf²/2 exceeds 4× the exact capped
+    // volume Σ_{df≤50}df²/2 — on this benign fixture it stays uncapped
     // (no insurance premium), on a common-shingle corpus it pays the cap
     // and keeps the measured 19× win; either branch shares this oracle
+    // (DedupSpec forces the capped branch on this corpus)
     "q_dedup_jaccard_adaptive" -> ((s, dir) =>
       (Dedup.jaccardPairsAdaptive(docs(s, dir), "doc_id", "text", 3,
-          JaccardThreshold, cap = 50))),
+          JaccardThreshold))),
 
     // exact shared-passage detection via content-defined anchoring: a
     // window is an anchor iff md5 of its leading 8 chars starts with '0'
@@ -882,20 +875,17 @@ object ExtensionQueries {
         "doc_id", "text", 3, ContamThreshold))
     }),
 
-    // the 100 TB decontamination shape: a Bloom filter of the eval
-    // shingle set drops definite non-member train shingles BEFORE the
-    // exchange; FPs die in the exact join, so the rows equal
-    // q_contam_pairs exactly and the two share one oracle. ADAPTIVE:
-    // a row-count probe engages the sketch only on fixed-eval geometry
-    // (train ≥ 24× eval) — on this balanced 6:1 fixture split the build's
-    // two extra eval walks cost more than the reduced exchange saves, so
-    // the probe picks the exact plan and the sketch premium vanishes
+    // the 100 TB decontamination shape: a Bloom sketch of the eval
+    // shingle set, built once (two eager jobs), drops definite non-member
+    // train shingles BEFORE the exchange; FPs die in the exact join, so
+    // the rows equal q_contam_pairs exactly and the two share one oracle
     "q_contam_bloom" -> ((s, dir) => {
       val d = docs(s, dir)
-      (Contamination.containmentPairsBloomAdaptive(
-        d.filter(col("doc_id") % ContamEvalMod =!= 0),
-        d.filter(col("doc_id") % ContamEvalMod === 0),
-        "doc_id", "text", 3, ContamThreshold))
+      val eval = d.filter(col("doc_id") % ContamEvalMod === 0)
+      (Contamination.containmentPairs(
+        d.filter(col("doc_id") % ContamEvalMod =!= 0), eval,
+        "doc_id", "text", 3, ContamThreshold,
+        evalFilter = Some(Contamination.evalFilterBytes(eval, "doc_id", "text", 3))))
     }),
 
     "q_contam_summary" -> ((s, dir) => {
@@ -1674,9 +1664,8 @@ object ExtensionQueries {
 
     "q_dedup_jaccard" -> jaccardOracle(JaccardThreshold),
 
-    // capped candidate generation + exact verify ⇒ exact pair set (see
-    // the query comment); the oracle is the uncapped exact computation
-    "q_dedup_jaccard_capped" -> jaccardOracle(JaccardThreshold),
+    // either branch of the adaptive cap (capped candidates + exact verify)
+    // ⇒ exact pair set; the oracle is the uncapped exact computation
     "q_dedup_jaccard_adaptive" -> jaccardOracle(JaccardThreshold),
 
     // both engines compute md5 as lowercase hex and 1-based substring,

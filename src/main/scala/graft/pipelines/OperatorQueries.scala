@@ -660,13 +660,13 @@ object OperatorQueries {
             col("doc_id"),
             concat(substring(col("text"), 1, 10), substring(col("text"), 12, 14),
               substring(col("text"), 27, 14)).as("name"))
-        // adaptive: a one-job probe measures the cap's candidate-volume
-        // savings and pays the cap stages only when they delete ≥ 3/4 of
-        // the volume — on this tiny-vocab fixture the cap wins at every
+        // a one-job probe measures the df cap's candidate-volume savings
+        // and pays the cap stages only when they delete ≥ 3/4 of the
+        // volume — on this tiny-vocab fixture the cap wins at every
         // scale (measured: the probe's cache pre-materialization makes
-        // engaged-adaptive faster than even the direct capped call)
-        (graft.ops.Linkage.qgramBestMatchAdaptive(dirty, corpus, "doc_id",
-            "name", maxDist = 2, q = 3, maxDfRatio = 0.1))
+        // the engaged branch faster than an unprobed capped call)
+        (graft.ops.Linkage.qgramBestMatch(dirty, corpus, "doc_id",
+            "name", maxDist = 2, q = 3))
       }),
       """WITH corpus AS (
         |  SELECT doc_id, substr(text, 1, 40) AS nm FROM documents),
@@ -692,12 +692,13 @@ object OperatorQueries {
     // SCALE.md round 4). Probes are 200 perturbed 40-char DOCUMENT
     // prefixes (diverse word sequences — the near-constant supplier/part
     // name fixtures are the adversarial case where content blocking
-    // degenerates to all-pairs) against the full corpus with a df RATIO
-    // cap on pathological grams (scale-invariant — an absolute cap tuned
-    // at sf0.01 silently lost half the sf0.1 matches; Linkage scaladoc);
-    // the oracle is the EXACT probe×corpus restriction, so the capped
-    // candidates provably lose nothing (worst per-doc min-gram-df is
-    // ~6% of corpus at either scale, under the 10% cap).
+    // degenerates to all-pairs) against the full corpus; Linkage caps
+    // pathological grams at a df RATIO of 10% of the corpus
+    // (scale-invariant — an absolute cap tuned at sf0.01 silently lost
+    // half the sf0.1 matches; Linkage scaladoc). The oracle is the EXACT
+    // probe×corpus restriction, so the capped candidates provably lose
+    // nothing (worst per-doc min-gram-df is ~6% of corpus at either
+    // scale, under the 10% cap).
     "q_fuzzy_qgram" -> (
       ((s: SparkSession, dir: String) => {
         val corpus = docs(s, dir)
@@ -706,12 +707,12 @@ object OperatorQueries {
           col("doc_id"),
           concat(substring(col("text"), 1, 6), substring(col("text"), 8, 33))
             .as("name"))
-        // adaptive: the probe engages the ratio cap exactly when it
-        // measures the cap deleting candidate volume — here the cap
-        // deletes ~90% at every scale, so the capped branch runs with
-        // both index caches pre-materialized
-        (graft.ops.Linkage.qgramPairsAdaptive(dirty, corpus, "doc_id", "name",
-            maxDist = 2, q = 3, maxDfRatio = 0.1))
+        // the probe engages the ratio cap exactly when it measures the
+        // cap deleting candidate volume — here the cap deletes ~90% at
+        // every scale, so the capped branch runs with both index caches
+        // pre-materialized
+        (graft.ops.Linkage.qgramPairs(dirty, corpus, "doc_id", "name",
+            maxDist = 2, q = 3))
       }),
       """WITH corpus AS (
         |  SELECT doc_id, substr(text, 1, 40) AS nm FROM documents),

@@ -128,22 +128,18 @@ object CorpusStreams {
     * containment groupBy and the anti join's stream-derived right side
     * rule out a direct streaming plan; per-micro-batch batch semantics is
     * how ingest gates run anyway). Per-batch cost is |batch|-proportional:
-    * the eval side is a fixed artifact, and with `evalBloom` (prebuild
+    * the eval side is a fixed artifact, and with `evalFilter` (prebuild
     * ONCE at stream start via
     * [[graft.ops.Contamination.evalFilterBytes]]) each batch's
     * non-matching shingles — the overwhelming majority — drop at the scan
-    * with zero per-batch build jobs. Bloom or not, the surviving rows are
+    * with zero per-batch build jobs. Filter or not, the surviving rows are
     * identical (FPs die in the exact containment join). */
   def contaminationGate(stream: DataFrame, eval: DataFrame, idCol: String,
                         textCol: String = "text", n: Int = 3,
                         threshold: Double = 0.5,
-                        evalBloom: Option[Array[Byte]] = None): DataFrame = {
-    val pairs = evalBloom match {
-      case Some(bytes) => graft.ops.Contamination.containmentPairsBloom(
-        stream, eval, idCol, textCol, n, threshold, filterBytes = Some(bytes))
-      case None => graft.ops.Contamination.containmentPairs(
-        stream, eval, idCol, textCol, n, threshold)
-    }
+                        evalFilter: Option[Array[Byte]] = None): DataFrame = {
+    val pairs = graft.ops.Contamination.containmentPairs(
+      stream, eval, idCol, textCol, n, threshold, evalFilter)
     stream.join(pairs.select(col("train_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
   }

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.ops.Contamination
+import graft.functions.BloomMightContain.mightContain
+import graft.functions.ShingleHashes.shingleHashes
+import graft.ops.{BloomJoin, Contamination}
 
 class ContaminationSpec extends SparkSpec {
   import spark.implicits._
@@ -41,44 +44,42 @@ class ContaminationSpec extends SparkSpec {
     assert(byId(3L) === ((0.0, None, false)))
   }
 
-  test("bloom-reduced pairs equal the exact pairs even at fpp 0.5") {
+  private def docSplit = {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val train = docs.filter($"doc_id" % 7 =!= 0)
-    val eval = docs.filter($"doc_id" % 7 === 0)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = key(Contamination
+    (docs.filter($"doc_id" % 7 =!= 0), docs.filter($"doc_id" % 7 === 0))
+  }
+
+  private def keyed(df: DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
+  test("bloom-reduced pairs equal the exact pairs even at fpp 0.5") {
+    val (train, eval) = docSplit
+    val exact = keyed(Contamination
       .containmentPairs(train, eval, "doc_id", "text", 3, 0.5))
-    // fpp 0.5 guarantees false positives reach the verify join; the
-    // output must not change — fpp tunes shuffle volume, never rows
-    val bloom = key(Contamination
-      .containmentPairsBloom(train, eval, "doc_id", "text", 3, 0.5, fpp = 0.5))
+    // a deliberately loose sketch of the eval shingle set: fpp 0.5 lets
+    // false positives reach the exact join, which must drop every one
+    val evalSh = eval.select(explode(shingleHashes($"text", 3)).as("shash"))
+    val loose = BloomJoin.buildFilter(evalSh, "shash", evalSh.count(), fpp = 0.5)
+    val admitted = train.select(explode(shingleHashes($"text", 3)).as("shash"))
+      .filter(mightContain($"shash", loose)).join(evalSh, Seq("shash"), "left_anti")
+    assert(!admitted.isEmpty, "the loose sketch admits non-member train shingles")
+    val bloom = keyed(Contamination.containmentPairs(train, eval, "doc_id", "text", 3, 0.5,
+      evalFilter = Some(loose)))
     assert(exact.nonEmpty)
     assert(bloom == exact)
   }
 
-  test("adaptive bloom engages on fixed-eval geometry, skips it balanced, rows identical") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val train = docs.filter($"doc_id" % 7 =!= 0)
-    val eval = docs.filter($"doc_id" % 7 === 0)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = key(Contamination
-      .containmentPairs(train, eval, "doc_id", "text", 3, 0.5))
-    // balanced 6:1 split, factor 24 -> probe must pick the exact plan
-    val balanced = key(Contamination.containmentPairsBloomAdaptive(
-      train, eval, "doc_id", "text", 3, 0.5, engageFactor = 24.0))
-    assert(balanced == exact && exact.nonEmpty)
-    // factor 1 forces the skewed decision -> bloom plan, same rows
-    val engaged = key(Contamination.containmentPairsBloomAdaptive(
-      train, eval, "doc_id", "text", 3, 0.5, engageFactor = 1.0))
-    assert(engaged == exact)
-    // a prebuilt sketch always rides (no probe, no build jobs)
-    val bytes = Contamination.evalFilterBytes(eval, "doc_id", "text", 3)
-    val prebuilt = key(Contamination.containmentPairsBloomAdaptive(
-      train, eval, "doc_id", "text", 3, 0.5, engageFactor = 1e18,
-      filterBytes = Some(bytes)))
-    assert(prebuilt == exact)
+  test("the train side is Bloom-reduced exactly when an evalFilter is passed, " +
+       "rows identical") {
+    val (train, eval) = docSplit
+    def reduced(df: DataFrame) =
+      df.queryExecution.optimizedPlan.toString.contains("bloom_might_contain")
+    val exactPlan = Contamination.containmentPairs(train, eval, "doc_id", "text", 3, 0.5)
+    val filtered = Contamination.containmentPairs(train, eval, "doc_id", "text", 3, 0.5,
+      evalFilter = Some(Contamination.evalFilterBytes(eval, "doc_id", "text", 3)))
+    assert(!reduced(exactPlan) && reduced(filtered))
+    val exact = keyed(exactPlan)
+    assert(exact.nonEmpty && keyed(filtered) == exact)
   }
 
   test("ties on containment break to the smaller train id") {

@@ -76,7 +76,6 @@ class ContractSpec extends SparkSpec {
     "q_dedup_incremental/jaccard:double",
     "q_dedup_jaccard/jaccard:double",
     "q_dedup_jaccard_adaptive/jaccard:double",
-    "q_dedup_jaccard_capped/jaccard:double",
     "q_dedup_minhash_lsh/jaccard:double", "q_dedup_semantic/cos:double",
     "q_drift_bins/a_frac:double", "q_drift_bins/b_frac:double",
     "q_drift_bins/gap:double", "q_drift_kl_batch/kl_per_token:double",

@@ -45,34 +45,45 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(out.head.getDouble(2) - 0.5) < 1e-15) // 2 common / 4 union
   }
 
+  /** (doc_i, doc_j) → jaccard of a pair frame. */
+  private def jaccardKeyed(pairs: org.apache.spark.sql.DataFrame) =
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+
   test("df-capped jaccardPairs reports exact similarities with full recall here") {
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val capped = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8, Some(50))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(capped == exact,
+    val exact = jaccardKeyed(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8))
+    val (capped, engaged) = Dedup.jaccardPairsWith(docs, "doc_id", "text", 3, 0.8,
+      engage = Some(true))
+    assert(engaged && exact.nonEmpty)
+    assert(jaccardKeyed(capped) == exact,
       "cap=50 on the fixture corpus must not lose pairs, and verify is exact")
   }
 
   test("adaptive df-cap: stays uncapped on the diverse fixture, engages " +
     "on a common-shingle corpus, same pairs either way") {
-    // fixture corpus: diverse vocabulary → Σdf²/2 ≪ 4·cap·Σdf → no cap
-    assert(!Dedup.jaccardCapEngages(docs, "doc_id", "text", 3, 50, 4.0))
-    val adaptive = Dedup.jaccardPairsAdaptive(docs, "doc_id", "text", 3, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(adaptive == exact)
-    // pathological corpus: every doc shares one hot prefix, so the hot
-    // shingles' df ≈ |docs| and Σdf² projects far above the capped bound
-    val hot = (0 until 400).map(i =>
-      (i.toLong, s"zz yy xx ww vv uu tt ss unique$i tail$i")).toDF("doc_id", "text")
-    assert(Dedup.jaccardCapEngages(hot, "doc_id", "text", 3, 8, 4.0))
-    val hotAdaptive = Dedup.jaccardPairsAdaptive(hot, "doc_id", "text", 3,
-        0.8, cap = 8).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hotExact = Dedup.jaccardPairs(hot, "doc_id", "text", 3, 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(hotAdaptive == hotExact) // no qualifying pairs either way here
+    // fixture corpus: diverse vocabulary → Σdf²/2 < 4·Σ_{df≤50}df²/2 → no cap
+    val (adaptive, engaged) = Dedup.jaccardPairsWith(docs, "doc_id", "text", 3, 0.8,
+      engage = None)
+    val exact = jaccardKeyed(Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.8))
+    assert(!engaged && exact.nonEmpty)
+    assert(jaccardKeyed(adaptive) == exact)
+    assert(jaccardKeyed(Dedup.jaccardPairsAdaptive(docs, "doc_id", "text", 3, 0.8)) == exact)
+    // pathological corpus: every doc opens with one hot prefix (6 shingles
+    // of df 440, over the cap of 50), so Σdf² dwarfs the capped volume;
+    // every 10th doc has a copy with its last token changed (17 of 19
+    // shingles shared, J ≈ 0.89) — pairs the capped branch can only find
+    // through their rare tail shingles
+    val prefix = "zz yy xx ww vv uu tt ss"
+    def tail(i: Int) = (0 until 12).map(k => s"t${i}x$k")
+    val hotRows = (0 until 400).map(i => (i.toLong, s"$prefix ${tail(i).mkString(" ")}")) ++
+      (0 until 400 by 10).map(i =>
+        (1000L + i, s"$prefix ${tail(i).init.mkString(" ")} t${i}y11"))
+    val hot = hotRows.toDF("doc_id", "text")
+    val (hotAdaptive, hotEngaged) = Dedup.jaccardPairsWith(hot, "doc_id", "text", 3, 0.8,
+      engage = None)
+    val hotExact = jaccardKeyed(Dedup.jaccardPairs(hot, "doc_id", "text", 3, 0.8))
+    assert(hotEngaged, "the hot prefix's volume must engage the cap")
+    assert(hotExact.keySet == (0 until 400 by 10).map(i => (i.toLong, 1000L + i)).toSet)
+    assert(jaccardKeyed(hotAdaptive) == hotExact)
   }
 
   test("cosinePairs refuses corpora beyond maxRows (anchor guard)") {
@@ -263,8 +274,9 @@ class DedupSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val corpus = e.filter($"vec_id" % 2 === 0)
     val batch = e.filter($"vec_id" % 2 === 1)
-    val got = Dedup.cosineCrossPairsLsh(corpus, batch, "vec_id", "embedding",
-        0.4, tables = 32, planes = 2)
+    val got = Dedup.cosineCrossPairsIndexed(
+        Dedup.buildEmbeddingIndex(corpus, "vec_id", "embedding", tables = 32, planes = 2),
+        batch, "vec_id", "embedding", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     // exact reference: all cross pairs over the threshold
     val want = Dedup.cosinePairs(e, "vec_id", "embedding", 0.4)
@@ -326,8 +338,9 @@ class DedupSpec extends SparkSpec {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val corpus = e.filter($"vec_id" % 2 === 0)
     val batch = e.filter($"vec_id" % 2 === 1)
-    val inline = Dedup.cosineCrossPairsLsh(corpus, batch, "vec_id", "embedding",
-        0.4, tables = 32, planes = 2)
+    val inline = Dedup.cosineCrossPairsIndexed(
+        Dedup.buildEmbeddingIndex(corpus, "vec_id", "embedding", tables = 32, planes = 2),
+        batch, "vec_id", "embedding", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val d = java.nio.file.Files.createTempDirectory("graft_eidx_").toString
     val built = Dedup.buildEmbeddingIndex(corpus, "vec_id", "embedding",
@@ -466,8 +479,10 @@ class DedupSpec extends SparkSpec {
       .map { case (i, v) => (i + 1, v.map(_ * 0.5f)) }
     val corpus = spark.createDataFrame(corpusRows).toDF("vec_id", "embedding")
     val batch = spark.createDataFrame(batchRows).toDF("vec_id", "embedding")
-    val out = Dedup.cosineCrossPairsLshPinned(corpus, batch, "vec_id",
-        "embedding", 0.95, tables = 8)
+    // pinned tables, planes occupancy-sized from the corpus count
+    val index = Dedup.buildEmbeddingIndex(corpus, "vec_id", "embedding",
+      tables = 8, planes = Dedup.lshPlanesFor(corpus.count()))
+    val out = Dedup.cosineCrossPairsIndexed(index, batch, "vec_id", "embedding", 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == corpusRows.filter(_._1 % 10 == 0)
       .map { case (i, _) => (i, i + 1) }.toSet)

@@ -43,15 +43,6 @@ class DriftSpec extends SparkSpec {
       bins.map(_.getAs[Double]("gap")).sum / 2.0) < 1e-9)
   }
 
-  test("auto bounds span the union of both sides") {
-    val a = Seq(0L, 10L).toDF("v")
-    val b = Seq(90L, 100L).toDF("v")
-    val bins = Drift.driftBinsAuto(a, b, "v", 10).collect()
-    // no rows dropped: each side's counts total its size
-    assert(bins.map(_.getAs[Long]("a_n")).sum == 2L)
-    assert(bins.map(_.getAs[Long]("b_n")).sum == 2L)
-  }
-
   test("tokenKlBySlice: identical slice distributions score exactly zero") {
     // two slices with the SAME token multiset: c_st·N = c_st·2n_s and
     // n_s·C_t = n_s·2c_st are equal term-by-term, so kl_bits = 0 exactly

@@ -216,6 +216,27 @@ class IoSpec extends SparkSpec {
     finally left.close()
   }
 
+  test("a legacy part copied after its stage dir is gone fails and re-creates no dir " +
+       "(local and non-local FileSystem)") {
+    Sources.configureFs(spark, Map("fs.ramfs.impl" -> classOf[RamFs].getName))
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq(s"file:${Files.createTempDirectory("graft_late")}",
+        s"ramfs:${Files.createTempDirectory(RamFs.root.toPath, "late")}").foreach { d =>
+      spark.range(0, 4).repartition(1).write.parquet(s"$d/raw")
+      val raw = new Path(s"$d/raw")
+      val fs = raw.getFileSystem(conf)
+      val part = fs.listStatus(raw).map(_.getPath).filter(_.getName.startsWith("part-")).head
+      val stage = new Path(s"$d/legacy.stage-late")
+      fs.mkdirs(stage)
+      Sinks.copyPart(part, stage, conf)
+      assert(IoSpec.partDigests(spark, stage.toString) == IoSpec.partDigests(spark, raw.toString), d)
+      // discard() ran while a copy task was still to start
+      fs.delete(stage, true)
+      intercept[java.io.IOException](Sinks.copyPart(part, stage, conf))
+      assert(!fs.exists(stage), s"$d: the late copy re-created $stage")
+    }
+  }
+
   test("an empty load lands, gated or not: raw keeps the frame's columns, " +
        "legacy stays readable, the check sees the inferred schema") {
     val d = Files.createTempDirectory("graft_empty").toString

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Linkage
 
 /** Fuzzy record linkage: q-gram blocking recall (pigeonhole guarantee),
-  * df-cap contract, and the blocked best-match shape. */
+  * the adaptive df cap's decision and contract, and the blocked
+  * best-match shape. */
 class LinkageSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,15 +25,20 @@ class LinkageSpec extends SparkSpec {
     (104L, "Zenith Unrelated Name")      // no match within 2
   ).toDF("id", "name")
 
-  test("qgramPairs equals the exact all-pairs restriction (recall holds)") {
-    val got = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val want = dirty.select(col("id").as("l"), col("name").as("ln"))
-      .crossJoin(clean.select(col("id").as("r"), col("name").as("rn")))
+  /** (left_id, right_id) → dist of a pair frame. */
+  private def keyed(pairs: DataFrame): Map[(Long, Long), Int] =
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+
+  /** The exact all-pairs restriction: every cross pair within `maxDist`. */
+  private def exactPairs(l: DataFrame, r: DataFrame, maxDist: Int) =
+    keyed(l.select(col("id").as("l"), col("name").as("ln"))
+      .crossJoin(r.select(col("id").as("r"), col("name").as("rn")))
       .withColumn("d", levenshtein(col("ln"), col("rn")))
-      .filter(col("d") <= 2)
-      .select("l", "r", "d")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+      .filter(col("d") <= maxDist).select("l", "r", "d"))
+
+  test("qgramPairs equals the exact all-pairs restriction (recall holds)") {
+    val got = keyed(Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2))
+    val want = exactPairs(dirty, clean, 2)
     assert(want.nonEmpty, "fixture plants matches")
     assert(got == want,
       s"missing=${want.keySet -- got.keySet}, extra=${got.keySet -- want.keySet}")
@@ -47,75 +54,47 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("df-cap drops only common-gram candidates; rare-gram matches survive") {
-    // 60 decoys sharing the gram-space of a common prefix + 1 real typo
-    // pair with rare grams: cap at 10 kills the decoy grams ("Common
-    // Widget ..." prefix grams have df ~ 61) but every distinctive gram
-    // of the real pair has df 2 — the pair survives, decoy self-matches
-    // (dist 0, shared rare suffix grams) also survive by the same rule.
-    val decoys = (0 until 60).map(i => (200L + i, f"Common Widget Co $i%02d"))
-    val real = Seq((301L, "Quixotic Vellum Traders"))
-    val base = (decoys ++ real).toDF("id", "name")
-    val probe = Seq((401L, "Quixotic Velum Traders")).toDF("id", "name") // 1 del
-    val got = Linkage.qgramPairs(probe, base, "id", "name",
-      maxDist = 2, maxDf = Some(10)).collect()
-    assert(got.map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq ==
-      Seq((401L, 301L, 1)))
-  }
-
-  test("maxDfRatio leaves the pair set unchanged") {
-    val base = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val ratio = Linkage.qgramPairs(dirty, clean, "id", "name", maxDist = 2,
-        maxDfRatio = Some(0.9)) // cap 5 of 5 records: prunes nothing
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(base.nonEmpty && ratio == base)
-    intercept[IllegalArgumentException] {
-      Linkage.qgramPairs(dirty, clean, "id", "name",
-        maxDf = Some(3), maxDfRatio = Some(0.5))
-    }
+    // 26 decoys share the gram space of a common prefix (df 26, over the
+    // ratio cap of ⌈0.1·27⌉ = 3); 10 probes are one-edit copies of decoys
+    // and one is a typo of a rare-gram name. The prefix grams make up
+    // almost all of the candidate volume, so qgramPairs' own probe
+    // engages the cap — and every true pair still shares a rare gram.
+    val decoys = ('a' to 'z').zipWithIndex.map { case (c, i) =>
+      (200L + i, s"Common Widget Co ${c.toString * 6}") }
+    val base = (decoys :+ ((301L, "Quixotic Vellum Traders"))).toDF("id", "name")
+    val probe = (decoys.take(10).map { case (id, nm) => (id + 1000L, nm.updated(19, '9')) } :+
+      ((401L, "Quixotic Velum Traders"))).toDF("id", "name")
+    val (pairs, engaged) = Linkage.qgramPairsWith(probe, base, "id", "name", 2, 3, None)
+    assert(engaged, "the prefix grams' volume must engage the cap")
+    val got = keyed(pairs)
+    assert(got == exactPairs(probe, base, 2))
+    assert(got == (decoys.take(10).map { case (id, _) => (id + 1000L, id) -> 1 } :+
+      ((401L, 301L) -> 1)).toMap)
   }
 
   test("qgramPairsAdaptive: both branches equal the exact all-pairs " +
        "restriction on the fixture") {
-    val want = dirty.select(col("id").as("l"), col("name").as("ln"))
-      .crossJoin(clean.select(col("id").as("r"), col("name").as("rn")))
-      .withColumn("d", levenshtein(col("ln"), col("rn")))
-      .filter(col("d") <= 2).select("l", "r", "d")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    // forced fast path: an astronomically-high engage factor keeps the
-    // cap off regardless of measured savings
-    val fast = Linkage.qgramPairsAdaptive(dirty, clean, "id", "name",
-        maxDist = 2, engageFactor = 1e18)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    // forced engage: engageFactor = 0 sends even this fixture down the
-    // ratio-capped path (cap 0.9·5 ⇒ prunes nothing here)
-    val engaged = Linkage.qgramPairsAdaptive(dirty, clean, "id", "name",
-        maxDist = 2, maxDfRatio = 0.9, engageFactor = 0.0)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(want.nonEmpty && fast == want && engaged == want)
+    val want = exactPairs(dirty, clean, 2)
+    // the fixture's matches share their grams with no one else: the
+    // probe keeps the cap off
+    val (own, ownEngaged) = Linkage.qgramPairsWith(dirty, clean, "id", "name", 2, 3, None)
+    val (fast, offEngaged) = Linkage.qgramPairsWith(dirty, clean, "id", "name", 2, 3, Some(false))
+    // forced engage: cap ⌈0.1·5⌉ = 1 drops every gram two clean names share
+    val (capped, onEngaged) = Linkage.qgramPairsWith(dirty, clean, "id", "name", 2, 3, Some(true))
+    assert(!ownEngaged && !offEngaged && onEngaged)
+    assert(want.nonEmpty && keyed(own) == want && keyed(fast) == want && keyed(capped) == want)
   }
 
   test("adaptive linkage over disjoint vocabularies (zero shared q-grams) " +
        "is empty and never engages a cap") {
     val left = Seq((1L, "aaaaaa"), (2L, "abababab")).toDF("id", "name")
     val right = Seq((11L, "zzzzzz"), (12L, "zyzyzyzy")).toDF("id", "name")
-    // engageFactor < 0 would engage on ANY measured volume, so only the
-    // absent cap of the empty gram join keeps the cap machinery off
-    Seq(4.0, -1.0).foreach { f =>
-      assert(Linkage.qgramPairsAdaptive(left, right, "id", "name",
-        engageFactor = f).collect().isEmpty)
-      assert(Linkage.qgramBestMatchAdaptive(left, right, "id", "name",
-        engageFactor = f).collect().isEmpty)
+    // even a forced engage finds no cap on an empty gram join
+    Seq(None, Some(true)).foreach { engage =>
+      val (pairs, engaged) = Linkage.qgramPairsWith(left, right, "id", "name", 2, 3, engage)
+      assert(!engaged && pairs.collect().isEmpty, s"engage = $engage")
     }
-  }
-
-  test("qgramBestMatchAdaptive matches qgramBestMatch on the fixture") {
-    val base = Linkage.qgramBestMatch(dirty, clean, "id", "name", maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getInt(4))).toSet
-    val adaptive = Linkage.qgramBestMatchAdaptive(dirty, clean, "id", "name",
-        maxDist = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getInt(4))).toSet
-    assert(base.nonEmpty && adaptive == base)
+    assert(Linkage.qgramBestMatch(left, right, "id", "name").collect().isEmpty)
   }
 
   test("gramless short strings pair via the exact length-banded pass") {
@@ -125,13 +104,8 @@ class LinkageSpec extends SparkSpec {
     val l = Seq((1L, "ab"), (2L, "x"), (3L, "abc")).toDF("id", "name")
     val r = Seq((10L, "ab"), (11L, "abc"), (12L, "abcd"), (13L, "xz"),
       (14L, "zzzzzz")).toDF("id", "name")
-    val got = Linkage.qgramPairs(l, r, "id", "name", maxDist = 2)
-      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap
-    val want = l.select(col("id").as("li"), col("name").as("ln"))
-      .crossJoin(r.select(col("id").as("ri"), col("name").as("rn")))
-      .withColumn("d", levenshtein(col("ln"), col("rn")))
-      .filter(col("d") <= 2).select("li", "ri", "d")
-      .collect().map(x => (x.getLong(0), x.getLong(1)) -> x.getInt(2)).toMap
+    val got = keyed(Linkage.qgramPairs(l, r, "id", "name", maxDist = 2))
+    val want = exactPairs(l, r, 2)
     assert(got((1L, 10L)) == 0, "identical 2-char names pair at distance 0")
     assert(got == want,
       s"missing=${want.keySet -- got.keySet}, extra=${got.keySet -- want.keySet}")

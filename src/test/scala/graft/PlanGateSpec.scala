@@ -109,15 +109,13 @@ class PlanGateSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     graft.ops.CacheWindows.releaseAll()
     val docs = spark.read.parquet(s"$gateSf/documents.parquet")
-    graft.ops.Dedup.jaccardPairsAdaptive(docs, "doc_id", "text", 3, 0.8,
-      cap = 50).count()
+    graft.ops.Dedup.jaccardPairsAdaptive(docs, "doc_id", "text", 3, 0.8).count()
     val corpus = docs.select(col("doc_id"),
       substring(col("text"), 1, 40).as("name"))
     val dirty = docs.filter(col("doc_id") < 50).select(col("doc_id"),
       concat(substring(col("text"), 1, 6),
         substring(col("text"), 8, 33)).as("name"))
-    graft.ops.Linkage.qgramBestMatchAdaptive(dirty, corpus,
-      "doc_id", "name").count()
+    graft.ops.Linkage.qgramBestMatch(dirty, corpus, "doc_id", "name").count()
     graft.ops.Ranks.globalPercentRank(docs, "n_chars").count()
     // the query layer's window, through the supplier mart's diamond
     graft.pipelines.SupplierPerformance(spark, gateSf).count()
