@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ConfScope
 
 /** Model-based document classification — the trained quality/language
   * filter stage of large-corpus pipelines (a fastText-class classifier
@@ -288,11 +289,10 @@ object Classifier {
     // coalescing already-tiny reduce stages, and it pays a scheduler
     // job per exchange to do it (probe-measured: 11 jobs → 3 for the
     // collects). The corpus-scale scoring DAG below runs OUTSIDE the
-    // window with AQE intact. The window rides [[ConfWindows]] — the
-    // JVM-shared refcounted bookkeeper Quantiles uses too — so
-    // overlapping windows on one session can't lose the original value;
-    // queries planned inside a window lose adaptivity, never
-    // correctness.
+    // window with AQE intact. The window is a cloned session
+    // ([[ConfScope]]): both actions run on frames re-bound to it (the
+    // persisted vocabulary frame is read from the shared cache there),
+    // and no query planned on `spark` meanwhile loses AQE.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -309,21 +309,22 @@ object Classifier {
     // branches; the saved scheduler action doesn't cover that.
     val labelT = base.schema("__label").dataType
     val (dcRows, gridRaw) =
-      ConfWindows.withOverrides(spark,
-        Seq("spark.sql.adaptive.enabled" -> "false")) {
-        val dcJob = Future(docs
+      ConfScope.run(spark, Seq("spark.sql.adaptive.enabled" -> "false")) { s =>
+        val docsS = ConfScope.rebind(s, docs)
+        val enrichedS = ConfScope.rebind(s, enriched)
+        val dcJob = Future(docsS
           .groupBy(pmod(col(idCol), lit(folds)).cast("long").as("fold"),
             col(labelCol).as("cls"))
           .agg(count(lit(1)).as("dc_f")).collect())
-        val nfAgg = enriched
+        val nfAgg = enrichedS
           .select(col("cls"), explode(col("f_map")).as(Seq("fold", "c")))
           .groupBy("fold", "cls").agg(sum("c").as("n"))
           .select(lit("nf").as("kind"), col("fold"), col("cls"), col("n"))
-        val naAgg = enriched
+        val naAgg = enrichedS
           .groupBy("cls").agg(sum("c_all").as("n"))
           .select(lit("na").as("kind"), lit(null).cast("long").as("fold"),
             col("cls"), col("n"))
-        val exAgg = enriched
+        val exAgg = enrichedS
           .select(col("tok"), map_keys(col("f_map")).as("fs"),
             col("has_null_fold"))
           .groupBy("tok")

@@ -85,6 +85,12 @@ object Linkage {
     * sf0.01 missed half the sf0.1 matches). */
   private val MaxDfRatio = 0.1
 
+  /** The smallest df a gram shared by two records of a self-linkage can
+    * have. A ratio cap below it (⌈0.1·|right|⌉ = 1 for a right side of
+    * at most 10 records) would drop every such pair, so the probe never
+    * engages one: small right sides run the exact uncapped branch. */
+  private val MinCap = 2
+
   /** All (left_id, right_id, dist) pairs with levenshtein ≤ maxDist,
     * via q-gram inverted-index blocking + exact verify. Both inputs are
     * (id, name) projections; ids must be disjoint across sides only if
@@ -96,7 +102,8 @@ object Linkage {
     * as [[Dedup.jaccardPairsAdaptive]] ([[Dedup.capPays]]): one probe
     * job computes the EXACT candidate volumes with and without the cap,
     * and the cap machinery (df filter join + the capped-index cache) is
-    * paid only when it deletes at least 3/4 of the volume. The round-6
+    * paid only when it deletes at least 3/4 of the volume and is at
+    * least [[MinCap]]. The round-6
     * measurement that forced this criterion: an absolute small-volume
     * threshold is wrong in BOTH directions — on the tiny-vocab documents
     * fixture the cap wins at every scale (sf0.01: capped 0.9 s vs
@@ -129,7 +136,8 @@ object Linkage {
     val li = cached(sideIndex(left, "left", idCol, nameCol, q))
     val ri0 = cached(sideIndex(right, "right", idCol, nameCol, q))
     val (vol, volCapped, cap) = qgramVolumes(li, ri0, right)
-    val engaged = cap.filter(_ => engage.getOrElse(Dedup.capPays(vol, volCapped)))
+    val engaged = cap.filter(c =>
+      engage.getOrElse(c >= MinCap && Dedup.capPays(vol, volCapped)))
     // engaged: the capped index is a THIRD window entry (raw right +
     // capped right) — the raw cache feeds the cap's own df aggregation
     // and filter join, which the probe already materialized it for

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ConfScope
 
 /** Exact distributed quantiles at ranks ⌈q·n⌉ — the corpus-audit
   * primitive behind "filter docs below the p10 quality length" style
@@ -93,21 +94,18 @@ object Quantiles {
     * group) and the percentile_approx sketch job run OUTSIDE it at the
     * session's normal width, where high group cardinality spreads those
     * buffers over the full reduce fan-out (and AQE can split a skewed
-    * one). Session-conf save/restore: the protocol is synchronous on
-    * the calling thread; concurrent queries sharing the session during
-    * a bounded-round window would plan with these confs for that window
-    * (correctness unaffected — only those queries' reduce width). The
-    * save/restore itself rides [[ConfWindows]] — the JVM-shared
-    * refcounted bookkeeper Classifier's CV window uses too — so
-    * overlapping windows (two protocol calls, or a protocol call
-    * overlapping a CV) can't interleave restores and strand the
-    * session without AQE. */
-  private def withProtocolConf[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
+    * one). The overrides hold only for the plans `body` builds from the
+    * session it is given ([[ConfScope]]: a cloned session), so queries
+    * that other threads plan on `spark` meanwhile keep AQE and their
+    * width. A call nested in a scope with the same overrides (Ranks'
+    * tier selection) runs on that scope's session without a new clone. */
+  private[ops] def withProtocolConf[T](spark: org.apache.spark.sql.SparkSession)(
+      body: org.apache.spark.sql.SparkSession => T): T = {
     val shufKey = "spark.sql.shuffle.partitions"
     val smallShuf = math.min(8, spark.conf.get(shufKey, "200").toInt).toString
-    ConfWindows.withOverrides(spark, Seq(
+    ConfScope.run(spark, Seq(
       "spark.sql.adaptive.enabled" -> "false",
-      shufKey -> smallShuf))(f)
+      shufKey -> smallShuf))(body)
   }
 
   /** A Seq[Row] as a genuine LocalRelation DataFrame. The obvious
@@ -261,6 +259,10 @@ object Quantiles {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val v = col(valueCol).cast("long")
     val g = col(groupCol)
+    // the (group, value) scan every protocol-scope action starts from,
+    // bound to the scope's session
+    def valuesIn(s: org.apache.spark.sql.SparkSession): DataFrame =
+      ConfScope.rebind(s, df).select(g.as("__gv"), v.as("__v"))
 
     // ── fused bounds + small-group resolution: ONE job ───────────────
     // [[graft.functions.CappedSortedLongs]] rides the bounds aggregation:
@@ -382,7 +384,7 @@ object Quantiles {
       }
       // bracket verify + gather: reduce input ≤ 2 counters per (group,
       // rank) / ≤ 2²⁰ gathered longs — the bounded-round regime
-      withProtocolConf(spark) {
+      withProtocolConf(spark) { s =>
       val brackets: Map[(Any, String), (Long, Long)] = state.collect {
         case (key @ (gv, name), (lo, hi, _)) if lo < hi && sk.contains(gv) =>
           val ps = sk(gv)
@@ -406,8 +408,8 @@ object Quantiles {
         // gather cap. Budget split across keys so total ≤ GatherCapTotal.
         val fusedCap = math.max(1L, math.min(GatherCapPerKey,
           GatherCapTotal / brackets.size)).toInt
-        val cntsQ = df.select(g.as("__gv"), v.as("__v"))
-          .join(broadcast(localRows(spark, vRows, vSchema)),
+        val cntsQ = valuesIn(s)
+          .join(broadcast(localRows(s, vRows, vSchema)),
             col("__gv") <=> col("__g") && col("__v") <= col("__bhi"))
           .groupBy("__g", "__rank")
           .agg(sum(when(col("__v") < col("__blo"), 1L).otherwise(0L)).as("below"),
@@ -448,8 +450,10 @@ object Quantiles {
     }
 
     // zero-split + refinement rounds: every action below ships ≤
-    // groups·bins counters — the bounded-round regime
-    withProtocolConf(spark) {
+    // groups·bins counters — the bounded-round regime. A call that the
+    // bounds or verify job fully resolved opens no scope (no clone).
+    if (state.exists { case (_, (lo, hi, _)) => lo < hi })
+    withProtocolConf(spark) { s =>
     // a range spanning both signs can overflow (hi-lo) and (v-lo): split
     // the affected (group, rank) ranges at zero with ONE shared count job.
     // Range-aware (counts negatives WITHIN each state's [lo, 0) — a seeded
@@ -460,9 +464,9 @@ object Quantiles {
         StructField("__rank", StringType), StructField("__nlo", LongType)))
       val nRows = straddling.map { case ((gv, name), (lo, _, _)) =>
         Row(gv, name, lo) }.toSeq
-      val negCounts = df.select(g.as("__gv"), v.as("__v"))
+      val negCounts = valuesIn(s)
         .filter(col("__v") < 0)
-        .join(broadcast(localRows(spark, nRows, nSchema)),
+        .join(broadcast(localRows(s, nRows, nSchema)),
           col("__gv") <=> col("__g") && col("__v") >= col("__nlo"))
         .groupBy("__g", "__rank").agg(count(lit(1)).as("c"))
         .collect().map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -514,8 +518,8 @@ object Quantiles {
           val (blo, bhi, _) = state(key)
           Row(key._1, key._2, blo, bhi)
         }
-        val vals = df.select(g.as("__gv"), v.as("__v"))
-          .join(broadcast(localRows(spark, gRows, gatherSchema)),
+        val vals = valuesIn(s)
+          .join(broadcast(localRows(s, gRows, gatherSchema)),
             col("__gv") <=> col("__g") &&
               col("__v") >= col("__blo") && col("__v") <= col("__bhi"))
           .groupBy("__g", "__rank")
@@ -534,11 +538,11 @@ object Quantiles {
       val rangeRows = active.map { case ((gv, name), (lo, hi, _)) =>
         Row(gv, name, lo, hi, math.max(1L, (hi - lo) / effBins + 1L))
       }.toSeq
-      val ranges = localRows(spark, rangeRows, rangeSchema)
+      val ranges = localRows(s, rangeRows, rangeSchema)
       // null-safe group equi-join keeps the NULL-key group refining too;
       // a row lands in every rank's still-active range it intersects
       // (ranks of one group overlap early and diverge as they converge)
-      val hists = df.select(g.as("__gv"), v.as("__v"))
+      val hists = valuesIn(s)
         .join(broadcast(ranges), col("__gv") <=> col("__g") &&
           col("__v") >= col("__lo") && col("__v") <= col("__hi"))
         .groupBy(col("__g"), col("__rank"), expr("(__v - __lo) div __width").as("b"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ConfScope
 
 /** Distributed global ranking — the scalable form of
   * `percent_rank() OVER (ORDER BY v)` (no partition clause), which Spark
@@ -368,17 +369,13 @@ object Ranks {
     // The selection runs ungrouped (one group) so every reduce input is
     // bounded by construction: AQE's only contribution would be 2-3
     // stage-materialization jobs per action to coalesce already-tiny
-    // exchanges — pin it off (plus a narrow reduce width) for the
-    // selection window, AFTER the materializing count above.
-    val shufKey = "spark.sql.shuffle.partitions"
-    val spark0 = df.sparkSession
-    val smallShuf = math.min(8, spark0.conf.get(shufKey, "200").toInt).toString
+    // exchanges — plan it in the protocol's own AQE-off, narrow-width
+    // scope, AFTER the materializing count above. The protocol's inner
+    // scopes then find their overrides in place and open no clone.
     val selected: Map[Long, Long] =
       if (defined.isEmpty) Map.empty
-      else ConfWindows.withOverrides(spark0, Seq(
-        "spark.sql.adaptive.enabled" -> "false",
-        shufKey -> smallShuf)) {
-        val sel = df.select(selCol.as("__sel"))
+      else Quantiles.withProtocolConf(df.sparkSession) { s =>
+        val sel = ConfScope.rebind(s, df).select(selCol.as("__sel"))
         val qsFrac = defined.map(k => (k - 0.5) / nn)
         // Re-key the agg-ridden per-threshold sketch pairs onto the
         // defined ranks — and only hand a pair over when its probe

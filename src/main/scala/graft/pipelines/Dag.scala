@@ -21,10 +21,12 @@ import graft.ops.Quality
   * the staged output, legacy as a byte copy of the staged part files),
   * and published by renames in the reference's group order
   * ([[runStagedGroups]]); after any failure `raw/` and `legacy/` hold
-  * exactly what the sequential chain would have left. The concurrent
-  * loads share the session-wide conf windows the customer mart's builder
-  * opens ([[graft.ops.ConfWindows]]), so a gate may plan with AQE off and
-  * the DAG's job and task counts vary slightly from run to run.
+  * exactly what the sequential chain would have left. The AQE-off
+  * overrides that the customer mart's builder plans its tier selection
+  * with live on a cloned session
+  * ([[org.apache.spark.sql.graftbridge.ConfScope]]), so the concurrent
+  * loads' gates always plan with the session's own conf and the DAG's
+  * job and task counts repeat from run to run.
   *
   * Scheduling and alerting stay with whatever runs the driver (cron,
   * Airflow's SparkSubmitOperator, …), but the RETRY/FAILURE contract the

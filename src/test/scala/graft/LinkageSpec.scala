@@ -53,6 +53,26 @@ class LinkageSpec extends SparkSpec {
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 101L)))
   }
 
+  test("a two-record self-linkage pairs its near-duplicates (no cap below df 2)") {
+    // ⌈0.1·2⌉ = 1 would keep only grams no two records share
+    val names = Seq((1L, "Acme Industrial Supply Co"),
+      (2L, "Acme Industrial Suply Co")).toDF("id", "name")
+    val got = Linkage.qgramPairs(names, names, "id", "name", maxDist = 2)
+      .filter($"left_id" < $"right_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(got == Seq((1L, 2L, 1)))
+  }
+
+  test("a small self-linkage's own decision equals the uncapped branch") {
+    val names = Seq((1L, "Northwind Trading Company"),
+      (2L, "Northwind Tradng Company"),
+      (3L, "Nortwind Trading Compny")).toDF("id", "name")
+    val own = keyed(Linkage.qgramPairs(names, names, "id", "name", maxDist = 2))
+    val (off, _) = Linkage.qgramPairsWith(names, names, "id", "name", 2, 3, Some(false))
+    assert(own == keyed(off))
+    assert(own.keySet.filter { case (l, r) => l < r } == Set((1L, 2L), (1L, 3L)))
+  }
+
   test("df-cap drops only common-gram candidates; rare-gram matches survive") {
     // 26 decoys share the gram space of a common prefix (df 26, over the
     // ratio cap of ⌈0.1·27⌉ = 3); 10 probes are one-edit copies of decoys
