@@ -35,7 +35,9 @@ object Raptor {
     case FrameSide(df) => df
   }
 
-  /** Full comparison run: diff + `work.*_{runstamp}` persistence + HTML. */
+  /** Full comparison run: diff + `work.*_{runstamp}` persistence + HTML.
+    * The four delta tables and the report read one persisted comparison
+    * core ([[Reconcile.diff]]), so the sides are joined once per run. */
   def submit(spark: SparkSession, source: Side, target: Side,
              keys: Seq[String], name: String, runstamp: String,
              baseDir: String, sampleRows: Int = 15): RaptorResult = {

@@ -45,9 +45,11 @@ object TextAnalysis {
   val StopEs = Seq("el", "la", "de", "que", "y", "en", "un", "es", "no", "por")
   val StopFr = Seq("le", "la", "de", "et", "un", "que", "pour", "dans", "ce", "est")
 
-  /** Non-empty whitespace tokens. */
+  /** Non-empty whitespace tokens. `array_remove`, not a `filter` lambda:
+    * it is code-generated, and unlike a lambda it lets common
+    * subexpression elimination split [[langScores]]' text once per row. */
   def tokens(text: Column): Column =
-    filter(split(text, " "), t => t =!= "")
+    array_remove(split(text, " "), "")
 
   /** Fraction of tokens that are members of `stop` (0.0 on empty docs). */
   def stopRatio(toks: Column, stop: Seq[String]): Column =

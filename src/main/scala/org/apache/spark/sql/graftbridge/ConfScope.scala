@@ -18,7 +18,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession, classic}
   *
   * When every override already holds in `spark`'s conf (a scope nested in
   * one that set the same values), the body runs on `spark` itself. Each
-  * other entry clones afresh, so it always sees the parent's current conf. */
+  * other entry clones afresh, so it always sees the parent's current conf.
+  *
+  * A clone costs more than `cloneSession()` itself: it builds its session
+  * state on first use (about 40-50 ms on local[4]), and it has its own
+  * session classloader. Spark caches generated classes by (classloader,
+  * code), so a clone's plans compile afresh at any cache size (about 16
+  * compiles per clone per benchmark pass, also with 4000 entries). A
+  * clone kept across entries did not shorten the nightly DAG or a
+  * benchmark pass, so none is kept. */
 object ConfScope {
   def run[T](spark: SparkSession, overrides: Seq[(String, String)])(
       body: SparkSession => T): T =

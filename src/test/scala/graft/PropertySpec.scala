@@ -60,6 +60,30 @@ class PropertySpec extends SparkSpec {
     })
   }
 
+  test("property: the shared core's artifacts equal the per-artifact forms") {
+    // a generated pair: target drops, edits (either value column) and adds rows
+    val gen = for {
+      rows <- rowsGen
+      fate <- Gen.listOfN(rows.length, Gen.oneOf("keep", "drop", "name", "amt"))
+      extra <- Gen.choose(0, 3)
+    } yield (rows, fate, extra)
+    check("core-derivations", Prop.forAll(gen) { case (rows, fate, extra) =>
+      val target = rows.zip(fate).collect {
+        case (r, "keep") => r
+        case ((id, nm, a), "name") => (id, nm + "~", a)
+        case ((id, nm, a), "amt") => (id, nm, a + 1)
+      } ++ (0 until extra).map(j => (100 + j, "x", 0.0))
+      val s = rows.toDF("id", "name", "amt")
+      val t = target.toDF("id", "name", "amt")
+      val keys = Seq("id")
+      val expected = ReconcileReference.contents(
+        ReconcileReference.perArtifact(s, t, keys))
+      ReconcileReference.contents(ReconcileReference.of(Reconcile.diff(s, t, keys))) ==
+        expected &&
+        ReconcileReference.contents(ReconcileReference.artifacts(s, t, keys)) == expected
+    })
+  }
+
   test("property: saltedJoin is the plain inner join for any salt fan-out") {
     val gen = for {
       rows <- rowsGen

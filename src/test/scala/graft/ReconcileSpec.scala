@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Reconcile
 
@@ -219,5 +220,84 @@ class ReconcileSpec extends SparkSpec {
     val diff = Reconcile.colMismatch(a, b, Seq("k1", "k2")).collect()
     assert(diff.length == 1)
     assert(diff.head.getAs[String]("mismatch_column_name") == "v")
+  }
+
+  /** The shared core's artifacts, the per-artifact entries and the
+    * pre-core reference forms all agree on `source` vs `target`. */
+  private def assertSameArtifacts(source: DataFrame, target: DataFrame,
+                                  keys: Seq[String]): Unit = {
+    val expected = ReconcileReference.contents(
+      ReconcileReference.artifacts(source, target, keys))
+    for (forms <- Seq(ReconcileReference.perArtifact(source, target, keys),
+                      ReconcileReference.of(Reconcile.diff(source, target, keys))))
+      ReconcileReference.contents(forms).zip(expected).foreach { case (got, want) =>
+        assert(got == want)
+      }
+  }
+
+  test("the shared core's artifacts equal the per-artifact and pre-core " +
+       "forms: fixture pair, composite keys, empty sides, all extra") {
+    assertSameArtifacts(src, tgt, Seq("id"))
+    val a = Seq((1, "x", "p", 1.0), (1, "y", "q", 2.0), (2, "x", "r", 3.0))
+      .toDF("k1", "k2", "v", "w")
+    val b = Seq((1, "x", "p", 1.5), (1, "y", "Z", 2.0), (3, "x", "r", 3.0))
+      .toDF("k1", "k2", "v", "w")
+    assertSameArtifacts(a, b, Seq("k1", "k2"))
+    assertSameArtifacts(src, tgt.where(lit(false)), Seq("id"))
+    assertSameArtifacts(src.where(lit(false)), tgt, Seq("id"))
+    assertSameArtifacts(src, tgt.withColumn("id", col("id") + 100), Seq("id"))
+  }
+
+  test("the shared core's artifacts equal the pre-core forms on nulls and " +
+       "on values that contain the record separator") {
+    val nulls = Seq((1, Option("x"), Option(1.0)), (2, None, Option(2.0)),
+      (3, Option("z"), None), (4, None, None))
+      .toDF("id", "v", "amt")
+    val other = Seq((1, Option(""), Option(1.0)), (2, None, None),
+      (3, Option("z"), Option(3.0)), (4, Option("w"), None))
+      .toDF("id", "v", "amt")
+    assertSameArtifacts(nulls, other, Seq("id"))
+    // id 1: the split records differ at an in-range position, which the
+    // reference's positional column diff names by position; id 2: equal
+    // records from unequal columns, compared but with no differing cell
+    val sep = Reconcile.Sep
+    val a = Seq((1, s"a${sep}b", "x"), (2, s"p$sep", "q"), (3, "s", "t"))
+      .toDF("id", "v", "w")
+    val b = Seq((1, s"a${sep}c", "x"), (2, "p", s"${sep}q"), (3, "s", "t"))
+      .toDF("id", "v", "w")
+    assertSameArtifacts(a, b, Seq("id"))
+    // a differing position past the last column fails in both forms
+    val over = Seq((1, "x", s"y${sep}p")).toDF("id", "v", "w")
+    val under = Seq((1, "x", s"y${sep}q")).toDF("id", "v", "w")
+    for (f <- Seq[(DataFrame, DataFrame, Seq[String]) => DataFrame](
+           ReconcileReference.colMismatch, Reconcile.colMismatch,
+           ReconcileReference.colSummary, Reconcile.colSummary))
+      intercept[Exception](f(over, under, Seq("id")).collect())
+  }
+
+  test("the six reconcile cells of one session share one persisted core") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.pipelines.{ReconcileQueries => Q, ResultSort}
+    graft.ops.CacheWindows.releaseAll()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cells = Seq[(SparkSession, String) => DataFrame](Q.colSummary,
+      Q.rowDiff, Q.colMismatch, Q.srcExtra, Q.tgtExtra, Q.summary)
+    cells.head(spark, sf).collect()
+    assert(ResultSort.window.registered(spark).size == 1)
+    val helper = new AdaptiveSparkPlanHelper {}
+    cells.tail.foreach { cell =>
+      val df = cell(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(helper.collect(plan) { case s: InMemoryTableScanExec => s }.nonEmpty, plan)
+      assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
+    }
+    assert(ResultSort.window.registered(spark).size == 1)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    ResultSort.releaseCaches()
+    assert(sc.getPersistentRDDs.keySet -- before == Set.empty)
   }
 }

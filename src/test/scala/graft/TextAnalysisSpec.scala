@@ -37,6 +37,22 @@ class TextAnalysisSpec extends SparkSpec {
     assert(diff == 0, "rolling update must equal the windowed fold exactly")
   }
 
+  test("tokens equals the filter-lambda form on edge-case text") {
+    val texts = Seq(Option(" lead"), Option("trail "), Option("a  b   c"),
+      Option("   "), Option(""), None, Option("naïve  café 東京 ü"),
+      Option("one"))
+    val df = texts.toDF("text")
+    val rows = df.select(
+      TextAnalysis.tokens($"text").as("native"),
+      filter(split($"text", " "), t => t =!= "").as("lambda")).collect()
+    assert(rows.length == texts.length)
+    rows.foreach { r =>
+      assert(r.isNullAt(0) == r.isNullAt(1), r)
+      if (!r.isNullAt(0)) assert(r.getSeq[String](0) == r.getSeq[String](1), r)
+    }
+    assert(rows.count(_.isNullAt(0)) == 1, "null text stays null")
+  }
+
   test("langId picks the stopword-richest language, en-first ties") {
     val df = Seq(
       "the cat and the dog is in the house",
