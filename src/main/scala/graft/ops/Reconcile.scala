@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -137,26 +137,27 @@ object Reconcile {
     /** Column-level mismatch percentage summary — the reference's
       * `_raptor_column_summary` (`Raptor.py:441-474`): per-column mismatch
       * count and its percentage of compared rows, ordered worst-first.
-      * One aggregation over the compared rows carries both counts: a
-      * differing row explodes to its split positions and a matching one
-      * to a single equal position, so position 0 counts each compared row
-      * once. A one-row aggregation over the per-column groups then sums
-      * those, instead of the reference's eager `.count()`. */
+      * ONE global aggregation over the compared rows (differing ones carry
+      * their split records): the row count, a count per source-column
+      * position, and one of the differing positions past the last column
+      * (a value holding the separator). Nonzero groups explode to rows,
+      * named by position: the last group's name is null, or fails under
+      * ANSI, as in [[colMismatch]]. */
     lazy val colSummary: DataFrame = {
-      val pos = col("pos")
-      val differs = coalesce(col("col._2") =!= col("col._3"), lit(false))
-      val same = array(lit(""))
+      val (s, t, n) = (col("_2"), col("_3"), sCols.size)
+      def group(pos: Int, cnt: Column) =
+        struct(lit(pos).as("pos"), cnt.as("Mismatch_Record_Count_Column_Level"))
+      val groups = (0 until n).map(i =>
+        group(i, count(when(element_at(s, i + 1) =!= element_at(t, i + 1), 1)))) :+
+        group(n, coalesce(sum(when(s.isNotNull, size(filter(arrays_zip(s, t),
+          (z, p) => p >= n && coalesce(z("_2") =!= z("_3"), lit(false)))))), lit(0L)))
       compared.where(inS && inT)
-        .select(when(anyNeq, split(srcRecord, Sep)).otherwise(same).as("_2"),
-          when(anyNeq, split(tgtRecord, Sep)).otherwise(same).as("_3"))
-        .select(posexplode(arrays_zip(col("_2"), col("_3"))))
-        .groupBy(differs.as("differs"),
-          when(differs, columnName(pos)).otherwise("").as("mismatch_column_name"))
-        .agg(count(lit(1)).as("Mismatch_Record_Count_Column_Level"),
-          count(when(pos === 0, 1)).as("rows"))
-        .agg(sum("rows").as("compared_cnt"), collect_list(when(col("differs"),
-          struct("mismatch_column_name", "Mismatch_Record_Count_Column_Level"))).as("m"))
+        .select(when(anyNeq, split(srcRecord, Sep)).as("_2"),
+          when(anyNeq, split(tgtRecord, Sep)).as("_3"))
+        .agg(count(lit(1)).as("compared_cnt"), array(groups: _*).as("m"))
         .select(col("compared_cnt"), inline(col("m")))
+        .where(col("Mismatch_Record_Count_Column_Level") > 0)
+        .withColumn("mismatch_column_name", columnName(col("pos")))
         .withColumn("Percentage_Of_Mismatch",
           concat((col("Mismatch_Record_Count_Column_Level") * lit(100.0) /
             col("compared_cnt")).cast("decimal(10,2)").cast("string"), lit("%")))
@@ -169,7 +170,7 @@ object Reconcile {
     }
 
     /** The source column at a 0-based position of the split record. */
-    private def columnName(pos: org.apache.spark.sql.Column) =
+    private def columnName(pos: Column) =
       element_at(array(sCols.map(lit): _*), pos.cast("int") + 1)
   }
 

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Data Selection with Importance Resampling (DSIR — Xie et al. 2023,
@@ -28,20 +29,19 @@ import org.apache.spark.sql.functions._
   * (pure BIGINT arithmetic; the DuckDB oracle replays it digit for
   * digit).
   *
-  * Scale posture (100 TB): ONE token-explode scan feeds a compact
-  * (id, bucket, count) frame — one shuffle keyed by (id, int), persisted
-  * — from which both the feature table (≤ `buckets` rows, BROADCAST
-  * back) and the per-doc weights derive; totals ride a 1-row broadcast.
-  * No driver-side state; the feature table is bounded by construction
+  * Scale posture (100 TB): every builder is one lazy plan, with no
+  * persist and no eager job. ONE token-explode per action feeds a compact
+  * (id, bucket, count) frame; a window partitioned by bucket attaches
+  * r_f/t_f, then one per-doc aggregation. R and T come from a broadcast
+  * 1-row aggregate of the docs scan ([[gramCount]]), not the explode. No
+  * driver-side state; the feature table is bounded by construction
   * (`buckets`, default 2¹⁰), which is the whole point of hashed DSIR —
   * the raw vocabulary never materializes anywhere.
   */
 object Selection {
 
-  private val featCacheWindow = new CacheWindows(2)
-
-  /** Release Selection's persisted feature frames (test hygiene). */
-  def releaseCaches(): Unit = featCacheWindow.releaseAll()
+  /** No-op: no DSIR builder persists anything (kept for release lists). */
+  def releaseCaches(): Unit = ()
 
   private val bits = (c: Column) => (length(bin(c)) - 1).cast("long")
 
@@ -74,58 +74,62 @@ object Selection {
       (conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % buckets).as("f"): _*)
   }
 
-  /** The compact per-document feature-count frame (idCol, __tgt, f, c)
-    * — ONE gram explode + one (id, f)-keyed aggregation, persisted +
-    * eagerly materialized (the bm25/tfidf convoy contract: the feature
-    * table and the per-doc weight both consume it). Everything else in
-    * the module derives from this frame, so the expensive explode +
-    * md5 pass over raw text runs exactly once per corpus (measured at
-    * sf0.1: the original two-explode shape benched 5.1 s; this one
-    * 1.6 s). Rows are bounded by Σ distinct (doc, bucket) pairs — the
-    * narrow integer frame you would persist to parquet as the corpus
-    * DSIR index at 100 TB (MEMORY_AND_DISK here; [[dsirFeatureTable]] +
-    * [[dsirGate]] are the explicit persisted form). */
-  private def docFeatureCounts(docs: DataFrame, idCol: String, textCol: String,
-                               isTarget: Column, buckets: Int): DataFrame = {
-    val flagged = docs.select(col(idCol), col(textCol),
-      isTarget.cast("boolean").as("__tgt"))
-    val docf = featCacheWindow.add(
-      gramFeatures(flagged, idCol, textCol, buckets, carry = Seq("__tgt"))
-        .groupBy(col(idCol), col("__tgt"), col("f"))
-        .agg(count(lit(1)).as("c")))
-    docf.count()
-    docf
+  /** The rows [[gramFeatures]] explodes a text into: |tk| unigrams plus
+    * max(|tk| − 1, 0) bigrams, so 0 for no tokens or a null text (whatever
+    * `size(null)` returns under the session's ANSI setting). */
+  private[graft] def gramCount(text: Column): Column =
+    greatest(size(TextAnalysis.tokens(text)) * 2 - 1, lit(0))
+
+  /** The folded normalizer `bits(R+B) − bits(T+B)`. */
+  private def normBits(r: Column, t: Column, b: Column): Column =
+    bits(r + b) - bits(t + b)
+
+  /** [[normBits]] of a raw corpus as a 1-row frame: R and T are the gram
+    * counts of all and of the target docs, read from the docs scan. */
+  private def corpusNorm(docs: DataFrame, textCol: String, isTarget: Column,
+                         buckets: Int): DataFrame = {
+    val g = gramCount(col(textCol))
+    docs.agg(normBits(sum(g), sum(when(isTarget.cast("boolean"), g).otherwise(0)),
+      lit(buckets)).as("norm_bits"))
   }
 
-  /** Bucket counts under both distributions (≤ `buckets` rows) from the
-    * cached compact frame — a second-stage aggregation over (f), never
-    * a rescan of the text. */
-  private def featureCounts(docf: DataFrame): DataFrame =
-    docf.groupBy("f").agg(
-      sum(col("c")).as("r_f"),
-      sum(when(col("__tgt"), col("c")).otherwise(0L)).as("t_f"))
+  /** The gram stream flagged by target membership: (idCol, is_target, f). */
+  private def flaggedGrams(docs: DataFrame, idCol: String, textCol: String,
+                           isTarget: Column, buckets: Int): DataFrame = {
+    require(buckets > 0 && buckets <= (1 << 24),
+      s"buckets=$buckets out of (0, 2^24]: the feature table must stay broadcastable")
+    gramFeatures(docs.select(col(idCol), col(textCol),
+        isTarget.cast("boolean").as("is_target")),
+        idCol, textCol, buckets, carry = Seq("is_target"))
+  }
 
-  /** The weights tail shared by [[dsirWeights]] (in-session docf) and
-    * [[dsirWeightsFromIndex]] (parquet-reloaded docf): feature table +
-    * folded normalizer from the compact frame, per-doc bit sums, zero-gram
+  /** The compact per-document feature counts (idCol, is_target, f, c): one
+    * gram explode + one (id, f)-keyed aggregation. Rows are bounded by
+    * Σ distinct (doc, bucket) pairs. */
+  private def docFeatures(docs: DataFrame, idCol: String, textCol: String,
+                          isTarget: Column, buckets: Int): DataFrame =
+    flaggedGrams(docs, idCol, textCol, isTarget, buckets)
+      .groupBy(col(idCol), col("is_target"), col("f"))
+      .agg(count(lit(1)).as("c"))
+
+  /** The weights tail of the text and the index path: r_f/t_f by a window
+    * partitioned by bucket (a null `is_target` counts as raw only), one
+    * per-doc aggregation, the broadcast 1-row `norm`, and the zero-gram
     * left-join repair against `docIds`. */
-  private def weightsFromDocf(docf: DataFrame, docIds: DataFrame,
-                              idCol: String, buckets: Int): DataFrame = {
-    val feat = featureCounts(docf)
-    // 1 row: smoothed totals, pre-folded into the per-gram constant
-    val tot = feat.agg(
-      (bits(sum(col("r_f")) + buckets) - bits(sum(col("t_f")) + buckets))
-        .as("norm_bits"))
-
+  private def weights(docf: DataFrame, norm: DataFrame, docIds: DataFrame,
+                      idCol: String): DataFrame = {
+    val bucket = Window.partitionBy("f")
     val perDoc = docf
-      .join(broadcast(feat), "f")
+      .select(col(idCol), col("c"),
+        sum(col("c")).over(bucket).as("r_f"),
+        sum(when(col("is_target"), col("c")).otherwise(0L)).over(bucket).as("t_f"))
       .groupBy(idCol).agg(
         sum(col("c")).as("n_grams"),
         sum(col("c") * (bits(col("t_f") + 1) - bits(col("r_f") + 1))).as("num_bits"))
 
     docIds.select(col(idCol))
       .join(perDoc, Seq(idCol), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(broadcast(norm))
       .select(col(idCol),
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("num_bits") + col("n_grams") * col("norm_bits"), lit(0L))
@@ -141,18 +145,15 @@ object Selection {
     *
     * Output: idCol, n_grams (BIGINT), dsir_bits (BIGINT). */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
-                  isTarget: Column, buckets: Int = 1024): DataFrame = {
-    require(buckets > 0 && buckets <= (1 << 24),
-      s"buckets=$buckets out of (0, 2^24]: the feature table must stay broadcastable")
-    val docf = docFeatureCounts(docs, idCol, textCol, isTarget, buckets)
-    weightsFromDocf(docf, docs, idCol, buckets)
-  }
+                  isTarget: Column, buckets: Int = 1024): DataFrame =
+    weights(docFeatures(docs, idCol, textCol, isTarget, buckets),
+      corpusNorm(docs, textCol, isTarget, buckets), docs, idCol)
 
   /** The persistable DSIR corpus index: the compact per-document feature
-    * frame (idCol, is_target, f, c) the scaladoc above calls "the narrow
-    * integer frame you would persist to parquet at 100 TB", made
-    * self-describing with an `n_buckets` column (the [[dsirFeatureTable]]
-    * convention — a reloaded index needs no side-channel config).
+    * frame (idCol, is_target, f, c) that [[dsirWeights]] builds in-plan,
+    * made self-describing with an `n_buckets` column (the
+    * [[dsirFeatureTable]] convention — a reloaded index needs no
+    * side-channel config).
     *
     * This is the build-once artifact of the DSIR lifecycle: the expensive
     * token-explode + md5 pass over raw text runs at BUILD time; every
@@ -160,34 +161,29 @@ object Selection {
     * over these integers without touching text again — the same
     * amortization contract as [[Similarity.PqIndex]]. */
   def dsirIndexFrame(docs: DataFrame, idCol: String, textCol: String,
-                     isTarget: Column, buckets: Int = 1024): DataFrame = {
-    require(buckets > 0 && buckets <= (1 << 24),
-      s"buckets=$buckets out of (0, 2^24]: the feature table must stay broadcastable")
-    gramFeatures(docs.select(col(idCol), col(textCol),
-        isTarget.cast("boolean").as("is_target")),
-        idCol, textCol, buckets, carry = Seq("is_target"))
-      .groupBy(col(idCol), col("is_target"), col("f"))
-      .agg(count(lit(1)).as("c"))
-      .select(col(idCol), col("is_target"), col("f"), col("c"),
-        lit(buckets.toLong).as("n_buckets"))
-  }
+                     isTarget: Column, buckets: Int = 1024): DataFrame =
+    docFeatures(docs, idCol, textCol, isTarget, buckets)
+      .withColumn("n_buckets", lit(buckets.toLong))
 
   /** [[dsirWeights]] against a PRECOMPUTED index (the output of
     * [[dsirIndexFrame]], typically read back from parquet): identical
-    * output, zero text scans — two passes over the narrow integer index
-    * (feature-table rollup, per-doc bit sums) plus one column-pruned id
-    * scan of `docIds` for the zero-gram repair. The bucket arity is read
-    * from the self-describing index with one 1-row first() job (the
-    * [[dsirGate]] convention). */
+    * output, zero text scans — the window and per-doc aggregation over
+    * the narrow integer index, one 1-row aggregate of it for the totals
+    * and the bucket arity, plus one column-pruned id scan of `docIds` for
+    * the zero-gram repair. The arity is read inside the plan: an empty
+    * index, or one with a NULL `n_buckets`, fails the action that runs
+    * it with a message naming the cause. */
   def dsirWeightsFromIndex(index: DataFrame, docIds: DataFrame,
                            idCol: String): DataFrame = {
-    val nbRow = index.select(first(col("n_buckets")).as("nb")).collect()(0)
-    require(!nbRow.isNullAt(0),
-      "dsirWeightsFromIndex: index is empty or has NULL n_buckets — " +
-        "rebuild it with dsirIndexFrame or check the reload path")
-    val buckets = nbRow.getLong(0).toInt
-    weightsFromDocf(index.withColumnRenamed("is_target", "__tgt"),
-      docIds, idCol, buckets)
+    val nb = first(col("n_buckets"))
+    val norm = index.agg(
+      when(nb.isNull, raise_error(lit(
+        "dsirWeightsFromIndex: index is empty or has NULL n_buckets — " +
+          "rebuild it with dsirIndexFrame or check the reload path")))
+        .otherwise(normBits(sum(col("c")),
+          sum(when(col("is_target"), col("c")).otherwise(0L)), nb))
+        .as("norm_bits"))
+    weights(index, norm, docIds, idCol)
   }
 
   /** Keep the `n` most target-like documents: rank by
@@ -218,17 +214,17 @@ object Selection {
   /** Persistable DSIR feature table for [[dsirGate]]: bucket counts plus
     * the folded normalizer and the bucket arity (each row carries all —
     * the table is ≤ `buckets` rows and self-describing, so the gate
-    * needs no side-channel config). */
+    * needs no side-channel config). One aggregation by bucket (sums, so
+    * t_f/r_f stay nullable BIGINTs) plus the docs-scan 1-row normalizer. */
   def dsirFeatureTable(docs: DataFrame, idCol: String, textCol: String,
-                       isTarget: Column, buckets: Int = 1024): DataFrame = {
-    val feat = featureCounts(
-      docFeatureCounts(docs, idCol, textCol, isTarget, buckets))
-    val tot = feat.agg(
-      (bits(sum(col("r_f")) + buckets) - bits(sum(col("t_f")) + buckets))
-        .as("norm_bits"))
-    feat.crossJoin(broadcast(tot)).select(col("f"), col("t_f"), col("r_f"),
-      col("norm_bits"), lit(buckets.toLong).as("n_buckets"))
-  }
+                       isTarget: Column, buckets: Int = 1024): DataFrame =
+    flaggedGrams(docs, idCol, textCol, isTarget, buckets)
+      .groupBy("f").agg(
+        sum(when(col("is_target"), 1L).otherwise(0L)).as("t_f"),
+        sum(lit(1L)).as("r_f"))
+      .crossJoin(broadcast(corpusNorm(docs, textCol, isTarget, buckets)))
+      .select(col("f"), col("t_f"), col("r_f"), col("norm_bits"),
+        lit(buckets.toLong).as("n_buckets"))
 
   /** Threshold gate against a PRECOMPUTED feature table (the output of
     * [[dsirFeatureTable]], typically read back from parquet): keep

@@ -83,7 +83,8 @@ object CurationQueries {
 
     // ── DSIR importance selection ────────────────────────────────────
     // per-doc hashed-bigram importance weight against the lang='en'
-    // target — pure BIGINT bits arithmetic end to end
+    // target — pure BIGINT bits arithmetic end to end. One lazy plan:
+    // the build launches no job, and the sink explodes the text once
     "q_select_dsir" -> ((s, dir) =>
       Selection.dsirWeights(docs(s, dir), "doc_id", "text",
           col("lang") === "en", buckets = DsirBuckets)
@@ -100,8 +101,9 @@ object CurationQueries {
     // token-explode + md5 build runs ONCE into the IndexStore; this
     // query pays only the integer-index read — the steady-state cost of
     // a deployed DSIR selection, vs q_select_dsir's build-included cell.
-    // Semantically identical, proven by sharing its oracle (the
-    // q_sim_pq_indexed convention).
+    // Once the index is stored the build launches no job: the bucket
+    // arity is read inside the plan. Semantically identical, proven by
+    // sharing its oracle (the q_sim_pq_indexed convention).
     "q_select_dsir_indexed" -> ((s, dir) =>
       Selection.dsirWeightsFromIndex(dsirIndex(s, dir),
           docs(s, dir).select("doc_id"), "doc_id")

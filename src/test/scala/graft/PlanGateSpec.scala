@@ -119,13 +119,15 @@ class PlanGateSpec extends SparkSpec {
     graft.ops.Ranks.globalPercentRank(docs, "n_chars").count()
     // the query layer's window, through the supplier mart's diamond
     graft.pipelines.SupplierPerformance(spark, gateSf).count()
-    // populate the retrieval postings + selection feature windows
+    // populate the retrieval postings + reconciliation core windows
     // (ADVICE r15: these persisted frames were only gated when reachable
     // from a query's own plan)
     graft.ops.Retrieval.lexicalTopK(docs,
       docs.filter(col("doc_id") < 20), "doc_id", "text", k = 3).count()
-    graft.ops.Selection.dsirWeights(docs, "doc_id", "text",
-      col("doc_id") % 2 === 0, buckets = 64).count()
+    graft.ops.Reconcile.diff(docs.select("doc_id", "lang"),
+      docs.filter(col("doc_id") % 3 =!= 0)
+        .select(col("doc_id"), upper(col("lang")).as("lang")),
+      Seq("doc_id")).summary.count()
     var checked = 0
     for ((w, wi) <- graft.ops.CacheWindows.all.zipWithIndex;
          (df, i) <- w.registered(spark).zipWithIndex) {

@@ -275,6 +275,24 @@ class ReconcileSpec extends SparkSpec {
       intercept[Exception](f(over, under, Seq("id")).collect())
   }
 
+  test("without ANSI, differing positions past the last column form one " +
+       "null-named group that counts positions, as in the pre-core forms") {
+    val sep = Reconcile.Sep
+    val a = Seq((1, "x", s"y${sep}p${sep}r"), (2, "x", s"y${sep}p"), (3, "u", "v"))
+      .toDF("id", "v", "w")
+    val b = Seq((1, "x", s"y${sep}q${sep}s"), (2, "x", s"y${sep}q"), (3, "u", "V"))
+      .toDF("id", "v", "w")
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      assertSameArtifacts(a, b, Seq("id"))
+      val rows = Reconcile.colSummary(a, b, Seq("id")).collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1)))
+      assert(rows.toSet == Set((None, 3L), (Some("w"), 1L)))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("the six reconcile cells of one session share one persisted core") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
